@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Isolated per-op profiler for the optimization rounds (guide §1).
+"""Isolated per-op profiler.
 
 For each requested op: one warm-up + N timed runs to the noop sink
 (median reported), labelled via setJobDescription, and the
@@ -7,10 +7,17 @@ explain("formatted") dumped to plans/<tag>/<op>_<suffix>.txt so the
 plan evidence matches the recorded timing. Caches cleared between ops
 (same discipline as bench.py / the driver).
 
+Each op also gets the number of generated classes Spark compiled
+(codegen cache misses), for the warm-up (including the plan dump's
+build) and for each timed run. The session caches compiled classes,
+so a timed run that compiles anything has generated code that differs
+per call.
+
 Usage:
   python tools/profile_ops.py [--runs N] [--tag r13] [--suffix before]
                               [--no-plans] op1 op2 ...
-Prints one JSON line: {"op": sec, ...} plus loadavg bracket.
+Prints one JSON line: {"timings": {"op": sec, ...}, "compiles":
+{"op": {"warmup": n, "timed": [n, ...]}, ...}} plus loadavg bracket.
 """
 
 from __future__ import annotations
@@ -65,16 +72,20 @@ def main() -> None:
     )
     os.makedirs(plan_dir, exist_ok=True)
 
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     out: dict[str, float] = {}
+    compiles: dict[str, dict] = {}
     for op in args.ops:
         fn = queries[op]
         spark.catalog.clearCache()
+        c0 = compiled.getCount()
         if not args.no_plans:
             with open(
                 os.path.join(plan_dir, f"{op}_{args.suffix}.txt"), "w"
             ) as fh:
                 fh.write(_formatted_plan(fn(spark, sf_dir)))
         runs = []
+        run_compiles = []
         for i in range(args.runs + 1):  # first run is the warm-up
             if not args.bench_protocol:
                 spark.catalog.clearCache()
@@ -83,14 +94,22 @@ def main() -> None:
             fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             if i > 0:
                 runs.append(time.perf_counter() - t0)
+            c1 = compiled.getCount()
+            run_compiles.append(c1 - c0)
+            c0 = c1
         spark.sparkContext.setJobDescription(None)
         out[op] = round(statistics.median(runs), 3)
-        print(f"#   {op}: {out[op]}  {[round(r, 3) for r in runs]}", file=sys.stderr)
+        compiles[op] = {"warmup": run_compiles[0], "timed": run_compiles[1:]}
+        print(
+            f"#   {op}: {out[op]}  {[round(r, 3) for r in runs]}  compiles {run_compiles}",
+            file=sys.stderr,
+        )
 
     print(
         json.dumps(
             {
                 "timings": out,
+                "compiles": compiles,
                 "loadavg_start": load0,
                 "loadavg_end": round(os.getloadavg()[0], 2),
                 "sf_dir": sf_dir,

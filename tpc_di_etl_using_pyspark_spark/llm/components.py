@@ -75,7 +75,14 @@ def connected_components(
             .drop("_prev")
             .localCheckpoint(eager=True)
         )
-        changed = new_labels.filter("_chg").limit(1).count()
+        # a plain count, not limit(1).count(): a limit's generated code
+        # names its row counter from a JVM-wide sequence
+        # (_limit_counter_<n>), so every new plan holding a limit has
+        # new source and compiles again, once for the driver's class
+        # loader and once for the executor's. The filtered scan and
+        # count compile once per session. Both read every row when
+        # the labels have converged.
+        changed = new_labels.filter("_chg").count()
         labels = new_labels.select("node", "component")
         if changed == 0:
             converged = True

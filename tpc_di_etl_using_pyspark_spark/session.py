@@ -15,6 +15,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's cache of compiled generated classes
+# (spark.sql.codegen.cache.maxEntries, default 100). The cache is an
+# LRU keyed by (class loader, generated source); in local mode each
+# whole-stage class is compiled for the driver's loader and again for
+# the executor's. One cold pass compiles 146 classes on the perfbench
+# tpcdi_load workload, 107 on llm_curation and 711 on bench.py's 27
+# headline ops at sf0.01 (128, 93 and 599 without stage numbers in
+# class names, below). With 100 entries the cache evicted each class
+# before the pass needed it again, so every warm pass recompiled its
+# classes with Janino and the JIT compiled them again. Guava splits
+# the cache into 4 LRU segments of 250 that evict on their own, so it
+# needs headroom above the largest working set: at 1000, as at 2000, a
+# warm pass of the headline ops compiles nothing. A static conf: only
+# the session that starts the JVM sets it.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -25,29 +41,28 @@ def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -
     read (events.ts is ns — FIXTURES.md).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Scale-dependent settings are parameterised (optimization r13):
-    # the LOCAL defaults below keep the driver bench comparable
-    # round-over-round; a cluster deployment overrides via env.
-    # - SHUFFLE_PARTITIONS: local default 32 (≈ one reducer per core;
-    #   AQE coalescing trims small stages). Production: set to
+    # Scale-dependent settings come from the environment; the local
+    # defaults below are the ones bench.py's recorded numbers were
+    # measured with, and a cluster deployment overrides them.
+    # - SHUFFLE_PARTITIONS: local default 32 (about one reducer per
+    #   core; AQE coalescing trims small stages). Production: set to
     #   ~2-3× total executor cores, or high enough that partitions
-    #   land in the 100MB-1GB band (guide §2.2) — AQE coalesces the
-    #   excess, so erring high is safe.
+    #   land in the 100MB-1GB band — AQE coalesces the excess, so
+    #   erring high is safe.
     # - BROADCAST_THRESHOLD: local default 32 MiB (the reference dims
     #   and 1-row aggregates always broadcast). Production: keep ≤ a
     #   few hundred MB — executors hold the built relation per task
-    #   slot (guide §3.1).
+    #   slot.
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
     bcast = os.environ.get(
         "SPARK_GRAFT_BROADCAST_THRESHOLD", str(32 * 1024 * 1024)
     )
-    # - IO_CODEC: shuffle/spill/broadcast compression codec (guide
-    #   §2.3). Local default stays Spark's lz4 so the driver bench is
-    #   comparable round-over-round; the r14 idle A/B (BASELINE.md)
-    #   measured zstd a wash-to-slightly-slower at fixture scale
-    #   (shuffle payloads are KB-scale, so codec CPU dominates the
-    #   byte savings). Production: zstd usually wins once shuffle
-    #   partitions carry 100MB+ — measure per guide §2.3.
+    # - IO_CODEC: shuffle/spill/broadcast compression codec. Local
+    #   default stays Spark's lz4: on an idle host zstd measured a
+    #   wash to slightly slower at fixture scale (BASELINE.md), since
+    #   shuffle payloads are KB-scale and codec CPU outweighs the
+    #   bytes saved. Production: zstd usually wins once shuffle
+    #   partitions carry 100MB+; measure before switching.
     io_codec = os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -62,5 +77,15 @@ def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", bcast)
         .config("spark.io.compression.codec", io_codec)
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers a query's codegen stages in the order its query
+        # stages are created, which follows stage completion and so
+        # varies call to call; with the number in the class name,
+        # identical stage code under a new number is new source and
+        # compiles again. Left out, a rerun of tpcdi_batch_e2e and
+        # tpcdi_fact_holdings at sf0.01 compiles 0-4 classes instead
+        # of 0-12. explain() still shows the stage numbers; stack
+        # traces show GeneratedIterator.
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     return builder.getOrCreate()
