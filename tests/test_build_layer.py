@@ -1,0 +1,180 @@
+"""The build layer: what it costs to construct a plan, before any of it runs.
+
+Every PySpark ``F.*`` call is about three py4j round trips to the JVM,
+so helpers that generate dozens of columns write them as SQL text, one
+round trip per expression. These tests hold the round-trip budgets of
+those helpers and check that the SQL text builds the same optimized
+plan as the ``F.*`` form it replaced.
+
+Connected components runs Spark jobs while its plan is built (one
+eager checkpoint per superstep); its job budget and its ``max_iter``
+contract are checked here too.
+"""
+
+from __future__ import annotations
+
+import re
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql import functions as F
+
+from tpc_di_etl_using_pyspark_spark.llm.components import connected_components
+from tpc_di_etl_using_pyspark_spark.llm.minhash import (
+    band_keys,
+    minhash_signature,
+    shingles,
+)
+from tpc_di_etl_using_pyspark_spark.plans.registry import all_queries
+from tpc_di_etl_using_pyspark_spark.schemas import FINWIRE_CMP_LAYOUT
+from tpc_di_etl_using_pyspark_spark.sources.fixedwidth import parse_fixed_width
+
+# the F.* forms took 2,541 (signature + band keys) and 264 (CMP layout)
+MAX_MINHASH_ROUND_TRIPS = 200
+MAX_FIXED_WIDTH_ROUND_TRIPS = 40
+# 19 with a label-initialisation checkpoint and a count job per superstep
+MAX_CLUSTER_CC_JOBS = 14
+
+
+@contextmanager
+def _round_trips(spark):
+    """Count py4j round trips (gateway client commands) inside the block."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = [0]
+
+    def counted(*args, **kwargs):
+        n[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield n
+    finally:
+        client.send_command = send
+
+
+def _plan(df) -> str:
+    return re.sub(r"#\d+", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def _docs(spark):
+    # a range, not a local relation: the optimizer would fold a local
+    # relation and its projections into literal rows
+    return spark.range(6).selectExpr(
+        "id AS doc_id", "concat('w', id % 3, ' a b c d e') AS text"
+    )
+
+
+def _lines(spark):
+    return spark.range(3).selectExpr("repeat(cast(id AS string), 120) AS value")
+
+
+def _signature_f(sh, id_col, num_hashes):
+    return sh.groupBy(id_col).agg(
+        *[
+            F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"mh{s}")
+            for s in range(num_hashes)
+        ]
+    )
+
+
+def _band_keys_f(sig, id_col, num_hashes, bands):
+    rows = num_hashes // bands
+    pairs = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.xxhash64(*[F.col(f"mh{b * rows + r}") for r in range(rows)]).alias(
+                "band_key"
+            ),
+        )
+        for b in range(bands)
+    ]
+    return sig.select(F.col(id_col), F.explode(F.array(*pairs)).alias("bk")).select(
+        id_col,
+        F.col("bk.band_idx").alias("band_idx"),
+        F.col("bk.band_key").alias("band_key"),
+    )
+
+
+def _fixed_width_f(lines, layout, value_col="value"):
+    return lines.select(
+        *[
+            F.rtrim(F.substring(F.col(value_col), off + 1, length)).alias(name)
+            for name, off, length in layout
+        ]
+    )
+
+
+def test_minhash_round_trip_budget(spark):
+    sh = shingles(_docs(spark), "doc_id", "text", 3)
+    with _round_trips(spark) as n:
+        band_keys(minhash_signature(sh, "doc_id", 32), "doc_id", 32, 8)
+    assert n[0] <= MAX_MINHASH_ROUND_TRIPS, f"{n[0]} py4j round trips"
+
+
+def test_fixed_width_round_trip_budget(spark):
+    lines = _lines(spark)
+    with _round_trips(spark) as n:
+        parse_fixed_width(lines, FINWIRE_CMP_LAYOUT)
+    assert n[0] <= MAX_FIXED_WIDTH_ROUND_TRIPS, f"{n[0]} py4j round trips"
+
+
+def test_minhash_sql_text_plans_like_functions(spark):
+    sh = shingles(_docs(spark), "doc_id", "text", 3)
+    sig = minhash_signature(sh, "doc_id", 32)
+    assert _plan(sig) == _plan(_signature_f(sh, "doc_id", 32))
+    assert _plan(band_keys(sig, "doc_id", 32, 8)) == _plan(
+        _band_keys_f(sig, "doc_id", 32, 8)
+    )
+
+
+def test_fixed_width_sql_text_plans_like_functions(spark):
+    lines = _lines(spark)
+    assert _plan(parse_fixed_width(lines, FINWIRE_CMP_LAYOUT)) == _plan(
+        _fixed_width_f(lines, FINWIRE_CMP_LAYOUT)
+    )
+
+
+def test_fixed_width_quotes_parameter_identifiers(spark):
+    lines = _lines(spark).withColumnRenamed("value", "raw line")
+    got = parse_fixed_width(lines, [("a b", 0, 2), ("c.d", 2, 3)], "raw line")
+    assert got.columns == ["a b", "c.d"]
+    assert got.collect()[0] == ("00", "000")
+
+
+def _path(spark):
+    return spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "src long, dst long")
+
+
+def test_connected_components_path_needs_one_superstep_per_hop(spark):
+    # labels settle after 3 supersteps; the 4th observes no change
+    with pytest.raises(RuntimeError, match="did not converge in 3 supersteps"):
+        connected_components(_path(spark), max_iter=3)
+    got = connected_components(_path(spark), max_iter=4).collect()
+    assert sorted((r.node, r.component) for r in got) == [
+        (1, 1),
+        (2, 1),
+        (3, 1),
+        (4, 1),
+    ]
+
+
+def test_connected_components_empty_edges(spark):
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert connected_components(edges).collect() == []
+
+
+def test_cluster_cc_job_budget(spark, sf_dir, tmp_path):
+    sc = spark.sparkContext
+    group = f"build-layer-{tmp_path.name}"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, group)
+    try:
+        df = all_queries()["dedup_cluster_cc"](spark, sf_dir)
+        df.write.mode("overwrite").format("noop").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= MAX_CLUSTER_CC_JOBS, f"dedup_cluster_cc ran {jobs} jobs"

@@ -59,3 +59,10 @@ def test_connected_components_rerun_reuses_compiled_code(spark, sf_dir, tmp_path
     # a call at sf0.01
     n = _rerun_compiles(spark, sf_dir, ["dedup_cluster_cc"], tmp_path)
     assert n == 0, f"second run compiled {n} generated classes"
+
+
+def test_scd2_incremental_rerun_reuses_compiled_code(spark, sf_dir, tmp_path):
+    # a limit in the ordering-precondition probe compiled 4 classes a
+    # call at sf0.01
+    n = _rerun_compiles(spark, sf_dir, ["tpcdi_scd2_incremental"], tmp_path)
+    assert n == 0, f"second run compiled {n} generated classes"

@@ -11,13 +11,16 @@ Each op also gets the number of generated classes Spark compiled
 (codegen cache misses), for the warm-up (including the plan dump's
 build) and for each timed run. The session caches compiled classes,
 so a timed run that compiles anything has generated code that differs
-per call.
+per call. And each gets the py4j round trips its build made (the op
+function call that returns the DataFrame, before anything runs), for
+the warm-up and for each timed run.
 
 Usage:
   python tools/profile_ops.py [--runs N] [--tag r13] [--suffix before]
                               [--no-plans] op1 op2 ...
 Prints one JSON line: {"timings": {"op": sec, ...}, "compiles":
-{"op": {"warmup": n, "timed": [n, ...]}, ...}} plus loadavg bracket.
+{"op": {"warmup": n, "timed": [n, ...]}, ...}, "py4j_calls": {same
+shape}} plus loadavg bracket.
 """
 
 from __future__ import annotations
@@ -73,8 +76,19 @@ def main() -> None:
     os.makedirs(plan_dir, exist_ok=True)
 
     compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    # py4j round trips: every command the gateway client sends
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = [0]
+
+    def counted(*a, **kw):
+        sent[0] += 1
+        return send(*a, **kw)
+
+    client.send_command = counted
     out: dict[str, float] = {}
     compiles: dict[str, dict] = {}
+    py4j_calls: dict[str, dict] = {}
     for op in args.ops:
         fn = queries[op]
         spark.catalog.clearCache()
@@ -86,12 +100,16 @@ def main() -> None:
                 fh.write(_formatted_plan(fn(spark, sf_dir)))
         runs = []
         run_compiles = []
+        run_py4j = []
         for i in range(args.runs + 1):  # first run is the warm-up
             if not args.bench_protocol:
                 spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{op} run{i}")
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            n0 = sent[0]
+            df = fn(spark, sf_dir)
+            run_py4j.append(sent[0] - n0)
+            df.write.mode("overwrite").format("noop").save()
             if i > 0:
                 runs.append(time.perf_counter() - t0)
             c1 = compiled.getCount()
@@ -100,8 +118,10 @@ def main() -> None:
         spark.sparkContext.setJobDescription(None)
         out[op] = round(statistics.median(runs), 3)
         compiles[op] = {"warmup": run_compiles[0], "timed": run_compiles[1:]}
+        py4j_calls[op] = {"warmup": run_py4j[0], "timed": run_py4j[1:]}
         print(
-            f"#   {op}: {out[op]}  {[round(r, 3) for r in runs]}  compiles {run_compiles}",
+            f"#   {op}: {out[op]}  {[round(r, 3) for r in runs]}  compiles {run_compiles}"
+            f"  py4j {run_py4j}",
             file=sys.stderr,
         )
 
@@ -110,6 +130,7 @@ def main() -> None:
             {
                 "timings": out,
                 "compiles": compiles,
+                "py4j_calls": py4j_calls,
                 "loadavg_start": load0,
                 "loadavg_end": round(os.getloadavg()[0], 2),
                 "sf_dir": sf_dir,

@@ -134,6 +134,12 @@ EXPECTED_MIN_TESTS = 1072
 #   agg_first_last NULL-gated order key; tpcdi_prospect_match
 #   nonnegative-key contract note; audit_data_quality NULL-key
 #   pk-count fix (ADVICE r13 medium).
+#   BUILD-LAYER SQL TEXT (computed by tools/op_change_check.py): the
+#   MinHash aggregates/band structs and fixed-width slices are built
+#   from SQL text, plans unchanged — scan_text_fixedwidth,
+#   stream_incremental_dedup, tpcdi_audit_reconciliation,
+#   tpcdi_dim_company, tpcdi_dim_security, tpcdi_financial (the other
+#   adopters are listed above).
 ROUND_ELEVATIONS = (
     "agg_first_last,agg_groupby_basic,audit_data_quality,"
     "dedup_cluster_cc,dedup_cross_source_matrix,"
@@ -144,7 +150,10 @@ ROUND_ELEVATIONS = (
     "stream_foreachbatch_upsert,stream_session_window,"
     "stream_watermark_late,tpcdi_batch_e2e,tpcdi_dim_trade,"
     "tpcdi_prospect_match,tpcdi_scd2_incremental,vec_covariance_matrix,"
-    "vec_kmeans_refine,vec_pca_power_iteration,vec_pca_project"
+    "vec_kmeans_refine,vec_pca_power_iteration,vec_pca_project,"
+    "scan_text_fixedwidth,stream_incremental_dedup,"
+    "tpcdi_audit_reconciliation,tpcdi_dim_company,tpcdi_dim_security,"
+    "tpcdi_financial"
 )
 
 

@@ -11,16 +11,19 @@ supersteps. Dedup graphs have tiny diameters (dup clusters are
 near-cliques), so 2-3 supersteps is typical; ``max_iter`` bounds the
 worst case.
 
-Scale posture: each superstep is one shuffle join (edges ⋈ labels on
-node id) plus one keyed min-aggregation — no driver-side data beyond
-the single convergence count. Label state is checkpoint-friendly
-(``localCheckpoint`` every few supersteps would truncate lineage on a
-real cluster; unnecessary at the bounded iteration counts used here).
+Scale posture: the edge relation is checkpointed once. Superstep 1
+needs no label relation — every label is still the node's own id, so
+the new label is ``least(min(neighbour), node)``: one keyed
+min-aggregation over the edges. Each later superstep is one shuffle
+join (edges ⋈ labels on node id) plus one keyed min-aggregation. Every
+superstep's labels are checkpointed eagerly, and the number of changed
+labels comes back to the driver as an observed metric of that same
+checkpoint job — one number per superstep, no extra job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -41,50 +44,51 @@ def connected_components(
     # lineage (and the label plan would grow by one join per superstep —
     # exponential analysis cost). localCheckpoint = cached + lineage cut.
     both = both.localCheckpoint(eager=True)
-    labels = (
-        both.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
     converged = False
-    for _ in range(max_iter):
-        msgs = both.join(labels, both.a == labels.node).select(
-            F.col("b").alias("node"), F.col("component")
-        )
-        # convergence flag FUSED into the label aggregation
-        # (optimization r14, guide §2.4): the old row rides the union
-        # with an _old marker, so min(component) and the node's
-        # previous component come out of the SAME groupBy — the former
-        # per-superstep probe join (a second shuffle job over both
-        # label sets) becomes a filter-scan of the already
-        # checkpointed result. Every node has exactly one old row, so
-        # _prev is never NULL and "changed" is exactly the old
-        # new≠old join predicate.
-        new_labels = (
-            labels.select("node", "component", F.lit(True).alias("_old"))
-            .unionByName(msgs.withColumn("_old", F.lit(False)))
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("_old"), F.col("component"))).alias(
-                    "_prev"
-                ),
+    for step in range(max_iter):
+        if step == 0:
+            # superstep 1: every node's label is its own id, so the min
+            # over its neighbours' labels is the min over its neighbours
+            # (``both`` holds each edge in both directions)
+            new_labels = (
+                both.groupBy("a")
+                .agg(F.min("b").alias("_m"))
+                .select(
+                    F.col("a").alias("node"),
+                    F.least("_m", "a").alias("component"),
+                    (F.col("_m") < F.col("a")).alias("_chg"),
+                )
             )
-            .withColumn("_chg", F.col("component") != F.col("_prev"))
-            .drop("_prev")
-            .localCheckpoint(eager=True)
-        )
-        # a plain count, not limit(1).count(): a limit's generated code
-        # names its row counter from a JVM-wide sequence
-        # (_limit_counter_<n>), so every new plan holding a limit has
-        # new source and compiles again, once for the driver's class
-        # loader and once for the executor's. The filtered scan and
-        # count compile once per session. Both read every row when
-        # the labels have converged.
-        changed = new_labels.filter("_chg").count()
+        else:
+            msgs = both.join(labels, both.a == labels.node).select(
+                F.col("b").alias("node"), F.col("component")
+            )
+            # convergence flag fused into the label aggregation: the old
+            # row rides the union with an _old marker, so min(component)
+            # and the node's previous component come out of the same
+            # groupBy. Every node has exactly one old row, so _prev is
+            # never NULL and "changed" is exactly new≠old.
+            new_labels = (
+                labels.select("node", "component", F.lit(True).alias("_old"))
+                .unionByName(msgs.withColumn("_old", F.lit(False)))
+                .groupBy("node")
+                .agg(
+                    F.min("component").alias("component"),
+                    F.min(F.when(F.col("_old"), F.col("component"))).alias(
+                        "_prev"
+                    ),
+                )
+                .withColumn("_chg", F.col("component") != F.col("_prev"))
+                .drop("_prev")
+            )
+        # the changed-label count is observed by the checkpoint job
+        # itself: a separate count() would be one more job per superstep
+        changed = Observation()
+        new_labels = new_labels.observe(
+            changed, F.count_if("_chg").alias("n")
+        ).localCheckpoint(eager=True)
         labels = new_labels.select("node", "component")
-        if changed == 0:
+        if changed.get["n"] == 0:
             converged = True
             break
     if not converged:

@@ -73,9 +73,10 @@ def minhash_signature(
     sh: DataFrame, id_col: str, num_hashes: int = 32
 ) -> DataFrame:
     """Per-doc minhash signature as columns mh0..mh{n-1} (one shuffle)."""
+    # SQL text, not nested F.* calls: one py4j round trip per aggregate
+    # instead of about three per function
     aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(s))).alias(f"mh{s}")
-        for s in range(num_hashes)
+        F.expr(f"min(xxhash64(shingle, {s})) AS mh{s}") for s in range(num_hashes)
     ]
     return sh.groupBy(id_col).agg(*aggs)
 
@@ -85,13 +86,17 @@ def band_keys(
 ) -> DataFrame:
     """(id, band_idx, band_key) — one row per band."""
     rows_per_band = num_hashes // bands
-    pairs = []
-    for b in range(bands):
-        cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        pairs.append(F.struct(F.lit(b).alias("band_idx"), F.xxhash64(*cols).alias("band_key")))
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*pairs)).alias("bk")
-    ).select(id_col, F.col("bk.band_idx").alias("band_idx"), F.col("bk.band_key").alias("band_key"))
+    # one SQL expression for all band structs (one round trip, see
+    # minhash_signature); struct(... AS ...) prints like F.struct
+    structs = ", ".join(
+        f"struct({b} AS band_idx, xxhash64("
+        + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
+        + ") AS band_key)"
+        for b in range(bands)
+    )
+    return sig.selectExpr(
+        f"`{id_col}`", f"explode(array({structs})) AS bk"
+    ).selectExpr(f"`{id_col}`", "bk.band_idx AS band_idx", "bk.band_key AS band_key")
 
 
 def candidate_pairs(

@@ -31,6 +31,16 @@ from pyspark.sql import SparkSession
 # the session that starts the JVM sets it.
 CODEGEN_CACHE_ENTRIES = 1000
 
+# Spark's holder of its Unicode case-mapping tables. Its static
+# initializer title-cases every one of the 1.1M code points with ICU,
+# the first time any case mapping (lower, upper, initcap) runs in the
+# JVM: about 3 GB of short-lived objects in about 1.5 s on one task
+# thread. Inside a query that burst meets the query's live objects, and
+# G1 takes the GC time it costs as a reason to grow the heap, which
+# then stays resident for the life of the JVM. get_spark initializes
+# the class while the heap is nearly empty.
+_CASE_MAPPING_CLASS = "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String"
+
 
 def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -88,4 +98,7 @@ def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -
         # traces show GeneratedIterator.
         .config("spark.sql.codegen.useIdInClassName", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # a no-op once the class is initialized
+    spark._jvm.java.lang.Class.forName(_CASE_MAPPING_CLASS)
+    return spark

@@ -126,12 +126,14 @@ def scd2_apply_incremental(
         # enforce the ordering precondition instead of documenting it:
         # a batch eff at or before a key's current row would close that
         # row at a date before it opened (end < effective), silently
-        # corrupting the history and downstream surrogate_lookups
+        # corrupting the history and downstream surrogate_lookups.
+        # A plain count, not limit(1).count(): a limit's generated code
+        # names its row counter from a JVM-wide sequence, so every call
+        # would compile new classes.
         late = (
             dim.filter("is_current")
             .join(batch_first, natural_key)
             .filter(F.col("_first_new_eff") <= F.col("effective_date"))
-            .limit(1)
             .count()
         )
         if late:
