@@ -27,10 +27,13 @@ def test_oracle_parity(op, spark, duck, sf_dir):
 def test_no_rows_only_ops_remain():
     """Every registered op is SQL-oracled — the rows-only escape hatch
     is empty (and this test replaces the parametrized runner that
-    pytest reported as a skip on the empty set)."""
+    pytest reported as a skip on the empty set). The op count is pinned
+    too, so a registry that loses ops also fails here, not only by
+    shrinking the parametrized parity run above."""
     assert set(_QUERIES) == set(_ORACLES), (
         f"rows-only ops appeared: {sorted(set(_QUERIES) - set(_ORACLES))}"
     )
+    assert len(_QUERIES) == 291
 
 
 def test_approx_selfcheck_flags_true(spark, sf_dir):

@@ -1,7 +1,6 @@
 """Registry-wide lint for the signed-zero percentile invariant
 (SURVEY §7.5 r11 proposal 5, built the same round the class was
-found — the op_change_check pattern of making an invariant mechanical
-the round it bites).
+found, so the invariant is mechanical from the round it bit).
 
 The r11 find: Spark's engine-internal exact `percentile` emits −0.0
 where DuckDB's `quantile_cont` emits +0.0 when the interpolation lands

@@ -11,7 +11,7 @@ billion documents/customers kills the splitter), fixed by an
 overflow-free 16-bit-split multiply in llm._split_bucket and
 str_concat_phone's modular local number, elevated with the two
 transitive helper adopters (pipeline_corpus_curation,
-pipeline_pretrain_e2e — flagged by op_change_check).
+pipeline_pretrain_e2e).
 
 Boundaries pinned:
 - split hashing with ids ABOVE the old overflow bound, including the

@@ -1,6 +1,5 @@
-"""Round-9 pre-certification edge tests for the STAGED r10 window
-(the r4-certified scalar/streaming/UDF block at _PRIORITY positions
-51-100). Companion to tests/test_r3_window_edges.py, same shape: each
+"""Determinism-edge tests for a block of scalar, streaming and UDF
+ops. Companion to tests/test_r3_window_edges.py, same shape: each
 test drives the REAL registered op+oracle pair (both engines) on a
 hand-built fixture whose values sit exactly on the op's determinism
 edges. Motivated by the r9 exact-boundary probe that found the

@@ -61,10 +61,10 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     # Anything path-shaped is an explicit sf_dir: a MISSING dir must be
     # a loud usage error, never silently reinterpreted as an op name —
-    # round_close_check step 7 passes a regenerated fixture dir here,
-    # and a failed regen previously made the window sweep fall through
-    # to the friendly default fixture and print a vacuous PASS row
-    # (round-8 ADVICE, same class as the driver_canon_probe guard).
+    # tools/full_check.py passes a regenerated fixture dir here, and a
+    # failed regen would otherwise make the sweep fall through to the
+    # friendly default fixture and print a vacuous PASS row (same class
+    # as the driver_canon_probe guard).
     if args and (os.sep in args[0] or args[0] in (".", "..") or os.path.isdir(args[0])):
         if not os.path.isdir(args[0]):
             print(f"error: fixture dir does not exist: {args[0]}", file=sys.stderr)
