@@ -1,4 +1,4 @@
-"""Round-10 tests for the str_levenshtein_link deletion-neighborhood
+"""Tests for the str_levenshtein_link deletion-neighborhood
 rewrite (VERDICT r9 item 2 — the sanctioned replacement of the
 O(block²) blocked cross join).
 

@@ -1,4 +1,4 @@
-"""NFD-decomposed-text probe, mechanized (r13; tools/probe_nfd_text.py
+"""NFD-decomposed-text probe, mechanized (tools/probe_nfd_text.py
 is the fixture generator for the full-registry axis). The focused
 regressions here pin the two REAL finds this axis has produced:
 

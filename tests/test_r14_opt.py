@@ -28,7 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from tpc_di_etl_using_pyspark_spark.llm.components import connected_components
-from tpc_di_etl_using_pyspark_spark.llm.minhash import candidate_pairs
+from tpc_di_etl_using_pyspark_spark.llm.minhash import cap_buckets, candidate_pairs
 from tpc_di_etl_using_pyspark_spark.plans._util import spread_scan, t
 
 
@@ -87,6 +87,25 @@ def test_candidate_pairs_cap_before_collect_and_semantics(band_rows):
     assert (
         candidate_pairs(band_rows, "doc_id", max_bucket=None).count() == 13
     )
+
+
+@pytest.mark.parametrize(
+    "min_size, max_bucket, kept",
+    [
+        (1, 4, {100: 3, 300: 1}),  # a standing index keeps the singleton
+        (2, 4, {100: 3}),
+        (2, 5, {100: 3, 200: 5}),  # max_bucket is inclusive
+        (2, None, None),  # uncapped: the input itself
+    ],
+)
+def test_cap_buckets_bounds(band_rows, min_size, max_bucket, kept):
+    out = cap_buckets(band_rows, ["band_idx", "band_key"], max_bucket, min_size)
+    if kept is None:
+        assert out is band_rows
+        return
+    got = {r.band_key: r["count"] for r in out.groupBy("band_key").count().collect()}
+    assert got == kept
+    assert out.columns == band_rows.columns
 
 
 def test_incremental_probe_one_pass_equals_join_form(spark):

@@ -41,7 +41,7 @@ STATUS (round 11, VERDICT r10 item 5): HISTORY / RE-MEASURE HARNESS.
 The registered op adopted the neighborhood plan in round 10, so the
 BRUTE arm here is no longer the shipping shape and is NOT load-bearing
 for correctness — the suite pins neighborhood == brute pair-set
-equality in tests/test_r10_lev_neighborhood.py on every run. Keep this
+equality in tests/test_levenshtein_link.py on every run. Keep this
 probe for re-measuring the crossover if the corpus shape changes
 (e.g. much longer names inflate the variant lattice); its timings are
 the round-9/10 adjudication record behind SCALING.md's levenshtein

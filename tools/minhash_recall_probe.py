@@ -2,9 +2,9 @@
 """Measured MINHASH recall under the bucket-occupancy cap at 25×
 duplication (VERDICT r10 item 7).
 
-The occupancy cap (llm/minhash.py candidate_pairs, max_bucket=200) is
-the one knob that trades recall SILENTLY as duplication grows:
-dedup_eval_simhash_recall measures the simhash family against sampled
+The occupancy cap (llm/minhash.py cap_buckets, max_bucket=200 in
+candidate_pairs) is the one knob that trades recall SILENTLY as
+duplication grows: dedup_eval_simhash_recall measures the simhash family against sampled
 brute-force truth, but nothing measured minhash's verified-pair recall
 under the cap. This probe reuses the dedup25 fixture (documents
 replicated 25× unperturbed — every doc has 25 exact copies, the

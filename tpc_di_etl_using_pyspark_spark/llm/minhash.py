@@ -99,46 +99,65 @@ def band_keys(
     ).selectExpr(f"`{id_col}`", "bk.band_idx AS band_idx", "bk.band_key AS band_key")
 
 
+def cap_buckets(
+    df: DataFrame, keys: list[str], max_bucket: int | None, min_size: int = 1
+) -> DataFrame:
+    """Rows of the ``keys`` buckets holding ``min_size``..``max_bucket`` rows.
+
+    The occupancy cap every candidate generator shares: a bucket of n
+    docs yields n²/2 pairs, so one boilerplate bucket (empty docs,
+    shared headers) can dominate the whole job. The count is a window
+    partitioned by ``keys``, so when the caller then groups or joins on
+    the same keys it shares that one exchange, and its sort-based
+    buffering spills. Pair generators pass ``min_size=2`` (a singleton
+    yields no pair); a standing index keeps singletons, which a new doc
+    can still match. ``max_bucket=None`` returns ``df`` itself.
+    """
+    if max_bucket is None:
+        return df
+    occ = F.col("_occ")
+    keep = occ <= max_bucket
+    if min_size > 1:
+        keep = (occ >= min_size) & keep
+    w = Window.partitionBy(*keys)
+    return (
+        df.withColumn("_occ", F.count(F.lit(1)).over(w))
+        .filter(keep)
+        .drop("_occ")
+    )
+
+
 def candidate_pairs(
     bk: DataFrame, id_col: str, max_bucket: int | None = 200
 ) -> DataFrame:
     """Distinct (doc_a, doc_b) sharing ≥1 band bucket, doc_a < doc_b.
 
     Buckets larger than ``max_bucket`` are dropped before any pair is
-    generated: a bucket of n docs yields n²/2 pairs, so one boilerplate
-    bucket (empty docs, shared headers) can dominate the whole job —
-    the cap bounds the pair fan-out at any corpus size. ``None``
-    disables the cap (full banding-theory recall, unbounded worst
-    case: the whole bucket is then collected into one aggregation
-    buffer and its pairs generated by one task — see module docstring).
+    generated (``cap_buckets``), which bounds the pair fan-out at any
+    corpus size. ``None`` disables the cap (full banding-theory
+    recall, unbounded worst case: the whole bucket is then collected
+    into one aggregation buffer and its pairs generated by one task —
+    see module docstring).
 
-    Shape (optimization r13, guide §2.4): ONE aggregation on the band
-    key collects each bucket's sorted member ids and the a<b pairs are
-    generated MAP-SIDE from each bucket row (posexplode + slice of the
-    tail). The former self-join-with-window-cap form evaluated the
-    whole signature pipeline twice (once per join side); this form
-    evaluates it once and shuffles the band relation once. Identical
-    output: sorted ids make every in-bucket pair (ids[i], ids[j]),
-    i < j, exactly the doc_a < doc_b join result — size(collect_set) ≡
-    the occupancy COUNT because (id, band) rows are unique by
-    construction.
+    Shape: ONE aggregation on the band key collects each bucket's
+    sorted member ids and the a<b pairs are generated MAP-SIDE from
+    each bucket row (posexplode + slice of the tail). A self-join of
+    the band relation would evaluate the whole signature pipeline
+    twice (once per join side); this form evaluates it once and
+    shuffles the band relation once. Identical output: sorted ids make
+    every in-bucket pair (ids[i], ids[j]), i < j, exactly the
+    doc_a < doc_b join result — size(collect_set) ≡ the occupancy
+    COUNT because (id, band) rows are unique by construction.
 
-    Bounded state (optimization r14, VERDICT r13 item 3): the cap is
-    applied by an occupancy WINDOW on the same band key BEFORE the
-    collect — the window partitions by exactly the aggregation's keys,
-    so it shares the one exchange (no extra shuffle), its sort-based
-    buffering spills, and every collect_set buffer downstream is
-    bounded by ``max_bucket``. The r13 form filtered AFTER collecting,
-    so one degenerate bucket materialized a multi-million-element
-    array in a single unspillable aggregation buffer at corpus scale.
+    Bounded state: the cap is applied BEFORE the collect, and its
+    window partitions by exactly the aggregation's keys, so it shares
+    the one exchange (no extra shuffle) and every collect_set buffer
+    downstream is bounded by ``max_bucket``. Filtering AFTER the
+    collect would let one degenerate bucket materialize a
+    multi-million-element array in a single unspillable aggregation
+    buffer at corpus scale.
     """
-    if max_bucket is not None:
-        w = Window.partitionBy("band_idx", "band_key")
-        bk = (
-            bk.withColumn("_occ", F.count(F.lit(1)).over(w))
-            .filter((F.col("_occ") >= 2) & (F.col("_occ") <= max_bucket))
-            .drop("_occ")
-        )
+    bk = cap_buckets(bk, ["band_idx", "band_key"], max_bucket, min_size=2)
     buckets = bk.groupBy("band_idx", "band_key").agg(
         F.sort_array(F.collect_set(F.col(id_col))).alias("_ids")
     )
@@ -197,15 +216,15 @@ def jaccard_verify(
         F.collect_set(F.xxhash64("shingle")).alias("sh_set")
     )
     # LOSSLESS size-ratio prefilter, applied INLINE between the joins
-    # and the intersect (optimization r13, guide §2.4): J(A,B) <=
-    # min(|A|,|B|)/max(|A|,|B|), so any pair passing the threshold has
-    # set sizes within a factor 1/threshold; pairs failing it skip the
-    # array_intersect entirely. The former form materialized a
-    # separate counts relation and joined it per side BEFORE the array
-    # joins — that made FOUR references to ``sets``, and Catalyst
+    # and the intersect: J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so any
+    # pair passing the threshold has set sizes within a factor
+    # 1/threshold; pairs failing it skip the array_intersect entirely.
+    # The former form materialized a separate counts relation and
+    # joined it per side BEFORE the array joins — that made FOUR
+    # references to ``sets``, and Catalyst
     # re-ran the corpus-wide groupBy+collect_set once per reference
-    # (plan-counted 4× subtrees pre-r13). Two references build the
-    # aggregation twice instead of four times and halve the join
+    # (plan-counted 4× subtrees in that form). Two references build
+    # the aggregation twice instead of four times and halve the join
     # count; the candidate side stays the broadcast build side either
     # way, so the arrays still stream map-side and are only
     # intersected for pairs the size filter admits (measured 2.56 →
@@ -247,13 +266,13 @@ def minhash_near_dups(
     scale the storage fraction bounds the footprint and spills).
     Disable for a purely lazy plan.
     """
-    # layout-gated re-spread (optimization r13, guide §2.5): a
-    # single-row-group fixture scan hands the whole corpus to ONE
-    # task, and cache() preserves partitioning — so the shingle
-    # explode, the 32-min signature partial aggregation and the
-    # set-build partial aggregation all serialized on one core. For
-    # an input that is already wide (e.g. the post-shuffle corpus a
-    # pipeline passes in) the gate is false and nothing is added.
+    # layout-gated re-spread: a single-row-group fixture scan hands
+    # the whole corpus to ONE task, and cache() preserves partitioning
+    # — so the shingle explode, the 32-min signature partial
+    # aggregation and the set-build partial aggregation all
+    # serialized on one core. For an input that is already wide (e.g.
+    # the post-shuffle corpus a pipeline passes in) the gate is false
+    # and nothing is added.
     # Measured 1.39 → 0.83 s on dedup_minhash_lsh at sf0.1.
     from ..plans._util import spread_scan
 

@@ -15,10 +15,10 @@ per word. Pair search blocks on 15-bit slices of the fingerprint (a
 Hamming-≤3 pair must agree exactly on ≥1 of 4 slices — pigeonhole),
 so the self-join is keyed, never cartesian.
 
-Why md5-derived instead of xxhash64 (round 3): with an engine-private
-hash the DuckDB oracle could only be the exact brute-force answer, so
-the certification silently depended on the capped candidate stage
-having full recall — which broke at sf0.1 (slice buckets above the
+Why md5-derived instead of xxhash64: with an engine-private hash the
+DuckDB oracle could only be the exact brute-force answer, so the
+certification silently depended on the capped candidate stage having
+full recall — which broke at sf0.1 (slice buckets above the
 occupancy cap dropped 5 true Hamming-≤3 pairs, and 2 high-Jaccard
 pairs sat at Hamming 39/49, outside any slice radius). With a hash
 both engines compute, the oracle replays fingerprints, slicing, the
@@ -30,31 +30,12 @@ LCG-deterministic planes).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .minhash import cap_buckets
+
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits BIGINT in both engines
-
-
-def _cap_chunk_buckets(chunks: DataFrame, max_bucket: int | None) -> DataFrame:
-    """Drop (chunk_idx, chunk) buckets with more than ``max_bucket``
-    rows before a self-join — same occupancy cap as
-    llm/minhash.py candidate_pairs. A bucket of n docs yields n²/2
-    pairs, so one boilerplate fingerprint slice (empty docs, shared
-    headers hashing to the same slice) can make the candidate join
-    quadratic at corpus scale; the cap bounds the fan-out. The cap is
-    part of the op's SPECIFIED semantics and is mirrored in the SQL
-    oracle, so capped recall is certified, not hidden. ``None``
-    disables.
-    """
-    if max_bucket is None:
-        return chunks
-    w = Window.partitionBy("chunk_idx", "chunk")
-    return (
-        chunks.withColumn("_bn", F.count(F.lit(1)).over(w))
-        .filter(F.col("_bn") <= max_bucket)
-        .drop("_bn")
-    )
 
 
 def word_hash(col) -> F.Column:
@@ -143,24 +124,28 @@ def _chunked(fp: DataFrame, id_col: str, chunk_bits: int) -> DataFrame:
     )
 
 
-def simhash_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
+def fingerprint_pairs(
+    fp: DataFrame,
+    id_col: str,
+    max_hamming: int,
     chunk_bits: int = 15,
     max_bucket: int | None = 200,
 ) -> DataFrame:
-    """Near-dup pairs (doc_a < doc_b, hamming ≤ max_hamming).
+    """Pairs (doc_a < doc_b, hamming ≤ max_hamming) of the 60-bit
+    fingerprints in ``fp`` (id, simhash), blocked on slice equality.
 
     Complete (finds every qualifying pair) only while
     max_hamming < 60/chunk_bits; beyond that the blocking can miss a
     pair whose differing bits spread across every slice. Slices with
     more than ``max_bucket`` occupants are dropped before the
-    self-join (see _cap_chunk_buckets).
+    self-join (``cap_buckets``): one boilerplate fingerprint slice
+    (empty docs, shared headers) would make the join quadratic at
+    corpus scale. The cap is part of the op's SPECIFIED semantics and
+    is mirrored in the SQL oracle, so capped recall is certified, not
+    hidden.
     """
-    chunks = _cap_chunk_buckets(
-        _chunked(simhash(df, id_col, text_col), id_col, chunk_bits), max_bucket
+    chunks = cap_buckets(
+        _chunked(fp, id_col, chunk_bits), ["chunk_idx", "chunk"], max_bucket
     )
     a = chunks.select(
         F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "chunk_idx", "chunk"
@@ -177,6 +162,21 @@ def simhash_near_dups(
     )
 
 
+def simhash_near_dups(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    max_hamming: int = 3,
+    chunk_bits: int = 15,
+    max_bucket: int | None = 200,
+) -> DataFrame:
+    """Near-dup pairs (doc_a < doc_b, hamming ≤ max_hamming) of the
+    documents' simhash fingerprints (see ``fingerprint_pairs``)."""
+    return fingerprint_pairs(
+        simhash(df, id_col, text_col), id_col, max_hamming, chunk_bits, max_bucket
+    )
+
+
 def simhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -190,7 +190,7 @@ def simhash_candidate_pairs(
     — simhash as the candidate generator for an exact verify stage
     (15-bit slices ⇒ complete for Hamming ≤ 3 while every shared
     slice stays under ``max_bucket`` occupants; over-full slices are
-    dropped before the self-join, see _cap_chunk_buckets).
+    dropped before the self-join, see ``fingerprint_pairs``).
 
     The Hamming prefilter runs INSIDE the slice join before the
     pair-dedup shuffle: one xor+popcount per joined row prunes the
@@ -201,7 +201,12 @@ def simhash_candidate_pairs(
     near-dup test and verification is a precision pass. Every step —
     fingerprint, slicing, cap, join, Hamming cut — is replayed
     verbatim by the SQL oracle in plans/llm.py (dedup_simhash), so the
-    generator's recall is part of the certified contract."""
+    generator's recall is part of the certified contract.
+
+    Kept apart from ``fingerprint_pairs`` on purpose: this form
+    localCheckpoints the capped slices and applies the Hamming cut
+    before the pair dedup, so sharing the self-join would change its
+    plan."""
     # localCheckpoint: both self-join branches read the chunked
     # fingerprints — uncomputed, the 60-aggregate fingerprint plan
     # (expensive to codegen-compile AND to run) executes twice.
@@ -210,8 +215,10 @@ def simhash_candidate_pairs(
     # the columnar-cache writer) vs uncached 3.3-9.5 s. The capped
     # relation is tiny (≈2 rows/doc at 15-bit slices), so the eager
     # materialization job is cheap and lineage truncation is free.
-    chunks = _cap_chunk_buckets(
-        _chunked(simhash(df, id_col, text_col), id_col, chunk_bits), max_bucket
+    chunks = cap_buckets(
+        _chunked(simhash(df, id_col, text_col), id_col, chunk_bits),
+        ["chunk_idx", "chunk"],
+        max_bucket,
     ).localCheckpoint()
     a = chunks.select(
         F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"),

@@ -111,8 +111,8 @@ _NARROW_NODES = frozenset(
 
 def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     """Re-spread an under-parallelized scan before heavy map work
-    (optimization r13; guide §2.5 'input skew — one huge unsplittable
-    file ... otherwise repartition immediately after the read').
+    ('input skew — one huge unsplittable file ... otherwise
+    repartition immediately after the read').
 
     The driver fixtures are single-row-group parquet files, and a row
     group is the atomic unit of Spark's vectorized reader — every scan
@@ -131,31 +131,28 @@ def spread_scan(df: DataFrame, *keys: str) -> DataFrame:
     stage is measured heavy; for ops whose first operation is already
     a keyed shuffle the exchange would be pure overhead.
 
-    STATIC gate only (optimization r14, ADVICE r13 item 2): the former
-    ``df.rdd.getNumPartitions()`` probe is only read for plans that are
-    provably narrow-over-a-scan (Project/Filter/Generate over a file
-    relation). For any derived input (aggregates, joins, repartitions —
-    e.g. the post-dedup corpus pipeline_pretrain_e2e hands to
-    minhash_near_dups) the function is a NO-OP: with AQE enabled,
-    ``df.rdd`` on a plan containing exchanges MATERIALIZES every
-    upstream shuffle stage as real jobs at DataFrame-construction time,
-    and the resulting blocks are not reused by the real query — the
-    old gate silently doubled the dedup subtree's execution. A narrow
-    plan has no exchanges, so its ``.rdd`` conversion plans splits on
-    the driver without running anything.
+    STATIC gate only: the ``df.rdd.getNumPartitions()`` probe is only
+    read for plans that are provably narrow-over-a-scan
+    (Project/Filter/Generate over a file relation). For any derived
+    input (aggregates, joins, repartitions — e.g. the post-dedup corpus
+    pipeline_pretrain_e2e hands to minhash_near_dups) the function is
+    a NO-OP: with AQE enabled, ``df.rdd`` on a plan containing
+    exchanges MATERIALIZES every upstream shuffle stage as real jobs at
+    DataFrame-construction time, and the resulting blocks are not
+    reused by the real query — an ungated probe silently doubled the
+    dedup subtree's execution. A narrow plan has no exchanges, so its
+    ``.rdd`` conversion plans splits on the driver without running
+    anything. Engine errors from either probe propagate.
     """
-    try:
-        tree = df._jdf.queryExecution().optimizedPlan().treeString()
-        for line in tree.splitlines():
-            head = line.lstrip(" :+-*(0123456789)")
-            if not head:
-                continue
-            node = head.split(None, 1)[0].rstrip(",")
-            if node not in _NARROW_NODES:
-                return df
-        scan_parts = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive (non-scan inputs)
-        return df
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    for line in tree.splitlines():
+        head = line.lstrip(" :+-*(0123456789)")
+        if not head:
+            continue
+        node = head.split(None, 1)[0].rstrip(",")
+        if node not in _NARROW_NODES:
+            return df
+    scan_parts = df.rdd.getNumPartitions()
     target = df.sparkSession.sparkContext.defaultParallelism
     if scan_parts * 2 >= target:
         return df

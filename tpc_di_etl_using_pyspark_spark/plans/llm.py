@@ -2202,7 +2202,8 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     contract as dedup_minhash_lsh but for the embedding column.
     The oracle mirrors the banding exactly (deterministic planes), so
     approximate recall is certified, not hidden."""
-    from ..llm.similarity import as_double, cosine
+    from ..llm.minhash import candidate_pairs
+    from ..llm.similarity import as_double
 
     e = t(spark, d, "embeddings")
     comps = e.select(
@@ -2215,14 +2216,13 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     ).select("vec_id", F.col("pos").alias("j"), F.col("col").alias("xi"))
 
     # the 16 plane weights are INLINE integer expressions of the
-    # component index j (optimization r14, guide §2.4: k = p*64 + j
-    # keeps the LCG stream identical to the oracle) — the former
-    # 64-row broadcast-relation join carried the same values but paid
-    # a broadcast exchange + hash probe per component row; computing
-    # them in-expression keeps the signature pass one vec_id-keyed
-    # shuffle of 16 map-side-combined integer partial sums with zero
-    # joins (A/B 2.51 → 2.15 s with the occupancy pre-filter below;
-    # outputs hash-identical).
+    # component index j (k = p*64 + j keeps the LCG stream identical
+    # to the oracle) — a 64-row broadcast-relation join carries the
+    # same values but pays a broadcast exchange + hash probe per
+    # component row; computing them in-expression keeps the signature
+    # pass one vec_id-keyed shuffle of 16 map-side-combined integer
+    # partial sums with zero joins (A/B 2.51 → 2.15 s with the
+    # occupancy pre-filter below; outputs hash-identical).
     def _w(p: int):
         k = F.col("j").cast("long") + F.lit(64 * p)
         lcg = F.lit(1103515245).cast("long") * k + 12345
@@ -2261,7 +2261,7 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
         F.col("bk.band_key").alias("band_key"),
     )
 
-    # bucket-occupancy cap (mirrors llm/minhash.py candidate_pairs):
+    # bucket-occupancy cap (llm/minhash.py cap_buckets):
     # a degenerate corpus — heavy exact duplicates, all-zero vectors —
     # lands every copy in the same 8-bit band bucket, making the pair
     # fan-out quadratic in that bucket. Buckets over max_bucket are
@@ -2283,43 +2283,11 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
         "vec_id",
         as_double("embedding").alias("emb"),
     ).select("vec_id", "emb", l2_norm(F.col("emb")).alias("nrm"))
-    # candidate pairs via ONE band-keyed aggregation + map-side pair
-    # generation from each bucket's sorted member array (optimization
-    # r13, guide §2.4 — the same shape as llm/minhash.candidate_pairs):
-    # the former self-join evaluated the whole signature pipeline
-    # (scan → posexplode → 16-sum aggregation) once per side; this
-    # form evaluates it once and shuffles the band relation once.
-    # Sorted ids make every in-bucket (ids[i], ids[j]) i<j pair
-    # exactly the vec_id_a < vec_id_b join result.
-    # Bounded state (optimization r14, VERDICT r13 item 3, mirroring
-    # llm/minhash.candidate_pairs): the cap filters via an occupancy
-    # WINDOW on the same band key BEFORE the collect — same single
-    # exchange (window partition keys = aggregation keys), sort-based
-    # spillable buffering, and every collect_set buffer downstream is
-    # bounded by the cap instead of materializing a degenerate
-    # bucket's full membership in one unspillable aggregation buffer
-    # (A/B 2.51 → 2.17 s at sf0.1; outputs hash-identical —
-    # occupancy count ≡ size(collect_set) because (vec_id, band)
-    # rows are unique by construction).
-    wocc = Window.partitionBy("band_idx", "band_key")
-    sigs = (
-        sigs.withColumn("_occ", F.count(F.lit(1)).over(wocc))
-        .filter((F.col("_occ") >= 2) & (F.col("_occ") <= max_bucket))
-        .drop("_occ")
-    )
-    buckets = sigs.groupBy("band_idx", "band_key").agg(
-        F.sort_array(F.collect_set("vec_id")).alias("_ids")
-    )
-    buckets = buckets.filter(F.size("_ids") >= 2)
-    cand = (
-        buckets.select(F.col("_ids"), F.posexplode("_ids").alias("_i", "id_a"))
-        .select(
-            "id_a",
-            F.explode(
-                F.slice(F.col("_ids"), F.col("_i") + 2, F.size("_ids"))
-            ).alias("id_b"),
-        )
-        .distinct()
+    # candidate pairs: one band-keyed aggregation of the capped bucket
+    # members (capping before the collect instead of after it measured
+    # A/B 2.51 → 2.17 s at sf0.1; outputs hash-identical)
+    cand = candidate_pairs(sigs, "vec_id", max_bucket).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
     ea = emb_d.select(
         F.col("vec_id").alias("id_a"), F.col("emb").alias("va"), F.col("nrm").alias("na")
@@ -2376,22 +2344,20 @@ def pipeline_incremental_dedup(spark: SparkSession, d: str) -> DataFrame:
     tests/test_llm.py)."""
     from ..llm.minhash import band_keys, jaccard_verify, minhash_signature, shingles
 
-    # spread_scan (r13, guide §2.5): the cached shingle relation
-    # inherits the one-task scan's partitioning, serializing both
-    # aggregation passes (min 1.32 → 0.92 s at sf0.1); no-op on
-    # well-split inputs
+    # spread_scan: the cached shingle relation inherits the one-task
+    # scan's partitioning, serializing both aggregation passes (min
+    # 1.32 → 0.92 s at sf0.1); no-op on well-split inputs
     doc = spread_scan(t(spark, d, "documents"), "doc_id")
     sh = shingles(doc, "doc_id", "text", 3).cache()
     bk = band_keys(minhash_signature(sh, "doc_id", 32), "doc_id", 32, 8)
-    # Single-pass probe (optimization r14, guide §2.4): the former
-    # new-side/corpus-side split referenced ``bk`` twice, so Catalyst
-    # evaluated the 32-min signature aggregation once per join side
-    # (the r13 plan's 21st exchange). Both the corpus-side occupancy
-    # cap and the bucket membership are band-keyed windows, so ONE
-    # exchange serves everything: the count window caps the corpus
-    # side, the collect_set window materializes each bucket's ≤cap
-    # corpus ids, and every NEW row explodes its bucket's array
-    # map-side — identical pairs to the former nb⋈cb join, signature
+    # Single-pass probe: a new-side/corpus-side split references ``bk``
+    # twice, so Catalyst evaluates the 32-min signature aggregation
+    # once per join side (one more exchange). Both the corpus-side
+    # occupancy cap and the bucket membership are band-keyed windows,
+    # so ONE exchange serves everything: the count window caps the
+    # corpus side, the collect_set window materializes each bucket's
+    # ≤cap corpus ids, and every NEW row explodes its bucket's array
+    # map-side — identical pairs to the nb⋈cb join form, signature
     # pipeline evaluated once (A/B 1.64 → 1.57 s cold / 1.62 → 1.40 s
     # bench-protocol at sf0.1, outputs hash-identical).
     #
@@ -2403,6 +2369,11 @@ def pipeline_incremental_dedup(spark: SparkSession, d: str) -> DataFrame:
     # risk the other candidate generators cap. Inert on the fixtures
     # (max band bucket ~3, asserted in tests/test_llm.py), so the
     # capped plan equals the exact oracle.
+    #
+    # Not llm/minhash.py cap_buckets + candidate_pairs: this probe
+    # counts only corpus rows, never caps new rows, and collects with a
+    # window rather than a groupBy. Sharing the helpers would need a
+    # mask parameter only this caller uses.
     wb = Window.partitionBy("band_idx", "band_key")
     is_new = F.col("doc_id") % 5 == 0
     bkf = bk.withColumn(
@@ -3705,7 +3676,7 @@ def multimodal_phash_neardup(spark: SparkSession, d: str) -> DataFrame:
     no exact blob dups), so true pairs sit at Hamming 0. Scale: the
     UDF maps partition-wise over Arrow batches (payload never
     shuffles); the pair join ships only (id, 60-bit fp, slice)."""
-    from ..llm.simhash import _cap_chunk_buckets, _chunked, hamming
+    from ..llm.simhash import fingerprint_pairs
     from ._util import _ensure_pkg_on_executors
 
     _ensure_pkg_on_executors(spark)
@@ -3727,24 +3698,8 @@ def multimodal_phash_neardup(spark: SparkSession, d: str) -> DataFrame:
         )
 
     fp = corpus.select("doc_id", phash("content").alias("simhash"))
-    chunks = _cap_chunk_buckets(_chunked(fp, "doc_id", 15), 200)
-    a = chunks.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ph_a"),
-        "chunk_idx", "chunk",
-    )
-    b = chunks.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("ph_b"),
-        "chunk_idx", "chunk",
-    )
-    return (
-        a.join(b, ["chunk_idx", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            hamming(F.col("ph_a"), F.col("ph_b")).cast("long").alias("hamming"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("hamming") <= 6)
+    return fingerprint_pairs(fp, "doc_id", 6).select(
+        "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
     )
 
 

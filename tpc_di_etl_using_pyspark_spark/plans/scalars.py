@@ -562,7 +562,7 @@ def str_levenshtein_link(spark: SparkSession, d: str) -> DataFrame:
     shares a variant reachable by ≤2 deletions from each (SymSpell
     completeness), so the candidate set is a superset and the verify
     makes the output identical to the brute join's (pair-set equality
-    asserted in tests/test_r10_lev_neighborhood.py and measured
+    asserted in tests/test_levenshtein_link.py and measured
     through 25× in tools/lev_crossover_probe.py: brute wins below
     ~15k rows, the neighborhood wins 1.9–6.5× at 375k). Work scales
     with rows × L² variant generation plus candidate-set joins —

@@ -324,9 +324,7 @@ def build_corpus_index(corpus_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     The occupancy cap (200) is applied at BUILD time — a boilerplate
     band bucket with k corpus members would multiply every probing
     batch row that lands in it by k."""
-    from pyspark.sql import Window
-
-    from ..llm.minhash import band_keys, minhash_signature, shingles
+    from ..llm.minhash import band_keys, cap_buckets, minhash_signature, shingles
 
     # the shingle relation feeds BOTH the signature pass and the later
     # verify join — cache() (lazy) reuses the one computation, the
@@ -335,12 +333,9 @@ def build_corpus_index(corpus_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     # relation costs more than it saves per invocation)
     sh = shingles(corpus_docs, "doc_id", "text", 3).cache()
     bk = band_keys(minhash_signature(sh, "doc_id", 32), "doc_id", 32, 8)
-    wb = Window.partitionBy("band_idx", "band_key")
-    capped = (
-        bk.withColumn("_bn", F.count(F.lit(1)).over(wb))
-        .filter(F.col("_bn") <= 200)
-        .drop("_bn")
-        .select(F.col("doc_id").alias("doc_b"), "band_idx", "band_key")
+    # min_size=1: a new doc must still match a corpus bucket of one
+    capped = cap_buckets(bk, ["band_idx", "band_key"], 200).select(
+        F.col("doc_id").alias("doc_b"), "band_idx", "band_key"
     )
     return capped, sh
 
