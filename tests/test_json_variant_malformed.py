@@ -1,4 +1,4 @@
-"""ADVICE r12 item 3 (json_variant_extract, low): absolute pins for
+"""json_variant_extract on malformed JSON payloads: absolute pins for
 the payload shapes the r12 extremes suite deliberately leaves out of
 full parity — duplicate-key objects and malformed JSON. The r12
 switch to try_parse_json made BOTH silently NULL (k IS NULL, vschema

@@ -355,6 +355,18 @@ def test_aqe_coalesces_shuffle_partitions(spark, sf_dir):
     assert "AQEShuffleRead" in executed
 
 
+def test_aqe_coalesces_cached_shuffle_partitions(spark):
+    """A cached aggregate's shuffle is coalesced too: Spark's default
+    keeps a cached plan at spark.sql.shuffle.partitions partitions."""
+    df = spark.range(10_000).groupBy((F.col("id") % 97).alias("k")).count().cache()
+    try:
+        df.count()
+        parts = df.rdd.getNumPartitions()
+    finally:
+        df.unpersist()
+    assert parts < int(spark.conf.get("spark.sql.shuffle.partitions")), parts
+
+
 def test_scalar_subquery_decorrelates_to_one_agg_join(spark, sf_dir):
     """Both correlated scalar subqueries (select list + predicate,
     same correlation key) must decorrelate to grouped aggregation(s)

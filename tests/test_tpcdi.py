@@ -382,9 +382,10 @@ def test_batch_e2e_composition_and_plan(spark, sf_dir):
     # parquet sink between batch phases) so the SCD2 build executes
     # once, and both of its plan references must read the
     # InMemoryRelation. dim_company and fact_sk have exactly one
-    # consumer since the r14 audit fusion, so caching them was pure
-    # materialization overhead and the plan must NOT regrow extra
-    # InMemoryRelations (or extra union-branch aggregation pipelines:
+    # consumer since the audit became one fused stats pass, so caching
+    # them was pure materialization overhead and the plan must NOT
+    # regrow extra InMemoryRelations (or extra union-branch aggregation
+    # pipelines:
     # the audit emits all 7 rows from ONE inline() over crossJoined
     # 1-row aggregates — no Union remains).
     assert plan.count("InMemoryRelation") == 2, plan.count("InMemoryRelation")
@@ -393,6 +394,36 @@ def test_batch_e2e_composition_and_plan(spark, sf_dir):
     assert plan.count("Generate inline") == 1, plan.count("Generate inline")
     assert plan.count("Exchange") <= 40, plan.count("Exchange")
     out.sparkSession.catalog.clearCache()
+
+
+# 253-269 with the cached DimCustomer at 32 shuffle partitions, 67-83
+# with AQE sizing it (local[4], local[8] and local[32], cold and warm)
+MAX_BATCH_E2E_STAGE_TASKS = 120
+
+
+def test_batch_e2e_stage_task_budget(spark, sf_dir, tmp_path):
+    """The cached DimCustomer is sized by AQE like any other stage: a
+    few KB must not land in every shuffle partition, making each stage
+    that writes or reads it run spark.sql.shuffle.partitions tasks."""
+    from tpc_di_etl_using_pyspark_spark.plans.tpcdi_ops import tpcdi_batch_e2e
+
+    sc = spark.sparkContext
+    group = f"batch-e2e-tasks-{tmp_path.name}"
+    spark.catalog.clearCache()
+    sc.setJobGroup(group, group)
+    try:
+        tpcdi_batch_e2e(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.catalog.clearCache()
+    tracker = sc.statusTracker()
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    assert tasks <= MAX_BATCH_E2E_STAGE_TASKS, f"tpcdi_batch_e2e ran {tasks} tasks"
 
 
 def test_attribution_touch_precedes_purchase(spark, sf_dir):

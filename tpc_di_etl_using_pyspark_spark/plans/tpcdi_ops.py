@@ -1502,10 +1502,10 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
     # warehouse tables to parquet and the next phase re-scans them;
     # cache is the local stand-in for that boundary — without it the
     # audit re-runs the whole SCD2 build per reference. dim_company
-    # and fact_sk each have exactly ONE consumer after the r14 audit
-    # fusion, so their former cache()s were pure materialization
-    # overhead and are dropped (guide §5 'only worth it when a
-    # DataFrame is REUSED'; A/B in OPTIMIZATION_r14.md).
+    # and fact_sk each have exactly ONE consumer since the audit became
+    # one fused stats pass, so caching them would only materialize
+    # rows nobody reads twice; their former cache()s are dropped (A/B
+    # in OPTIMIZATION_r14.md).
     frames = _finwire_frames(spark, d)
     dim_company = _company_dim_from(frames["CMP"])
     v = t(spark, d, "orders").select(
@@ -1530,10 +1530,12 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
     batch2 = v.filter(F.col("o_orderstatus") == "O").withColumn(
         "eff", F.date_add("eff", F.lit(shift))
     )
-    # check_order=False (optimization r14): the ordering precondition
-    # holds BY CONSTRUCTION here — every batch2 eff is span+1 days past
-    # max(hist eff) via _batch_date_shift — and the eager probe cost a
-    # full extra evaluation of the SCD2 build window at plan-build time
+    # check_order=False: the ordering precondition holds BY
+    # CONSTRUCTION here — every batch2 eff is span+1 days past max(hist
+    # eff) via _batch_date_shift — and the eager probe cost a full extra
+    # evaluation of the SCD2 build window at plan-build time. The cache's
+    # partitions are sized by AQE (get_spark sets
+    # canChangeCachedPlanOutputPartitioning), not shuffle.partitions.
     dim_customer = scd2_apply_incremental(
         dim_customer, batch2, "o_custkey", "eff",
         ["o_orderstatus", "o_orderpriority"], "o_orderkey",
@@ -1548,20 +1550,20 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
     )
 
     # --- Audit: DImessages + reconciliation ------------------------
-    # Fully fused (optimization r14, VERDICT r13 item 2, extending the
-    # r13 audit_data_quality pattern): ONE stats pass per warehouse
-    # table, every 1-row aggregate crossJoined into a single 1-row
-    # relation, and all seven report rows inline()d from it map-side —
-    # one aggregation pipeline replaces the former four union branches
-    # (A/B 2.26 → 1.80 s bench-protocol / 4.21 → 2.69 s cold at sf0.1,
-    # rows byte-identical; 8↔32-core ratio back above 1).
+    # Fully fused, as in audit_data_quality: ONE stats pass per
+    # warehouse table, every 1-row aggregate crossJoined into a single
+    # 1-row relation, and all seven report rows inline()d from it
+    # map-side, so each table is read once — one aggregation pipeline
+    # replaces the former four union branches (A/B 2.26 → 1.80 s
+    # bench-protocol / 4.21 → 2.69 s cold at sf0.1, rows
+    # byte-identical; 8↔32-core ratio back above 1).
     #
     # The dim_customer pass folds scd2_validate's two evaluations into
     # the same pipeline: the version-chain check and the per-key
     # current-row count are BOTH windows partitioned by the natural
-    # key, so they share one exchange (guide §2.4 'window functions
-    # partitioned by the same key ... do not need a second shuffle'),
-    # and the global 1-row aggregate computes row count, current-row
+    # key, so they share one exchange (Spark plans a second window
+    # over the same partitioning without another shuffle), and the
+    # global 1-row aggregate computes row count, current-row
     # count AND the violation total on top:
     #   violations ≡ COUNT(bad-chain rows) + COUNT(DISTINCT keys with
     #   >1 current row) — exactly scd2_validate's bad_chain ∪

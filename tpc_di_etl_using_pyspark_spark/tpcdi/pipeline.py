@@ -109,13 +109,13 @@ def scd2_apply_incremental(
     for keys in the batch (broadcast-able key set at typical batch
     sizes); one window shuffle over the batch.
 
-    ``check_order=False`` skips the eager ordering-precondition probe
-    (optimization r14, guide §5 'the driver should do almost no data
-    work'): the probe is a driver-side ``count()`` that evaluates the
-    ENTIRE dim lineage at call time — a full extra SCD2 window pass
-    per call. Callers whose batch is late-proof BY CONSTRUCTION (e.g.
-    tpcdi_batch_e2e shifts every batch date span+1 days past max
-    history eff) may skip it; default stays on for arbitrary inputs.
+    ``check_order=False`` skips the eager ordering-precondition probe:
+    the probe is a driver-side ``count()`` that evaluates the ENTIRE
+    dim lineage at call time — a full extra SCD2 window pass per call,
+    data work the driver does before the plan even runs. Callers whose
+    batch is late-proof BY CONSTRUCTION (e.g. tpcdi_batch_e2e shifts
+    every batch date span+1 days past max history eff) may skip it;
+    default stays on for arbitrary inputs.
     """
     date_type = dict(dim.dtypes)["effective_date"]
     wb = Window.partitionBy(natural_key).orderBy(eff_col, tiebreak)
