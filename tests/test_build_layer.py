@@ -1,10 +1,18 @@
 """The build layer: what it costs to construct a plan, before any of it runs.
 
-Every PySpark ``F.*`` call is about three py4j round trips to the JVM,
-so helpers that generate dozens of columns write them as SQL text, one
+A PySpark ``F.*`` function or ``Column`` method makes py4j round trips
+to the JVM. PySpark's call-site capture adds about ten to each
+(``F.col("id") + 1`` makes 24 with it, 4 without); ``get_spark`` turns
+it off (``spark.python.sql.dataFrameDebugging.enabled=false``).
+Helpers that generate dozens of columns write them as SQL text, one
 round trip per expression. These tests hold the round-trip budgets of
-those helpers and check that the SQL text builds the same optimized
-plan as the ``F.*`` form it replaced.
+those helpers and of a whole warehouse-load build, check that the SQL
+text builds the same optimized plan as the ``F.*`` form it replaced,
+and check what a runtime error still reports with the capture off.
+
+``plans._util.t()`` infers each parquet file's schema once per process;
+its memo is checked here: a repeated read runs no Spark job, and a
+rewritten file is inferred again.
 
 Connected components runs Spark jobs while its plan is built (one
 eager checkpoint per superstep); its job budget and its ``max_iter``
@@ -14,9 +22,13 @@ contract are checked here too.
 from __future__ import annotations
 
 import re
+import threading
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 
 from tpc_di_etl_using_pyspark_spark.llm.components import connected_components
@@ -25,6 +37,7 @@ from tpc_di_etl_using_pyspark_spark.llm.minhash import (
     minhash_signature,
     shingles,
 )
+from tpc_di_etl_using_pyspark_spark.plans._util import t
 from tpc_di_etl_using_pyspark_spark.plans.registry import all_queries
 from tpc_di_etl_using_pyspark_spark.schemas import FINWIRE_CMP_LAYOUT
 from tpc_di_etl_using_pyspark_spark.sources.fixedwidth import parse_fixed_width
@@ -34,17 +47,27 @@ MAX_MINHASH_ROUND_TRIPS = 200
 MAX_FIXED_WIDTH_ROUND_TRIPS = 40
 # 19 with a label-initialisation checkpoint and a count job per superstep
 MAX_CLUSTER_CC_JOBS = 14
+# a warm build of tpcdi_batch_e2e at sf0.01 takes 1,242; 3,198 with
+# PySpark's call-site capture on and a schema inference per read
+MAX_BATCH_E2E_ROUND_TRIPS = 1_800
 
 
 @contextmanager
 def _round_trips(spark):
-    """Count py4j round trips (gateway client commands) inside the block."""
+    """Count py4j round trips (gateway client commands) inside the block.
+
+    Only this thread's: py4j's finalizer thread sends the release
+    commands of freed JVM handles whenever Python's GC gets to them,
+    which would add earlier work's releases to the count.
+    """
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     n = [0]
 
     def counted(*args, **kwargs):
-        n[0] += 1
+        if threading.get_ident() == caller:
+            n[0] += 1
         return send(*args, **kwargs)
 
     client.send_command = counted
@@ -52,6 +75,21 @@ def _round_trips(spark):
         yield n
     finally:
         client.send_command = send
+
+
+@contextmanager
+def _jobs(spark, name):
+    """Count the Spark jobs started inside the block (by job group)."""
+    sc = spark.sparkContext
+    group = f"build-layer-{name}"
+    n = [0]
+    sc.setJobGroup(group, group)
+    try:
+        yield n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        n[0] = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _plan(df) -> str:
@@ -166,15 +204,51 @@ def test_connected_components_empty_edges(spark):
 
 
 def test_cluster_cc_job_budget(spark, sf_dir, tmp_path):
-    sc = spark.sparkContext
-    group = f"build-layer-{tmp_path.name}"
     spark.catalog.clearCache()
-    sc.setJobGroup(group, group)
-    try:
+    with _jobs(spark, tmp_path.name) as jobs:
         df = all_queries()["dedup_cluster_cc"](spark, sf_dir)
         df.write.mode("overwrite").format("noop").save()
+    assert jobs[0] <= MAX_CLUSTER_CC_JOBS, f"dedup_cluster_cc ran {jobs[0]} jobs"
+
+
+def test_parquet_schema_inferred_once(spark, tmp_path):
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), tmp_path / "tbl.parquet")
+    with _jobs(spark, f"{tmp_path.name}-first") as first:
+        schema = t(spark, str(tmp_path), "tbl").schema
+    with _jobs(spark, f"{tmp_path.name}-again") as again:
+        df = t(spark, str(tmp_path), "tbl")
+    assert first[0] >= 1  # Spark's inference job
+    assert again[0] == 0, f"the second read ran {again[0]} jobs"
+    assert df.schema == schema
+
+
+def test_parquet_schema_follows_a_rewrite(spark, tmp_path):
+    path = tmp_path / "tbl.parquet"
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
+    assert t(spark, str(tmp_path), "tbl").dtypes == [("k", "bigint")]
+    pq.write_table(pa.table({"k": pa.array(["a", "bc", "def"])}), path)
+    df = t(spark, str(tmp_path), "tbl")
+    assert df.dtypes == [("k", "string")]
+    assert sorted(r.k for r in df.collect()) == ["a", "bc", "def"]
+
+
+def test_batch_e2e_round_trip_budget(spark, sf_dir):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    op = all_queries()["tpcdi_batch_e2e"]
+    op(spark, sf_dir)  # warm: the schema memo and the JVM's caches
+    with _round_trips(spark) as n:
+        op(spark, sf_dir)
+    assert n[0] <= MAX_BATCH_E2E_ROUND_TRIPS, f"{n[0]} py4j round trips"
+
+
+def test_divide_by_zero_keeps_its_error_condition(spark):
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(ArithmeticException) as err:
+            spark.range(2).select(F.lit(1) / F.col("id")).collect()
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= MAX_CLUSTER_CC_JOBS, f"dedup_cluster_cc ran {jobs} jobs"
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    assert err.value.getSqlState() == "22012"
+    assert [c.fragment() for c in err.value.getQueryContext()] == ["divide"]

@@ -1,4 +1,4 @@
-"""Round-9 regex-anchor and case-mapping edge tests.
+"""Regex-anchor and case-mapping edge tests.
 
 Motivated by the r9 continuation probe (SURVEY §7.4k): Java's
 non-multiline ``$`` matches before a FINAL line terminator — and Java

@@ -417,11 +417,13 @@ def test_batch_e2e_stage_task_budget(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         spark.catalog.clearCache()
-    tracker = sc.statusTracker()
+    # the tasks of every stage each job lists, skipped ones included;
+    # read from the job records because the status store drops stage
+    # records (skipped stages first) once it holds more than
+    # spark.ui.retainedStages of them, as a long test session does
+    store = sc._jsc.sc().statusStore()
     tasks = sum(
-        tracker.getStageInfo(s).numTasks
-        for j in tracker.getJobIdsForGroup(group)
-        for s in tracker.getJobInfo(j).stageIds
+        store.job(j).numTasks() for j in sc.statusTracker().getJobIdsForGroup(group)
     )
     assert tasks <= MAX_BATCH_E2E_STAGE_TASKS, f"tpcdi_batch_e2e ran {tasks} tasks"
 

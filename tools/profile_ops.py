@@ -11,16 +11,20 @@ Each op also gets the number of generated classes Spark compiled
 (codegen cache misses), for the warm-up (including the plan dump's
 build) and for each timed run. The session caches compiled classes,
 so a timed run that compiles anything has generated code that differs
-per call. And each gets the py4j round trips its build made (the op
-function call that returns the DataFrame, before anything runs), for
-the warm-up and for each timed run.
+per call. And each gets what its build cost (the op function call
+that returns the DataFrame, before anything runs), for the warm-up and
+for each timed run: the py4j round trips the calling thread made (py4j
+sends the release commands of freed JVM handles from its own thread,
+whenever Python's GC gets to them; those are left out) and the Spark
+jobs the build ran (eager actions such as first(), count() or a
+checkpoint), counted by a job group around the call.
 
 Usage:
   python tools/profile_ops.py [--runs N] [--tag r13] [--suffix before]
                               [--no-plans] op1 op2 ...
 Prints one JSON line: {"timings": {"op": sec, ...}, "compiles":
 {"op": {"warmup": n, "timed": [n, ...]}, ...}, "py4j_calls": {same
-shape}} plus loadavg bracket.
+shape}, "build_jobs": {same shape}} plus loadavg bracket.
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ import json
 import os
 import statistics
 import sys
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -76,19 +81,23 @@ def main() -> None:
     os.makedirs(plan_dir, exist_ok=True)
 
     compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-    # py4j round trips: every command the gateway client sends
-    client = spark.sparkContext._gateway._gateway_client
+    # py4j round trips: every command this thread sends
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
     send = client.send_command
+    caller = threading.get_ident()
     sent = [0]
 
     def counted(*a, **kw):
-        sent[0] += 1
+        if threading.get_ident() == caller:
+            sent[0] += 1
         return send(*a, **kw)
 
     client.send_command = counted
     out: dict[str, float] = {}
     compiles: dict[str, dict] = {}
     py4j_calls: dict[str, dict] = {}
+    build_jobs: dict[str, dict] = {}
     for op in args.ops:
         fn = queries[op]
         spark.catalog.clearCache()
@@ -101,27 +110,33 @@ def main() -> None:
         runs = []
         run_compiles = []
         run_py4j = []
+        run_jobs = []
         for i in range(args.runs + 1):  # first run is the warm-up
             if not args.bench_protocol:
                 spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"{op} run{i}")
+            group = f"profile-build-{op}-{i}"
+            sc.setJobGroup(group, f"{op} run{i} build")
             t0 = time.perf_counter()
             n0 = sent[0]
             df = fn(spark, sf_dir)
             run_py4j.append(sent[0] - n0)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            run_jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            sc.setJobDescription(f"{op} run{i}")
             df.write.mode("overwrite").format("noop").save()
             if i > 0:
                 runs.append(time.perf_counter() - t0)
             c1 = compiled.getCount()
             run_compiles.append(c1 - c0)
             c0 = c1
-        spark.sparkContext.setJobDescription(None)
+        sc.setJobDescription(None)
         out[op] = round(statistics.median(runs), 3)
         compiles[op] = {"warmup": run_compiles[0], "timed": run_compiles[1:]}
         py4j_calls[op] = {"warmup": run_py4j[0], "timed": run_py4j[1:]}
+        build_jobs[op] = {"warmup": run_jobs[0], "timed": run_jobs[1:]}
         print(
             f"#   {op}: {out[op]}  {[round(r, 3) for r in runs]}  compiles {run_compiles}"
-            f"  py4j {run_py4j}",
+            f"  py4j {run_py4j}  build jobs {run_jobs}",
             file=sys.stderr,
         )
 
@@ -131,6 +146,7 @@ def main() -> None:
                 "timings": out,
                 "compiles": compiles,
                 "py4j_calls": py4j_calls,
+                "build_jobs": build_jobs,
                 "loadavg_start": load0,
                 "loadavg_end": round(os.getloadavg()[0], 2),
                 "sf_dir": sf_dir,

@@ -1,23 +1,23 @@
-"""Explicit StructType schemas (SURVEY §1.3: schema-on-read, never infer).
+"""Explicit StructType schemas for text and CSV sources.
 
-Two groups:
+Parquet carries its schema in each file's footer: ``plans._util.t()``
+infers it from there, once per file per process, and nothing here
+restates it. Explicit StructTypes are for sources with no schema of
+their own:
 
-1. The driver test tables (FIXTURES.md — extracted from parquet
-   footers; parquet carries its own schema so these are for CSV
-   round-trips and validation).
+1. The delimited-text copies of two driver tables (``NATION``,
+   ``CUSTOMER``) that the CSV scan ops in ``plans/core_scans.py`` write
+   and read back.
 2. TPC-DI-shaped source-file schemas for the parity pipelines in
    ``tpcdi/`` — FINWIRE fixed-width record layouts and the flattened
    CustomerMgmt action schema. [SPEC: TPC-DI v1.1.0 source file
-   layouts]; /root/reference is empty so no file:line citation is
-   possible (SURVEY.md §0).
+   layouts]; SURVEY.md §0 says why there is no file:line citation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -30,8 +30,6 @@ from pyspark.sql.types import (
 def _st(*fields: tuple) -> StructType:
     return StructType([StructField(n, t, True) for n, t in fields])
 
-
-REGION = _st(("r_regionkey", IntegerType()), ("r_name", StringType()))
 
 NATION = _st(
     ("n_nationkey", IntegerType()),
@@ -46,81 +44,6 @@ CUSTOMER = _st(
     ("c_acctbal", DoubleType()),
     ("c_mktsegment", StringType()),
 )
-
-SUPPLIER = _st(
-    ("s_suppkey", LongType()),
-    ("s_name", StringType()),
-    ("s_nationkey", IntegerType()),
-    ("s_acctbal", DoubleType()),
-)
-
-PART = _st(
-    ("p_partkey", LongType()),
-    ("p_name", StringType()),
-    ("p_brand", StringType()),
-    ("p_type", StringType()),
-    ("p_size", IntegerType()),
-    ("p_retailprice", DoubleType()),
-)
-
-ORDERS = _st(
-    ("o_orderkey", LongType()),
-    ("o_custkey", LongType()),
-    ("o_orderstatus", StringType()),
-    ("o_totalprice", DoubleType()),
-    ("o_orderdate", TimestampType()),
-    ("o_orderpriority", StringType()),
-)
-
-LINEITEM = _st(
-    ("l_orderkey", LongType()),
-    ("l_partkey", LongType()),
-    ("l_suppkey", LongType()),
-    ("l_linenumber", IntegerType()),
-    ("l_quantity", DoubleType()),
-    ("l_extendedprice", DoubleType()),
-    ("l_discount", DoubleType()),
-    ("l_tax", DoubleType()),
-    ("l_returnflag", StringType()),
-    ("l_linestatus", StringType()),
-    ("l_shipdate", TimestampType()),
-)
-
-EVENTS = _st(
-    ("event_id", LongType()),
-    ("ts", TimestampType()),
-    ("user_id", LongType()),
-    ("event_type", StringType()),
-    ("value", DoubleType()),
-    ("props", StringType()),
-)
-
-DOCUMENTS = _st(
-    ("doc_id", LongType()),
-    ("text", StringType()),
-    ("lang", StringType()),
-    ("source", StringType()),
-    ("n_chars", LongType()),
-)
-
-EMBEDDINGS = _st(
-    ("vec_id", LongType()),
-    ("embedding", ArrayType(FloatType())),
-    ("label", IntegerType()),
-)
-
-TEST_TABLES = {
-    "region": REGION,
-    "nation": NATION,
-    "customer": CUSTOMER,
-    "supplier": SUPPLIER,
-    "part": PART,
-    "orders": ORDERS,
-    "lineitem": LINEITEM,
-    "events": EVENTS,
-    "documents": DOCUMENTS,
-    "embeddings": EMBEDDINGS,
-}
 
 # --- TPC-DI-shaped source schemas (parity pipelines, tpcdi/) ---------------
 

@@ -112,6 +112,21 @@ def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -
         # of 0-12. explain() still shows the stage numbers; stack
         # traces show GeneratedIterator.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # PySpark wraps every Column method and F.* function in a
+        # call-site capture: per call it reads
+        # spark.sql.stackTracesInDataFrameContext and sets and clears
+        # the JVM's PySparkCurrentOrigin, about ten py4j round trips
+        # (F.col("id") + 1 makes 24 with it, 4 without). Off, a warm
+        # build of tpcdi_batch_e2e at sf0.01 makes 1,242 round trips
+        # instead of 3,212. The trade-off: a runtime error (an ANSI
+        # DIVIDE_BY_ZERO, say) keeps its exception class, condition
+        # and SQLSTATE, and its DataFrame context still names the
+        # function (as the JVM's "divide", not "__truediv__"), but the
+        # call site reads as a JVM reflection frame instead of
+        # file.py:line. PySpark reads the flag once per Python process,
+        # from the first active session, so it holds for sessions this
+        # function starts; a session built elsewhere keeps its own.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     # a no-op once the class is initialized
