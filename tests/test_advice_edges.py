@@ -306,7 +306,7 @@ def test_vec_quantize_int8_null_element_lossless(spark, tmp_path):
     contract the round-6 advisor flagged as silently violated."""
     import duckdb as _duckdb
 
-    from tpc_di_etl_using_pyspark_spark.plans.llm import ORACLES, QUERIES
+    from tpc_di_etl_using_pyspark_spark.plans.registry import all_oracles, all_queries
 
     df = spark.createDataFrame(
         [
@@ -322,7 +322,7 @@ def test_vec_quantize_int8_null_element_lossless(spark, tmp_path):
 
     got = {
         r["vec_id"]: (r["q8"], r["dim"])
-        for r in QUERIES["vec_quantize_int8"](spark, d).collect()
+        for r in all_queries()["vec_quantize_int8"](spark, d).collect()
     }
     con = _duckdb.connect()
     con.execute(
@@ -330,7 +330,7 @@ def test_vec_quantize_int8_null_element_lossless(spark, tmp_path):
     )
     want = {
         vid: (q8, dim)
-        for vid, q8, dim in con.sql(ORACLES["vec_quantize_int8"]).fetchall()
+        for vid, q8, dim in con.sql(all_oracles()["vec_quantize_int8"]).fetchall()
     }
     assert got == want
     # lossless: component count == dim whenever the embedding is non-NULL

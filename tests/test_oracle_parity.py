@@ -5,6 +5,10 @@ from __future__ import annotations
 
 import pytest
 
+# llm is imported ahead of the registry so that, run on its own, this file
+# still registers a late module first and the module-order test bites
+from tpc_di_etl_using_pyspark_spark.plans import llm  # noqa: F401
+from tpc_di_etl_using_pyspark_spark.plans import registry
 from tpc_di_etl_using_pyspark_spark.plans.registry import all_oracles, all_queries
 
 from .conftest import assert_parity
@@ -34,6 +38,34 @@ def test_no_rows_only_ops_remain():
         f"rows-only ops appeared: {sorted(set(_QUERIES) - set(_ORACLES))}"
     )
     assert len(_QUERIES) == 291
+
+
+def test_duplicate_op_id_raises_naming_both_modules():
+    """A second registration of an op id fails at decoration time,
+    names the module that holds the id and the one that tried to take
+    it, and leaves the registry as it was."""
+    name, first = next(iter(_QUERIES.items()))
+
+    def clash(spark, d):
+        raise AssertionError("never registered")
+
+    with pytest.raises(ValueError) as err:
+        registry.op(name, "SELECT 1")(clash)
+    assert first.__module__ in str(err.value)
+    assert clash.__module__ in str(err.value)
+    assert all_queries() == _QUERIES
+    assert all_oracles() == _ORACLES
+
+
+def test_ops_come_back_in_module_order():
+    """Ops are grouped by plan module in registry._MODULES order,
+    whatever order the modules were first imported in."""
+    rank = [
+        registry._MODULES.index(fn.__module__.rsplit(".", 1)[-1])
+        for fn in _QUERIES.values()
+    ]
+    assert rank == sorted(rank)
+    assert list(_ORACLES) == list(_QUERIES)
 
 
 def test_approx_selfcheck_flags_true(spark, sf_dir):

@@ -349,7 +349,6 @@ def test_batch_e2e_composition_and_plan(spark, sf_dir):
     composing historical load + incremental apply + SK lookup + audit
     into one dataflow is free — phase boundaries are not barriers."""
     from tpc_di_etl_using_pyspark_spark.plans.tpcdi_ops import (
-        QUERIES,
         tpcdi_batch_e2e,
         tpcdi_scd2_incremental,
     )

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate OPERATORS.md — the op-by-op coverage matrix the registry
 declares (one row per ``queries()`` entry, with implementation
-file:line, oracle kind, and first docstring line)."""
+file:line and first docstring line)."""
 
 from __future__ import annotations
 
@@ -28,7 +28,7 @@ SECTIONS = {
 
 
 def main() -> None:
-    qs, oracles = registry.all_queries(), registry.all_oracles()
+    qs = registry.all_queries()
     groups: dict[str, list] = collections.OrderedDict()
     for name, fn in sorted(qs.items()):
         mod = fn.__module__.rsplit(".", 1)[-1]
@@ -38,36 +38,30 @@ def main() -> None:
             line = 0
         doc = (fn.__doc__ or "").strip().splitlines()
         groups.setdefault(mod, []).append(
-            (
-                name,
-                mod,
-                line,
-                "SQL (hash-matched)" if name in oracles else "rows-only",
-                (doc[0] if doc else "").replace("|", "\\|"),
-            )
+            (name, mod, line, (doc[0] if doc else "").replace("|", "\\|"))
         )
     n = sum(len(v) for v in groups.values())
     out = [
         "# OPERATORS — registered capability surface (auto-generated)",
         "",
-        "One row per `queries()` op (`__spark_entry__.py`). `SQL` ops are",
-        "hash-compared against the DuckDB oracle at sf0.01 by the driver;",
-        "`rows-only` ops get the weaker rows check (hash-seeded / approximate /",
-        "streaming semantics). Regenerate with `python tools/gen_operators_md.py`.",
+        "One row per `queries()` op (`__spark_entry__.py`). Every op is",
+        "registered with a DuckDB oracle (`oracle_sql()`) and hash-compared",
+        "against it at sf0.01 by the driver. Regenerate with",
+        "`python tools/gen_operators_md.py`.",
         "",
-        f"**Total: {n} ops ({len(oracles)} SQL-oracled, {n - len(oracles)} rows-only).**",
+        f"**Total: {n} ops.**",
         "",
     ]
     for mod, rows in groups.items():
         out += [
             f"## {SECTIONS.get(mod, mod)}",
             "",
-            "| Op | Implementation | Oracle | Semantics |",
-            "| --- | --- | --- | --- |",
+            "| Op | Implementation | Semantics |",
+            "| --- | --- | --- |",
         ]
         out += [
-            f"| `{name}` | `plans/{m}.py:{line}` | {oracle} | {doc} |"
-            for name, m, line, oracle, doc in rows
+            f"| `{name}` | `plans/{m}.py:{line}` | {doc} |"
+            for name, m, line, doc in rows
         ]
         out.append("")
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md")

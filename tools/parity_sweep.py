@@ -114,9 +114,6 @@ def main() -> None:
             smul = sorted(
                 ",".join(canon(r[c]) for c in scols) for r in df.collect()
             )
-            if op not in oracles:
-                print(f"[{i + 1}/{len(names)}] {op}: rows-only ({len(smul)})", flush=True)
-                continue
             res = con.sql(oracles[op])
             dcols = sorted(res.columns)
             colidx = {c: j for j, c in enumerate(res.columns)}

@@ -1,1 +1,2 @@
-"""Query-plan registry: one (queries, oracles) pair per SURVEY §2 group."""
+"""Query-plan registry: one module per SURVEY §2 group, each op registered
+with its DuckDB oracle by ``registry.op``."""

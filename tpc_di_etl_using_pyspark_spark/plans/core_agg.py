@@ -12,19 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._util import DEC, SQL_DEC, davg, dround, dsum, epoch_s, pz, spread_scan, sql_davg, sql_dround, sql_dsum, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .registry import op
 
 
 FLAGSHIP_SQL = f"""
@@ -42,7 +30,7 @@ GROUP BY l_returnflag, l_linestatus
 """
 
 
-@_op("agg_groupby_basic", FLAGSHIP_SQL)
+@op("agg_groupby_basic", FLAGSHIP_SQL)
 def agg_groupby_basic(spark: SparkSession, d: str) -> DataFrame:
     """Pricing summary: scan→filter→derive→agg (SURVEY §7.2).
 
@@ -68,7 +56,7 @@ def agg_groupby_basic(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_global",
     f"""SELECT COUNT(*) AS n_rows,
                {sql_dsum('l_extendedprice', 'total_price')},
@@ -88,7 +76,7 @@ def agg_global(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_count_distinct",
     """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers,
               COUNT(*) AS n_orders
@@ -103,7 +91,7 @@ def agg_count_distinct(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_approx_count_distinct",
     """SELECT event_type,
               CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
@@ -133,7 +121,7 @@ def agg_approx_count_distinct(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_conditional",
     """SELECT o_orderstatus,
               CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
@@ -158,7 +146,7 @@ def agg_conditional(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_having",
     """SELECT o_custkey, COUNT(*) AS n_orders FROM orders
        GROUP BY o_custkey HAVING COUNT(*) > 8""",
@@ -173,7 +161,7 @@ def agg_having(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_first_last",
     """WITH k AS (
          SELECT user_id, value,
@@ -229,7 +217,7 @@ def agg_first_last(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_rollup",
     """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year, o_orderstatus,
               CAST(GROUPING(CAST(year(o_orderdate) AS INTEGER)) * 2
@@ -263,7 +251,7 @@ def agg_rollup(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_cube",
     """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year, o_orderstatus,
               CAST(GROUPING(CAST(year(o_orderdate) AS INTEGER)) * 2
@@ -285,7 +273,7 @@ def agg_cube(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_grouping_sets",
     """SELECT o_orderpriority, o_orderstatus,
               CAST(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus) AS INTEGER) AS gid,
@@ -310,7 +298,7 @@ def agg_grouping_sets(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_stats",
     f"""SELECT l_returnflag,
               {sql_dround('stddev_samp(l_quantity)', 2)} AS sd_qty,
@@ -345,7 +333,7 @@ def agg_stats(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_percentile",
     """SELECT l_returnflag,
               quantile_cont(l_extendedprice, 0.25) + 0.0 AS p25,
@@ -370,7 +358,7 @@ def agg_percentile(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_pivot",
     """SELECT o_orderstatus,
               CAST(SUM(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END)
@@ -411,7 +399,7 @@ def agg_pivot(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_unpivot",
     f"""WITH wide AS (
          SELECT l_returnflag,
@@ -437,7 +425,7 @@ def agg_unpivot(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_collect_sorted",
     """SELECT o_custkey,
               COALESCE(
@@ -465,7 +453,7 @@ def agg_collect_sorted(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_approx_percentile",
     """SELECT l_returnflag,
               quantile_cont(l_extendedprice, 0.25) + 0.0 AS p25,
@@ -520,7 +508,7 @@ def agg_approx_percentile(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_bool",
     """SELECT o_orderstatus,
               bool_and(o_totalprice > 1000) AS all_over_1k,
@@ -540,7 +528,7 @@ def agg_bool(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_string_concat_group",
     """SELECT o_custkey,
               COALESCE(string_agg(DISTINCT o_orderpriority, '|'
@@ -567,7 +555,7 @@ def agg_string_concat_group(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_weighted_avg",
     f"""SELECT l_returnflag,
                CAST(ROUND(CAST(
@@ -602,7 +590,7 @@ def agg_weighted_avg(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_pivot_dynamic",
     """SELECT o_orderstatus,
               CAST(COUNT(*) FILTER (WHERE o_orderpriority = '1-URGENT') AS BIGINT) AS "1-URGENT",
@@ -628,7 +616,7 @@ def agg_pivot_dynamic(spark: SparkSession, d: str) -> DataFrame:
     return o.groupBy("o_orderstatus").pivot("o_orderpriority", sorted(vals)).count()
 
 
-@_op(
+@op(
     "agg_median_mode",
     """WITH m AS (
          SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
@@ -677,7 +665,7 @@ def agg_median_mode(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_regression_exact",
     f"""WITH s AS (
          SELECT l_returnflag,
@@ -740,7 +728,7 @@ def agg_regression_exact(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sketch_hll_partition_merge",
     """SELECT event_type,
               CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
@@ -777,7 +765,7 @@ def sketch_hll_partition_merge(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sketch_approx_topk",
     """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
        FROM events GROUP BY event_type""",
@@ -801,7 +789,7 @@ def sketch_approx_topk(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_histogram_fixed",
     """WITH b AS (
          SELECT CAST(FLOOR(o_totalprice / 50000.0) AS BIGINT) AS bin_id,
@@ -843,7 +831,7 @@ def agg_histogram_fixed(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_zscore_anomaly",
     f"""WITH s AS (
          SELECT user_id,
@@ -917,7 +905,7 @@ def win_zscore_anomaly(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_transpose_matrix",
     """SELECT 'n_orders' AS key,
               CAST(count_if(o_orderstatus = 'F') AS DOUBLE) AS F,
@@ -951,7 +939,7 @@ def agg_transpose_matrix(spark: SparkSession, d: str) -> DataFrame:
     return src.transpose()
 
 
-@_op(
+@op(
     "sql_groupby_all",
     """SELECT l_returnflag, l_linestatus,
               CAST(SUM(CAST(l_quantity AS DECIMAL(25,6))) AS DOUBLE) AS sum_qty,
@@ -973,7 +961,7 @@ def sql_groupby_all(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_moments_exact",
     """WITH s AS (
          SELECT o_orderstatus,
@@ -1043,7 +1031,7 @@ def agg_moments_exact(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_filter_clause",
     """SELECT o_orderstatus,
               COUNT(*) AS n_all,
@@ -1072,7 +1060,7 @@ def agg_filter_clause(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_bitmap_distinct",
     """SELECT o_orderstatus, COUNT(DISTINCT o_custkey) AS n_customers
        FROM orders GROUP BY o_orderstatus""",
@@ -1097,7 +1085,7 @@ def agg_bitmap_distinct(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_count_distinct_multi",
     """SELECT l_returnflag,
               COUNT(DISTINCT CASE WHEN l_linestatus IS NOT NULL
@@ -1154,7 +1142,7 @@ FROM est
 """
 
 
-@_op("sketch_count_min", _CMS_SQL)
+@op("sketch_count_min", _CMS_SQL)
 def sketch_count_min(spark: SparkSession, d: str) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan) built from
     expressions — depth 4 x width 64 integer counters, md5-derived
@@ -1230,7 +1218,7 @@ FROM hit
 """
 
 
-@_op("sketch_bloom_filter", _BLOOM_SQL)
+@op("sketch_bloom_filter", _BLOOM_SQL)
 def sketch_bloom_filter(spark: SparkSession, d: str) -> DataFrame:
     """Bloom filter (1024 bits, 4 md5-derived hashes) over the corpus
     vocabulary, built from expressions and probed with every member
@@ -1299,7 +1287,7 @@ def sketch_bloom_filter(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "agg_mad_anomaly",
     """WITH m AS (
          SELECT user_id, value,

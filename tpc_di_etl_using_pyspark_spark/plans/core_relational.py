@@ -12,19 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._util import epoch_s, spread_scan, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .registry import op
 
 
 # --------------------------------------------------------------------------
@@ -32,7 +20,7 @@ def _op(name, oracle=None):
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "project_select",
     "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem",
 )
@@ -43,7 +31,7 @@ def project_select(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "project_derive",
     """SELECT l_orderkey, l_linenumber,
               l_extendedprice * (1 - l_discount) * (1 + l_tax) AS net_price,
@@ -64,7 +52,7 @@ def project_derive(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "project_rename_drop",
     """SELECT c_custkey AS customer_id, c_name AS customer_name,
               c_mktsegment AS segment
@@ -81,7 +69,7 @@ def project_rename_drop(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "filter_simple",
     """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
        WHERE o_orderstatus = 'F'""",
@@ -95,7 +83,7 @@ def filter_simple(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "filter_compound",
     """SELECT l_orderkey, l_linenumber, l_quantity, l_discount FROM lineitem
        WHERE l_discount BETWEEN 0.03 AND 0.07 AND l_quantity < 24
@@ -112,7 +100,7 @@ def filter_compound(spark: SparkSession, d: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_discount")
 
 
-@_op(
+@op(
     "filter_null",
     """SELECT c_custkey,
               CASE WHEN c_acctbal < 0 THEN NULL ELSE c_acctbal END AS bal,
@@ -134,7 +122,7 @@ def filter_null(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "filter_like_regexp",
     """SELECT p_partkey, p_name, p_type FROM part
        WHERE p_type LIKE '%BRASS%' OR regexp_matches(p_name, '^[a-g]')""",
@@ -152,7 +140,7 @@ def filter_like_regexp(spark: SparkSession, d: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "join_inner_equi",
     """SELECT o.o_orderkey, c.c_name, o.o_totalprice
        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey""",
@@ -165,7 +153,7 @@ def join_inner_equi(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_multi_key",
     """WITH g AS (
          SELECT l_returnflag, l_linestatus,
@@ -186,7 +174,7 @@ def join_multi_key(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_left_outer",
     """SELECT c.c_custkey, c.c_name, o.n_orders
        FROM customer c LEFT JOIN (
@@ -202,7 +190,7 @@ def join_left_outer(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_right_full",
     """SELECT n.n_name, s.s_name, s.s_acctbal
        FROM nation n FULL JOIN supplier s ON n.n_nationkey = s.s_nationkey""",
@@ -215,7 +203,7 @@ def join_right_full(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_broadcast",
     """SELECT r.r_name,
               CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(25,6)))
@@ -255,7 +243,7 @@ def join_broadcast(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_semi",
     """SELECT c_custkey, c_name FROM customer c
        WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""",
@@ -266,7 +254,7 @@ def join_semi(spark: SparkSession, d: str) -> DataFrame:
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
-@_op(
+@op(
     "join_anti",
     """SELECT c_custkey, c_name FROM customer c
        WHERE NOT EXISTS (SELECT 1 FROM orders o
@@ -305,7 +293,7 @@ JOIN ver v ON f.o_custkey = v.v_custkey
 """
 
 
-@_op("join_range_between", _RANGE_SQL)
+@op("join_range_between", _RANGE_SQL)
 def join_range_between(spark: SparkSession, d: str) -> DataFrame:
     """SCD2-style temporal join: fact date in [eff, next-eff) per key.
 
@@ -355,7 +343,7 @@ FROM p LEFT JOIN LATERAL (
 """
 
 
-@_op("join_asof_latest", _ASOF_SQL)
+@op("join_asof_latest", _ASOF_SQL)
 def join_asof_latest(spark: SparkSession, d: str) -> DataFrame:
     """As-of join: for each purchase, the latest view at-or-before it.
 
@@ -386,7 +374,7 @@ def join_asof_latest(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_theta_inequality",
     """SELECT a.s_suppkey AS low_supp, b.s_suppkey AS high_supp,
               b.s_acctbal - a.s_acctbal AS bal_gap
@@ -409,7 +397,7 @@ def join_theta_inequality(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_self_versioning",
     """WITH v AS (
          SELECT o_custkey, o_orderkey, o_totalprice,
@@ -438,7 +426,7 @@ def join_self_versioning(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_cross",
     """SELECT r.r_name, n.n_name
        FROM region r CROSS JOIN (
@@ -456,7 +444,7 @@ def join_cross(spark: SparkSession, d: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "sort_multi",
     """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
        ORDER BY o_orderstatus ASC, o_totalprice DESC NULLS LAST, o_orderkey""",
@@ -474,7 +462,7 @@ def sort_multi(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "limit_n",
     """SELECT o_orderkey, o_totalprice FROM orders
        ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""",
@@ -489,7 +477,7 @@ def limit_n(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "topk_per_group",
     """SELECT o_custkey, o_orderkey, o_totalprice, rk FROM (
          SELECT o_custkey, o_orderkey, o_totalprice,
@@ -513,7 +501,7 @@ def topk_per_group(spark: SparkSession, d: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "set_union_all",
     """SELECT o_orderkey, o_orderstatus FROM orders WHERE o_orderstatus = 'F'
        UNION ALL
@@ -527,7 +515,7 @@ def set_union_all(spark: SparkSession, d: str) -> DataFrame:
     return a.unionByName(b)
 
 
-@_op(
+@op(
     "set_union_distinct",
     """SELECT n_regionkey AS key FROM nation
        UNION
@@ -540,7 +528,7 @@ def set_union_distinct(spark: SparkSession, d: str) -> DataFrame:
     return n.unionByName(r).distinct()
 
 
-@_op(
+@op(
     "set_intersect",
     """SELECT c_custkey AS key FROM customer
        INTERSECT
@@ -553,7 +541,7 @@ def set_intersect(spark: SparkSession, d: str) -> DataFrame:
     return c.intersect(o)
 
 
-@_op(
+@op(
     "set_except",
     """SELECT o_custkey AS key FROM orders
        EXCEPT ALL
@@ -567,7 +555,7 @@ def set_except(spark: SparkSession, d: str) -> DataFrame:
     return allk.exceptAll(fk)
 
 
-@_op(
+@op(
     "dedup_exact",
     "SELECT DISTINCT user_id, event_type FROM events",
 )
@@ -578,7 +566,7 @@ def dedup_exact(spark: SparkSession, d: str) -> DataFrame:
     return t(spark, d, "events").select("user_id", "event_type").dropDuplicates()
 
 
-@_op(
+@op(
     "dedup_latest_by_key",
     """SELECT user_id, event_type, event_id, value FROM (
          SELECT user_id, event_type, event_id, value,
@@ -600,7 +588,7 @@ def dedup_latest_by_key(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_skew_salted",
     """SELECT l.l_orderkey, l.l_linenumber, l.l_extendedprice,
               o.o_custkey, o.o_orderdate
@@ -626,7 +614,7 @@ def join_skew_salted(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sql_api_revenue_ranking",
     """WITH revenue AS (
          SELECT l.l_orderkey,
@@ -666,7 +654,7 @@ def sql_api_revenue_ranking(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "set_symmetric_diff",
     """SELECT 'only_f' AS side, o_custkey FROM (
          SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
@@ -689,7 +677,7 @@ def set_symmetric_diff(spark: SparkSession, d: str) -> DataFrame:
     return only_f.unionByName(only_o)
 
 
-@_op(
+@op(
     "sql_exists_decorrelated",
     """SELECT c_custkey, c_mktsegment FROM customer c
        WHERE EXISTS (SELECT 1 FROM orders o
@@ -717,7 +705,7 @@ def sql_exists_decorrelated(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sql_lateral_topk",
     """SELECT n.n_name, o.o_orderkey, o.o_totalprice
        FROM nation n,
@@ -751,7 +739,7 @@ def sql_lateral_topk(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_asof_tolerance",
     """WITH p AS (
          SELECT event_id, user_id, (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS sec
@@ -815,7 +803,7 @@ def join_asof_tolerance(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sql_recursive_hierarchy",
     """WITH RECURSIVE h(emp_id, mgr_id, depth, chain) AS (
          SELECT c_custkey AS emp_id, c_custkey // 10 AS mgr_id,
@@ -854,7 +842,7 @@ def sql_recursive_hierarchy(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_null_safe",
     """WITH l AS (SELECT CASE WHEN o_orderkey % 7 = 0 THEN NULL
                               ELSE o_orderkey % 5 END AS k
@@ -893,7 +881,7 @@ def join_null_safe(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_interval_overlap",
     """WITH i AS (
          SELECT CAST(l_shipdate AS DATE) AS s,
@@ -963,7 +951,7 @@ def join_interval_overlap(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sql_pipe_syntax",
     """SELECT l_returnflag, l_linestatus,
               CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -990,7 +978,7 @@ def sql_pipe_syntax(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sort_limit_offset",
     """SELECT o_orderkey, o_totalprice FROM orders
        ORDER BY o_totalprice DESC, o_orderkey LIMIT 10 OFFSET 10""",
@@ -1009,7 +997,7 @@ def sort_limit_offset(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_bloom_runtime_filter",
     """SELECT l_orderkey, l_quantity, o_totalprice
        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
@@ -1073,7 +1061,7 @@ def join_bloom_runtime_filter(spark: SparkSession, d: str) -> DataFrame:
     return df
 
 
-@_op(
+@op(
     "sql_scalar_subquery_corr",
     """SELECT c_custkey, c_acctbal,
               (SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(25,6))) AS DOUBLE)

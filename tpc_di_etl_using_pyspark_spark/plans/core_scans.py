@@ -18,19 +18,7 @@ from .. import schemas
 from ..sources.fixedwidth import read_fixed_width
 from ..sources.xmlflatten import flatten_customer_mgmt
 from ._util import t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .registry import op
 
 
 def _scratch(d: str, op: str) -> str:
@@ -44,7 +32,7 @@ def _scratch(d: str, op: str) -> str:
     return path
 
 
-@_op(
+@op(
     "scan_parquet",
     "SELECT l_orderkey, l_linenumber, l_quantity, CAST(l_shipdate AS DATE) AS ship_date "
     "FROM lineitem WHERE l_quantity > 30",
@@ -110,7 +98,7 @@ def _bs_unescape(df: DataFrame) -> DataFrame:
     return _bs_map(df, "\\\\", "\\")
 
 
-@_op("scan_csv_delim", "SELECT * FROM nation")
+@op("scan_csv_delim", "SELECT * FROM nation")
 def scan_csv_delim(spark: SparkSession, d: str) -> DataFrame:
     """Pipe-delimited text, explicit schema [SPEC: flat-file extracts] —
     round-trip must equal the parquet table exactly (incl. whitespace
@@ -126,7 +114,7 @@ def scan_csv_delim(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op("scan_csv_header", "SELECT * FROM customer")
+@op("scan_csv_header", "SELECT * FROM customer")
 def scan_csv_header(spark: SparkSession, d: str) -> DataFrame:
     """Header CSV with typed read [SPEC: Prospect.csv/HR.csv];
     whitespace/NULL-lossless round trip (_CSV_LOSSLESS)."""
@@ -141,7 +129,7 @@ def scan_csv_header(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "scan_text_fixedwidth",
     """SELECT 'CMP' AS rec_type, rtrim(substring(p_name, 1, 60)) AS company_name,
               p_partkey % 10000000000 AS cik, '20100101-120000' AS pts
@@ -182,7 +170,7 @@ def scan_text_fixedwidth(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "scan_xml_flatten",
     # c_last mirrors the writer's XML-invalid-char sanitization: XML
     # 1.0 cannot represent U+0000-U+0008/U+000B/U+000C/U+000E-U+001F
@@ -277,7 +265,7 @@ def scan_xml_flatten(spark: SparkSession, d: str) -> DataFrame:
     return flat.select("action_type", "c_id", "c_last", "acct_id", "acct_tax_status")
 
 
-@_op(
+@op(
     "sink_parquet",
     "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem "
     "WHERE l_returnflag = 'R'",
@@ -295,7 +283,7 @@ def sink_parquet(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-@_op(
+@op(
     "sink_partitioned",
     """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year, COUNT(*) AS n_orders
        FROM orders GROUP BY 1""",
@@ -317,7 +305,7 @@ def sink_partitioned(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sink_table_overwrite_append",
     """SELECT o_orderstatus, COUNT(*) AS n FROM orders
        WHERE o_orderstatus IN ('F', 'O') GROUP BY o_orderstatus""",
@@ -332,7 +320,7 @@ def sink_table_overwrite_append(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.parquet(path).groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
 
 
-@_op("sink_bucketed", "SELECT * FROM orders")
+@op("sink_bucketed", "SELECT * FROM orders")
 def sink_bucketed(spark: SparkSession, d: str) -> DataFrame:
     """Bucketed table sink [100 TB posture: pre-shuffled storage — two
     tables bucketed by the same key join with NO exchange on either
@@ -354,7 +342,7 @@ def sink_bucketed(spark: SparkSession, d: str) -> DataFrame:
     return spark.table(tbl)
 
 
-@_op(
+@op(
     "scan_jsonl",
     "SELECT event_id, user_id, event_type, value, props FROM events",
 )
@@ -370,7 +358,7 @@ def scan_jsonl(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.json(path, schema=schema).select(*cols)
 
 
-@_op("scan_orc", "SELECT n_nationkey, n_name, n_regionkey FROM nation")
+@op("scan_orc", "SELECT n_nationkey, n_name, n_regionkey FROM nation")
 def scan_orc(spark: SparkSession, d: str) -> DataFrame:
     """ORC columnar source (the other first-class columnar format —
     same pushdown/pruning machinery as parquet): write nation as ORC,
@@ -380,7 +368,7 @@ def scan_orc(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.orc(path).select("n_nationkey", "n_name", "n_regionkey")
 
 
-@_op(
+@op(
     "scan_csv_malformed",
     """SELECT CAST(COUNT(*) AS BIGINT) AS n_good,
               CAST(5 AS BIGINT) AS n_corrupt
@@ -440,7 +428,7 @@ def scan_csv_malformed(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "scan_schema_evolution",
     """SELECT o_orderkey, o_totalprice,
               CASE WHEN o_orderkey % 2 = 0 THEN NULL
@@ -467,7 +455,7 @@ def scan_schema_evolution(spark: SparkSession, d: str) -> DataFrame:
     return merged.select("o_orderkey", "o_totalprice", "priority")
 
 
-@_op(
+@op(
     "sink_sorted_clustered",
     """SELECT l_orderkey, l_linenumber, l_shipdate, l_extendedprice
        FROM lineitem WHERE l_returnflag = 'A'""",
@@ -486,7 +474,7 @@ def sink_sorted_clustered(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-@_op(
+@op(
     "scan_binaryfile",
     """SELECT doc_id,
               CAST(strlen(text) + 1 AS BIGINT) AS n_bytes,
@@ -531,7 +519,7 @@ def scan_binaryfile(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "scan_partition_pruned",
     """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
               CAST(COUNT(*) AS BIGINT) AS n_orders,
@@ -576,7 +564,7 @@ def scan_partition_pruned(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "scan_python_datasource",
     """SELECT 'CMP' AS rec_type, rtrim(substring(p_name, 1, 60)) AS company_name,
               p_partkey % 10000000000 AS cik, '20100101-120000' AS pts
@@ -618,7 +606,7 @@ def scan_python_datasource(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "join_dpp_partitioned",
     """SELECT o_orderkey, o_totalprice, CAST(EXTRACT(year FROM o_orderdate) AS INTEGER) AS y
        FROM orders WHERE EXTRACT(year FROM o_orderdate) % 3 = 1""",
@@ -659,7 +647,7 @@ def join_dpp_partitioned(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op("scan_csv_multichar_delim", "SELECT * FROM nation")
+@op("scan_csv_multichar_delim", "SELECT * FROM nation")
 def scan_csv_multichar_delim(spark: SparkSession, d: str) -> DataFrame:
     """Multi-character delimiter CSV (Spark 3.0+/4, SPARK-24540): real
     exports often use '||' to dodge in-field pipes. Lines are
@@ -697,7 +685,7 @@ def scan_csv_multichar_delim(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sink_csv_quoted",
     """SELECT n_nationkey, n_name || '|x"y' AS tricky FROM nation""",
 )
@@ -721,7 +709,7 @@ def sink_csv_quoted(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "scan_recursive_glob",
     """SELECT n_nationkey, n_name FROM nation WHERE n_nationkey % 2 = 0
        UNION ALL
@@ -745,7 +733,7 @@ def scan_recursive_glob(spark: SparkSession, d: str) -> DataFrame:
     return spark.read.option("recursiveFileLookup", "true").parquet(base)
 
 
-@_op(
+@op(
     "sink_python_datasource",
     """SELECT o_orderkey, o_orderstatus, o_totalprice
        FROM orders WHERE o_orderkey % 7 = 0""",
@@ -787,7 +775,7 @@ def sink_python_datasource(spark: SparkSession, d: str) -> DataFrame:
     return back
 
 
-@_op(
+@op(
     "sink_compact_small_files",
     """SELECT CAST(64 AS BIGINT) AS n_input_files,
               CAST(4 AS BIGINT) AS n_output_files,
@@ -861,7 +849,7 @@ def sink_compact_small_files(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sink_merge_upsert",
     # the relational MERGE truth: base rows whose key is not updated,
     # plus the update/insert batch verbatim. Update keys are %40 == 0,

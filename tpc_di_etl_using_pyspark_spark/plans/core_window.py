@@ -13,22 +13,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ._util import DEC, SQL_DEC, dround, epoch_s, pz, t
-
-QUERIES = {}
-ORACLES = {}
+from .registry import op
 
 
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_op(
+@op(
     "win_row_number",
     """SELECT o_custkey, o_orderkey,
               ROW_NUMBER() OVER (PARTITION BY o_custkey
@@ -42,7 +30,7 @@ def win_row_number(spark: SparkSession, d: str) -> DataFrame:
     return o.select("o_custkey", "o_orderkey", F.row_number().over(w).alias("rn"))
 
 
-@_op(
+@op(
     "win_rank_dense",
     """SELECT s_nationkey, s_suppkey, s_acctbal,
               RANK() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC) AS rk,
@@ -62,7 +50,7 @@ def win_rank_dense(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_lead_scd2",
     """SELECT o_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS eff_date,
               COALESCE(LEAD(CAST(o_orderdate AS DATE)) OVER (
@@ -89,7 +77,7 @@ def win_lead_scd2(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_lag_change",
     """SELECT user_id, event_id, value,
               value - LAG(value) OVER (
@@ -109,7 +97,7 @@ def win_lag_change(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_running_sum",
     """SELECT o_custkey, o_orderkey,
               CAST(SUM(CAST(o_totalprice AS DECIMAL(25,6))) OVER (
@@ -135,7 +123,7 @@ def win_running_sum(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_moving_avg",
     """SELECT l_partkey, l_orderkey, l_linenumber,
               CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) OVER w AS DOUBLE)
@@ -160,7 +148,7 @@ def win_moving_avg(spark: SparkSession, d: str) -> DataFrame:
     return li.select("l_partkey", "l_orderkey", "l_linenumber", mov.alias("mov_avg_price"))
 
 
-@_op(
+@op(
     "win_range_52wk",
     """SELECT l_partkey, l_orderkey, l_linenumber, l_extendedprice,
               MAX(l_extendedprice) OVER w AS high_52wk,
@@ -192,7 +180,7 @@ def win_range_52wk(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_first_last_value",
     """SELECT l_partkey, best_price, date_of_best FROM (
          SELECT l_partkey,
@@ -227,7 +215,7 @@ def win_first_last_value(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_ntile_pct",
     """SELECT c_custkey, c_acctbal,
               CAST(NTILE(4) OVER (ORDER BY c_acctbal, c_custkey) AS INTEGER) AS quartile,
@@ -251,7 +239,7 @@ def win_ntile_pct(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_cume_dist",
     """SELECT c_custkey, c_acctbal,
               CUME_DIST() OVER (ORDER BY c_acctbal, c_custkey) AS cd
@@ -265,7 +253,7 @@ def win_cume_dist(spark: SparkSession, d: str) -> DataFrame:
     return c.select("c_custkey", "c_acctbal", F.cume_dist().over(w).alias("cd"))
 
 
-@_op(
+@op(
     "win_forward_fill",
     """SELECT event_id, user_id,
               LAST_VALUE(CASE WHEN event_type != 'error' THEN value END
@@ -294,7 +282,7 @@ def win_forward_fill(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_ratio_total",
     """SELECT o_custkey, o_orderkey,
               CAST(ROUND(CAST(
@@ -326,7 +314,7 @@ def win_ratio_total(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_nth_value",
     """SELECT DISTINCT o_custkey,
               nth_value(o_totalprice, 2) OVER (
@@ -358,7 +346,7 @@ def win_nth_value(spark: SparkSession, d: str) -> DataFrame:
     ).distinct()
 
 
-@_op(
+@op(
     "win_streaks",
     """WITH days AS (
          SELECT DISTINCT o_custkey, CAST(o_orderdate AS DATE) AS day
@@ -397,7 +385,7 @@ def win_streaks(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_running_distinct",
     """WITH f AS (
          SELECT event_type, ts, event_id, user_id,
@@ -435,7 +423,7 @@ def win_running_distinct(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_pattern_vshape",
     """WITH s AS (
          SELECT user_id, event_id, ts, value,
@@ -485,7 +473,7 @@ def win_pattern_vshape(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_sessionize_gap",
     """WITH marked AS (
          SELECT user_id, event_id,
@@ -547,7 +535,7 @@ def win_sessionize_gap(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_range_time_interval",
     """WITH e AS (
          SELECT event_id, user_id,
@@ -590,7 +578,7 @@ def win_range_time_interval(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_interpolate_linear",
     """WITH e AS (
          SELECT event_id, user_id,
@@ -681,7 +669,7 @@ def win_interpolate_linear(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_slope_rolling",
     """WITH x AS (
          SELECT l_partkey, CAST(l_shipdate AS DATE) AS sd, l_orderkey,
@@ -750,7 +738,7 @@ def win_slope_rolling(spark: SparkSession, d: str) -> DataFrame:
     return m.select("l_partkey", "sd", "l_orderkey", "l_linenumber", slope.alias("slope5"))
 
 
-@_op(
+@op(
     "win_median_rolling",
     """SELECT l_partkey, CAST(l_shipdate AS DATE) AS sd, l_orderkey, l_linenumber,
               quantile_cont(l_extendedprice, 0.5) OVER (
@@ -784,7 +772,7 @@ def win_median_rolling(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_percent_of_parent",
     """WITH y AS (
          SELECT CAST(year(o_orderdate) AS INTEGER) AS yr, o_orderstatus,
@@ -830,7 +818,7 @@ def win_percent_of_parent(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "win_time_weighted_avg",
     """WITH o AS (
          SELECT user_id, value, epoch_us(ts) AS tus,
@@ -934,7 +922,7 @@ FROM s
 """
 
 
-@_op("win_ema_smooth", _EMA_SQL)
+@op("win_ema_smooth", _EMA_SQL)
 def win_ema_smooth(spark: SparkSession, d: str) -> DataFrame:
     """Truncated exponential moving average per user (alpha=0.3, 10
     terms, zero-padded head) over the event stream [EXT: metric
@@ -1016,7 +1004,7 @@ FROM s
 """
 
 
-@_op("win_rolling_corr", _CORR_SQL)
+@op("win_rolling_corr", _CORR_SQL)
 def win_rolling_corr(spark: SparkSession, d: str) -> DataFrame:
     """Rolling Pearson correlation between event value and time over
     the trailing 20 events per user [EXT: trend/drift detection —

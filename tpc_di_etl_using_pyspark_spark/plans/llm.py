@@ -34,19 +34,7 @@ from ..llm.similarity import (
     query_vector,
 )
 from ._util import DEC, SQL_DEC, davg, dround, spread_scan, sql_davg, sql_dround, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .registry import op
 
 
 # --------------------------------------------------------------------------
@@ -54,7 +42,7 @@ def _op(name, oracle=None):
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "text_tokenize_counts",
     """WITH w AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
                   FROM documents)
@@ -74,7 +62,7 @@ def text_tokenize_counts(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_stats",
     """SELECT lang, source, COUNT(*) AS n_docs,
               CAST(SUM(CAST(n_chars AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*) AS avg_chars,
@@ -94,7 +82,7 @@ def text_stats(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_tfidf",
     f"""WITH w AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
                    FROM documents),
@@ -136,7 +124,7 @@ def text_tfidf(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_lang_id",
     """WITH s AS (
          SELECT doc_id, words,
@@ -187,7 +175,7 @@ def text_lang_id(spark: SparkSession, d: str) -> DataFrame:
     return s.select("doc_id", pred.alias("lang_pred"), "sc_en", "sc_de", "sc_fr", "sc_es")
 
 
-@_op(
+@op(
     "text_quality_score",
     """WITH q AS (
          SELECT doc_id, n_chars,
@@ -234,7 +222,7 @@ def text_quality_score(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_token_count",
     """SELECT doc_id,
               len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_tokens,
@@ -253,7 +241,7 @@ def text_token_count(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_fingerprint",
     """SELECT doc_id,
               sha256(array_to_string(list_sort(list_distinct(
@@ -268,7 +256,7 @@ def text_fingerprint(spark: SparkSession, d: str) -> DataFrame:
     return doc.select("doc_id", F.sha2(canon, 256).alias("fingerprint"))
 
 
-@_op(
+@op(
     "text_label_quality",
     f"""WITH c AS (SELECT source, lang, COUNT(*) AS cnt FROM documents
                    GROUP BY source, lang),
@@ -301,7 +289,7 @@ def text_label_quality(spark: SparkSession, d: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "dedup_cluster_cc",
     """WITH corpus AS (
          SELECT doc_id, text FROM documents
@@ -337,7 +325,7 @@ def dedup_cluster_cc(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "dedup_keep_best",
     """WITH corpus AS (
          SELECT doc_id, text, n_chars FROM documents
@@ -373,7 +361,7 @@ def dedup_keep_best(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "dedup_exact_hash",
     """WITH corpus AS (
          SELECT doc_id, text FROM documents
@@ -424,7 +412,7 @@ WHERE n_inter / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= 0.5
 """
 
 
-@_op("dedup_minhash_lsh", _NEARDUP_EXACT_SQL)
+@op("dedup_minhash_lsh", _NEARDUP_EXACT_SQL)
 def dedup_minhash_lsh(spark: SparkSession, d: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (3-word shingles, 32 hashes, 8 bands,
     Jaccard ≥ 0.5 verified exactly). The exact-verify stage makes the
@@ -501,7 +489,7 @@ WHERE n_inter / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= 0.5
 """
 
 
-@_op("dedup_simhash", _SIMHASH_MIRROR_SQL)
+@op("dedup_simhash", _SIMHASH_MIRROR_SQL)
 def dedup_simhash(spark: SparkSession, d: str) -> DataFrame:
     """SimHash near-dup pairs: 60-bit md5-derived fingerprints, 15-bit
     slice blocking (complete for Hamming ≤ 3 among un-capped slices),
@@ -538,7 +526,7 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 """
 
 
-@_op("dedup_simhash_hamming", _SIMHASH_HAMMING_SQL)
+@op("dedup_simhash_hamming", _SIMHASH_HAMMING_SQL)
 def dedup_simhash_hamming(spark: SparkSession, d: str) -> DataFrame:
     """Native simhash semantics: (doc_a, doc_b, hamming) pairs within
     Hamming distance 3 of the 60-bit fingerprint — fingerprint
@@ -580,7 +568,7 @@ WHERE n_inter / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= 0.02
 """
 
 
-@_op("dedup_ngram_jaccard", _NGRAM_SQL)
+@op("dedup_ngram_jaccard", _NGRAM_SQL)
 def dedup_ngram_jaccard(spark: SparkSession, d: str) -> DataFrame:
     """Exact 3-gram Jaccard pairs within a `source` block (blocking key
     bounds the quadratic join — the scale lever)."""
@@ -674,7 +662,7 @@ ORDER BY cos_sim DESC, vec_id LIMIT {k}
 """
 
 
-@_op(
+@op(
     "sim_cosine_topk",
     f"""WITH scored AS (
           SELECT vec_id,
@@ -690,7 +678,7 @@ def sim_cosine_topk(spark: SparkSession, d: str) -> DataFrame:
     return brute_force_topk(e, query_vector(64), k=10)
 
 
-@_op(
+@op(
     "sim_knn_join",
     f"""WITH pairs AS (
           SELECT a.label AS blk, a.vec_id AS id_a, b.vec_id AS id_b,
@@ -712,7 +700,7 @@ def sim_knn_join(spark: SparkSession, d: str) -> DataFrame:
     return knn_join_blocked(e, "label", k=3)
 
 
-@_op(
+@op(
     "sim_embedding_neardup",
     f"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
               CAST(ROUND(CAST(
@@ -747,7 +735,7 @@ def sim_embedding_neardup(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "dedup_semantic_cluster",
     """WITH RECURSIVE
        pairs AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -783,7 +771,7 @@ def dedup_semantic_cluster(spark: SparkSession, d: str) -> DataFrame:
     ).select("vec_id", F.coalesce("component", "vec_id").alias("component"))
 
 
-@_op("sim_ivf_multiprobe_topk", _ivf_probe_sql(n_probe=2))
+@op("sim_ivf_multiprobe_topk", _ivf_probe_sql(n_probe=2))
 def sim_ivf_multiprobe_topk(spark: SparkSession, d: str) -> DataFrame:
     """IVF ANN probing the 2 nearest centroid cells [EXT: the n_probe
     recall/cost knob every IVF deployment tunes — measured against
@@ -796,7 +784,7 @@ def sim_ivf_multiprobe_topk(spark: SparkSession, d: str) -> DataFrame:
     return ivf_multiprobe_topk(e, query_vector(64), k=10, n_cells=8, n_probe=2)
 
 
-@_op("sim_ivf_topk", _ivf_probe_sql())
+@op("sim_ivf_topk", _ivf_probe_sql())
 def sim_ivf_topk(spark: SparkSession, d: str) -> DataFrame:
     """IVF-bucketed ANN top-k (probe nearest pseudo-centroid cell);
     recall vs brute force asserted in tests/test_llm.py. The centroids
@@ -812,7 +800,7 @@ def sim_ivf_topk(spark: SparkSession, d: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_op(
+@op(
     "multimodal_join",
     """SELECT d.doc_id, d.lang, d.source, e.label, len(e.embedding) AS dim,
               d.n_chars
@@ -838,7 +826,7 @@ _MM_SCHEMA = StructType(
 )
 
 
-@_op(
+@op(
     "multimodal_binary_features",
     """SELECT doc_id, strlen(text) AS n_bytes, sha256(text) AS content_sha,
               CAST(strlen(text) % 256 AS INTEGER) AS fake_width,
@@ -875,7 +863,7 @@ def multimodal_binary_features(spark: SparkSession, d: str) -> DataFrame:
     return doc.mapInPandas(extract, schema=_MM_SCHEMA)
 
 
-@_op(
+@op(
     "multimodal_dedup_sha",
     """WITH h AS (SELECT doc_id, sha256(text) AS content_sha,
                     strlen(text) AS n_bytes
@@ -934,7 +922,7 @@ _FRAME_BYTES = 16
 _FRAME_STRIDE = 4
 
 
-@_op(
+@op(
     "multimodal_frame_sample",
     # length() (codepoints), NOT strlen() (bytes): frames are 16-CHAR
     # chunks in both engines (DuckDB substring and Python slicing are
@@ -1036,7 +1024,7 @@ def _split_label(col: Column) -> Column:
     )
 
 
-@_op(
+@op(
     "sample_split_assign",
     f"""SELECT doc_id,
               {_SPLIT_BUCKET_SQL} AS bucket,
@@ -1056,7 +1044,7 @@ def sample_split_assign(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "pipeline_corpus_curation",
     """WITH sized AS (
          SELECT doc_id, lang, text,
@@ -1100,7 +1088,7 @@ def pipeline_corpus_curation(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_pii_redact",
     """WITH seeded AS (
          SELECT doc_id,
@@ -1136,7 +1124,7 @@ def text_pii_redact(spark: SparkSession, d: str) -> DataFrame:
     return doc.select("doc_id", redacted.alias("redacted"))
 
 
-@_op(
+@op(
     "text_normalize_unicode",
     """SELECT doc_id,
               nfc_normalize('cafe' || chr(769) || ' ' || text) AS nfc_text,
@@ -1169,7 +1157,7 @@ def text_normalize_unicode(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "vec_quantize_int8",
     # CASE gates the empty-array COALESCE ('' like Spark's array_join)
     # so a NULL embedding stays NULL in BOTH engines — an unconditional
@@ -1226,7 +1214,7 @@ def _q8_query_vector_sql() -> str:
     return "[" + ", ".join(f"{v}.0" for v in _Q8_QVEC) + "]"
 
 
-@_op(
+@op(
     "sim_quantized_topk",
     f"""SELECT vec_id,
                CAST(list_dot_product(
@@ -1259,7 +1247,7 @@ def sim_quantized_topk(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_length_histogram",
     """SELECT CASE WHEN n_chars < 100 THEN '0-99'
                    WHEN n_chars < 200 THEN '100-199'
@@ -1290,7 +1278,7 @@ def text_length_histogram(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op("sim_ivf_index_partitioned", _ivf_probe_sql())
+@op("sim_ivf_index_partitioned", _ivf_probe_sql())
 def sim_ivf_index_partitioned(spark: SparkSession, d: str) -> DataFrame:
     """IVF index at rest: cell assignments written `partitionBy(cell)`,
     probe reads ONLY the query's cell directory (partition pruning —
@@ -1350,7 +1338,7 @@ def sim_ivf_index_partitioned(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sample_stratified_exact",
     f"""WITH h AS (
          SELECT doc_id, lang,
@@ -1387,7 +1375,7 @@ def sample_stratified_exact(spark: SparkSession, d: str) -> DataFrame:
     ).select("doc_id", "lang", F.col("rn").cast("bigint").alias("stratum_rank"))
 
 
-@_op(
+@op(
     "text_unigram_logprob",
     f"""WITH w AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
                    FROM documents),
@@ -1425,7 +1413,7 @@ def text_unigram_logprob(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "pack_sequences_greedy",
     """WITH tok AS (
          SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens
@@ -1466,7 +1454,7 @@ def pack_sequences_greedy(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "graph_pagerank",
     """WITH nodes AS (SELECT c_custkey AS id FROM customer),
 n AS (SELECT COUNT(*) AS cnt FROM nodes),
@@ -1542,7 +1530,7 @@ def graph_pagerank(spark: SparkSession, d: str) -> DataFrame:
     return r.select(F.col("id").alias("c_custkey"), F.col("r").alias("rank_micro"))
 
 
-@_op(
+@op(
     "text_contamination_ngram",
     """WITH w AS (SELECT doc_id, source, string_split(lower(text), ' ') AS words
                   FROM documents),
@@ -1596,7 +1584,7 @@ def text_contamination_ngram(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_repetition_score",
     # 2-gram signals exist only for docs with >= 2 words; Spark's
     # shingles() emits none below k (round-4 convention), so the
@@ -1654,7 +1642,7 @@ def text_repetition_score(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "vec_l2_normalize",
     """WITH norms AS (
          SELECT vec_id,
@@ -1715,7 +1703,7 @@ def vec_l2_normalize(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_ngram_topk",
     """WITH w AS (SELECT lang, string_split(lower(text), ' ') AS words
                   FROM documents),
@@ -1773,7 +1761,7 @@ def text_ngram_topk(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_quality_linear",
     """WITH q AS (
          SELECT doc_id, lang, n_chars,
@@ -1848,7 +1836,7 @@ def text_quality_linear(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "graph_triangle_count",
     """WITH op AS (
          SELECT DISTINCT a.l_orderkey,
@@ -1919,7 +1907,7 @@ def graph_triangle_count(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "dedup_chunk_level",
     """WITH w AS (
          SELECT doc_id, string_split(lower(text), ' ') AS words
@@ -1985,7 +1973,7 @@ def dedup_chunk_level(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "sample_temperature_mixture",
     f"""WITH s AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
        w AS (SELECT source, n,
@@ -2043,7 +2031,7 @@ def sample_temperature_mixture(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "vec_centroid_per_label",
     """WITH u AS (
          SELECT label,
@@ -2097,7 +2085,7 @@ def vec_centroid_per_label(spark: SparkSession, d: str) -> DataFrame:
     return s.join(F.broadcast(n), "label").select("label", "pos", "m", "n_vecs")
 
 
-@_op(
+@op(
     "text_bpe_pair_count",
     """WITH w AS (
          SELECT lower(unnest(regexp_split_to_array(text, '[^A-Za-z]+')))
@@ -2152,7 +2140,7 @@ _RP_COS_SQL = """
          AS DECIMAL(25,6)), 6) AS DOUBLE)"""
 
 
-@_op(
+@op(
     "sim_rp_lsh_cosine",
     f"""WITH planes AS (
          SELECT p, j,
@@ -2308,7 +2296,7 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "pipeline_incremental_dedup",
     f"""WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS words
                   FROM documents),
@@ -2394,7 +2382,7 @@ def pipeline_incremental_dedup(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "vec_kmeans_refine",
     """WITH comps AS (
          SELECT vec_id, j AS pos, CAST(embedding[j + 1] AS DOUBLE) AS x
@@ -2534,7 +2522,7 @@ _RESIZE_SCHEMA = StructType(
 )
 
 
-@_op(
+@op(
     "multimodal_image_resize",
     """WITH g AS (
          SELECT doc_id,
@@ -2597,7 +2585,7 @@ def multimodal_image_resize(spark: SparkSession, d: str) -> DataFrame:
     return doc.mapInPandas(resize, schema=_RESIZE_SCHEMA)
 
 
-@_op(
+@op(
     "text_bigram_logprob",
     f"""WITH d2 AS (
          SELECT doc_id, string_split(lower(text), ' ') AS ws
@@ -2667,7 +2655,7 @@ def text_bigram_logprob(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "vec_quantize_pq",
     """WITH comps AS (
          SELECT vec_id, j, CAST(embedding[j + 1] AS DOUBLE) AS x
@@ -2763,7 +2751,7 @@ def vec_quantize_pq(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "events_active_users_rolling",
     """WITH days AS (
          SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
@@ -2798,7 +2786,7 @@ def events_active_users_rolling(spark: SparkSession, d: str) -> DataFrame:
     return dau.join(wau, dau["day"] == wau["wday"]).select("day", "dau", "wau")
 
 
-@_op(
+@op(
     "sample_negative_pairs",
     """WITH nb AS (SELECT GREATEST(COUNT(*) // 20, 1) AS n_buckets
                   FROM embeddings),
@@ -2865,7 +2853,7 @@ def sample_negative_pairs(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "text_js_divergence_sources",
     """WITH w AS (SELECT source, unnest(string_split(lower(text), ' ')) AS word
                   FROM documents),
@@ -2982,7 +2970,7 @@ FROM ranked GROUP BY q_id
 """
 
 
-@_op("sim_ann_recall_eval", _ann_recall_sql())
+@op("sim_ann_recall_eval", _ann_recall_sql())
 def sim_ann_recall_eval(spark: SparkSession, d: str) -> DataFrame:
     """ANN quality harness [EXT: an index you can't measure is an index
     you can't trust]: per probe query (the first 20 corpus vectors),
@@ -3110,7 +3098,7 @@ WHERE doc_id NOT IN (SELECT doc_id FROM contam)
 """
 
 
-@_op(
+@op(
     "pipeline_pretrain_e2e",
     _PRETRAIN_E2E_SQL.format(split_case=_SPLIT_CASE_SQL),
 )
@@ -3224,7 +3212,7 @@ def pipeline_pretrain_e2e(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "graph_label_propagation",
     """WITH nodes AS (SELECT c_custkey AS id FROM customer),
 n AS (SELECT COUNT(*) AS cnt FROM nodes),
@@ -3321,7 +3309,7 @@ _MM_E2E_SCHEMA = StructType(
 )
 
 
-@_op(
+@op(
     "pipeline_multimodal_e2e",
     """WITH h AS (SELECT doc_id, sha256(text) AS content_sha,
                     strlen(text) AS n_bytes
@@ -3441,7 +3429,7 @@ FROM j GROUP BY doc_id
 """
 
 
-@_op("dedup_substring_windows", _SUBSTR_SQL)
+@op("dedup_substring_windows", _SUBSTR_SQL)
 def dedup_substring_windows(spark: SparkSession, d: str) -> DataFrame:
     """Per-doc exact-substring duplication fraction: overlapping
     10-token windows (stride 5) hashed to 60 bits; a window is
@@ -3524,7 +3512,7 @@ SELECT doc_id, word, tfidf, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= 3
 """
 
 
-@_op("text_keyword_topk", _KEYWORD_SQL)
+@op("text_keyword_topk", _KEYWORD_SQL)
 def text_keyword_topk(spark: SparkSession, d: str) -> DataFrame:
     """Top-3 TF-IDF keywords per document [EXT: per-doc keyword
     extraction for corpus tagging/routing]. Ranking runs on the
@@ -3594,7 +3582,7 @@ GROUP BY g.src_num
 """
 
 
-@_op("text_snapshot_novelty", _NOVELTY_SQL)
+@op("text_snapshot_novelty", _NOVELTY_SQL)
 def text_snapshot_novelty(spark: SparkSession, d: str) -> DataFrame:
     """Per-snapshot novelty: treating sources src0..srcN as ordered
     crawl snapshots, the share of a snapshot's distinct 3-grams first
@@ -3664,7 +3652,7 @@ WHERE bit_count(xor(a.phash, b.phash)) <= 6
 """
 
 
-@_op("multimodal_phash_neardup", _PHASH_SQL)
+@op("multimodal_phash_neardup", _PHASH_SQL)
 def multimodal_phash_neardup(spark: SparkSession, d: str) -> DataFrame:
     """Perceptual-hash near-dup pairs over an opaque BINARY column
     [EXT: image near-dedup — the step after multimodal_dedup_sha's
@@ -3732,7 +3720,7 @@ GROUP BY 1, 2
 """
 
 
-@_op("dedup_cross_source_matrix", _XSOURCE_SQL)
+@op("dedup_cross_source_matrix", _XSOURCE_SQL)
 def dedup_cross_source_matrix(spark: SparkSession, d: str) -> DataFrame:
     """Near-dup overlap matrix by source pair [EXT: which crawl
     snapshots/feeds duplicate each other — the planning input for
@@ -3799,7 +3787,7 @@ FROM m
 """
 
 
-@_op("text_quality_gopher", _GOPHER_SQL)
+@op("text_quality_gopher", _GOPHER_SQL)
 def text_quality_gopher(spark: SparkSession, d: str) -> DataFrame:
     """Gopher-style composite quality filter [EXT: named-rule corpus
     gating — word-count bounds, mean word length band, max-token
@@ -3875,7 +3863,7 @@ FROM starts
 """
 
 
-@_op("text_chunk_overlap", _CHUNK_SQL)
+@op("text_chunk_overlap", _CHUNK_SQL)
 def text_chunk_overlap(spark: SparkSession, d: str) -> DataFrame:
     """Document chunking for embedding/context windows [EXT: the
     pre-embedding step of every RAG/similarity pipeline]: 32-token
@@ -3925,7 +3913,7 @@ FROM lx
 """
 
 
-@_op("text_perplexity_bucket", _PPL_BUCKET_SQL)
+@op("text_perplexity_bucket", _PPL_BUCKET_SQL)
 def text_perplexity_bucket(spark: SparkSession, d: str) -> DataFrame:
     """CCNet-style perplexity bucketing [EXT: Wenzek et al. 2020 —
     split each language's docs into head/middle/tail by LM perplexity;
@@ -3986,7 +3974,7 @@ FROM p JOIN m mi ON mi.i = p.i JOIN m mj ON mj.i = p.j
 """
 
 
-@_op("vec_covariance_matrix", _COV_SQL)
+@op("vec_covariance_matrix", _COV_SQL)
 def vec_covariance_matrix(spark: SparkSession, d: str) -> DataFrame:
     """Distributed covariance matrix of the 64-dim embedding corpus
     [EXT: the input to offline PCA/whitening — the eigendecomposition
@@ -4080,7 +4068,7 @@ ORDER BY score DESC, doc_id, chunk_idx LIMIT 5
 """
 
 
-@_op("pipeline_rag_e2e", _RAG_SQL)
+@op("pipeline_rag_e2e", _RAG_SQL)
 def pipeline_rag_e2e(spark: SparkSession, d: str) -> DataFrame:
     """End-to-end retrieval dataflow [EXT: the RAG serving path as one
     plan — chunk, embed-join, score, top-k]: 32-token/8-overlap chunks
@@ -4197,7 +4185,7 @@ def canonicalize_url(url: Column) -> Column:
     )
 
 
-@_op("dedup_url_canonical", _URL_SQL)
+@op("dedup_url_canonical", _URL_SQL)
 def dedup_url_canonical(spark: SparkSession, d: str) -> DataFrame:
     """URL-canonical dedup [EXT: the first dedup pass of every web
     crawl — the same page re-crawled under case/tracking/fragment
@@ -4301,7 +4289,7 @@ GROUP BY 1, 2
 """
 
 
-@_op("pipeline_ccnet_e2e", _CCNET_SQL)
+@op("pipeline_ccnet_e2e", _CCNET_SQL)
 def pipeline_ccnet_e2e(spark: SparkSession, d: str) -> DataFrame:
     """CCNet-shaped corpus curation as ONE dataflow [EXT: Wenzek et
     al. 2020 — language-ID, LM-perplexity tertiles per language,
@@ -4376,7 +4364,7 @@ FROM k
 """
 
 
-@_op("sample_epoch_shuffle", _EPOCH_SHUFFLE_SQL)
+@op("sample_epoch_shuffle", _EPOCH_SHUFFLE_SQL)
 def sample_epoch_shuffle(spark: SparkSession, d: str) -> DataFrame:
     """Deterministic per-epoch training shuffle [EXT: the data-loader
     primitive — every worker must agree on example order without
@@ -4459,7 +4447,7 @@ ORDER BY score DESC, doc_id LIMIT 10
 """
 
 
-@_op("text_bm25_topk", _BM25_SQL)
+@op("text_bm25_topk", _BM25_SQL)
 def text_bm25_topk(spark: SparkSession, d: str) -> DataFrame:
     """BM25 top-10 retrieval (Robertson/Sparck-Jones; k1=1.2, b=0.75)
     for a fixed 3-term query over the corpus [EXT: lexical retrieval —
@@ -4549,7 +4537,7 @@ WHERE n_inter / CAST(least(sa.n, sb.n) AS DOUBLE) >= 0.5
 """
 
 
-@_op("dedup_ngram_containment", _CONTAIN_SQL)
+@op("dedup_ngram_containment", _CONTAIN_SQL)
 def dedup_ngram_containment(spark: SparkSession, d: str) -> DataFrame:
     """Asymmetric containment near-dup: C = |A∩B| / min(|A|,|B|) over
     distinct 3-gram sets, pairs with C ≥ 0.5 [EXT: catches doc-in-doc
@@ -4620,7 +4608,7 @@ FROM v1 JOIN w2 ON w2.i = v1.i CROSS JOIN n2 CROSS JOIN ray
 """
 
 
-@_op("vec_pca_power_iteration", _PCA_SQL)
+@op("vec_pca_power_iteration", _PCA_SQL)
 def vec_pca_power_iteration(spark: SparkSession, d: str) -> DataFrame:
     """Top principal direction of the embedding corpus by two unrolled
     power iterations over the DISTRIBUTED covariance relation
@@ -4734,7 +4722,7 @@ FROM proj
 """
 
 
-@_op("vec_pca_project", _PCA_PROJECT_SQL)
+@op("vec_pca_project", _PCA_PROJECT_SQL)
 def vec_pca_project(spark: SparkSession, d: str) -> DataFrame:
     """Project every embedding onto the learned top principal
     direction (vec_pca_power_iteration's v2) — the APPLY step of
@@ -4828,7 +4816,7 @@ FROM hit
 """
 
 
-@_op("dedup_eval_simhash_recall", _EVAL_SQL)
+@op("dedup_eval_simhash_recall", _EVAL_SQL)
 def dedup_eval_simhash_recall(spark: SparkSession, d: str) -> DataFrame:
     """Measured precision/recall of the production simhash near-dup
     pipeline against exhaustive exact ground truth [EXT: the eval
@@ -4914,7 +4902,7 @@ def dedup_eval_simhash_recall(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "vec_pca_domain_check",
     """SELECT CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n_vecs,
               CAST(COUNT(*) AS BIGINT) AS n_components,

@@ -18,19 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ._util import DEC, dround, sql_dround, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .registry import op
 
 
 # --- phone parts, shared between query and oracle ------------------------
@@ -50,7 +38,7 @@ _SQL_LOCAL = (
 _SQL_EXT = "CASE WHEN c_custkey % 5 = 0 THEN CAST(c_custkey % 100 AS VARCHAR) ELSE NULL END"
 
 
-@_op(
+@op(
     "str_concat_phone",
     f"""WITH parts AS (
           SELECT c_custkey, {_SQL_CC} AS cc, {_SQL_AC} AS ac,
@@ -89,7 +77,7 @@ def str_concat_phone(spark: SparkSession, d: str) -> DataFrame:
     return c.select("c_custkey", phone.alias("phone"))
 
 
-@_op(
+@op(
     "str_substr_trim",
     """SELECT p_partkey, substring(p_name, 1, 10) AS name10,
               ltrim(rtrim('  ' || p_name || '  ')) AS trimmed,
@@ -108,7 +96,7 @@ def str_substr_trim(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_case_match",
     """SELECT c_custkey, upper(c_name) AS name_u, lower(c_mktsegment) AS seg_l
        FROM customer WHERE upper(c_mktsegment) = 'BUILDING'""",
@@ -123,7 +111,7 @@ def str_case_match(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_pad_format",
     """SELECT n_nationkey,
               lpad(CAST(n_nationkey AS VARCHAR), 5, '0') AS code5,
@@ -142,7 +130,7 @@ def str_pad_format(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_regexp",
     """SELECT p_partkey,
               regexp_extract(p_name, '^(\\w+)', 1) AS first_word,
@@ -159,7 +147,7 @@ def str_regexp(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_split_explode",
     """SELECT p_partkey, unnest(string_split(p_type, ' ')) AS word FROM part""",
 )
@@ -169,7 +157,7 @@ def str_split_explode(spark: SparkSession, d: str) -> DataFrame:
     return p.select("p_partkey", F.explode(F.split("p_type", " ")).alias("word"))
 
 
-@_op(
+@op(
     "date_parse",
     """SELECT o_orderkey,
               CAST(strptime(strftime(o_orderdate, '%Y%m%d'), '%Y%m%d') AS DATE) AS d1,
@@ -191,7 +179,7 @@ def date_parse(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "date_arith",
     """SELECT o_orderkey,
               date_add(CAST(o_orderdate AS DATE), 30) AS plus30,
@@ -211,7 +199,7 @@ def date_arith(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "date_extract",
     """SELECT o_orderkey,
               CAST(year(o_orderdate) AS INTEGER) AS y,
@@ -238,7 +226,7 @@ def date_extract(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "date_trunc_bucket",
     """SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n_events,
               CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS day_value
@@ -256,7 +244,7 @@ def date_trunc_bucket(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "math_round_money",
     f"""SELECT l_orderkey, l_linenumber,
               {sql_dround('l_extendedprice * l_discount', 2)} AS disc_amt,
@@ -278,7 +266,7 @@ def math_round_money(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "math_ratio_guard",
     """SELECT l_orderkey, l_linenumber,
               l_extendedprice / NULLIF(l_quantity - 25, 0) AS price_per_off25
@@ -295,7 +283,7 @@ def math_ratio_guard(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "cond_case_when",
     """SELECT o_orderkey,
               CASE WHEN o_orderpriority = '1-URGENT' THEN 'hot'
@@ -321,7 +309,7 @@ def cond_case_when(spark: SparkSession, d: str) -> DataFrame:
     return o.select("o_orderkey", heat.alias("heat"), status.alias("status_name"))
 
 
-@_op(
+@op(
     "null_coalesce",
     """SELECT c_custkey,
               COALESCE(NULLIF(c_mktsegment, 'BUILDING'), 'OTHER') AS seg_or_other,
@@ -343,7 +331,7 @@ def null_coalesce(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "cast_types",
     """SELECT o_orderkey,
               CAST(CAST(o_orderkey AS VARCHAR) AS BIGINT) AS key_roundtrip,
@@ -366,7 +354,7 @@ def cast_types(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "json_extract",
     """SELECT event_id,
               CASE WHEN regexp_full_match(
@@ -397,7 +385,7 @@ def json_extract(spark: SparkSession, d: str) -> DataFrame:
     return e.select("event_id", gated.alias("k"))
 
 
-@_op(
+@op(
     "array_ops",
     """SELECT vec_id, len(embedding) AS dim,
               CAST(embedding[1] AS DOUBLE) AS first_comp,
@@ -415,7 +403,7 @@ def array_ops(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "array_fold_dot",
     f"""SELECT vec_id,
               CAST(SUM(CAST(x * x AS DECIMAL(25,6))) AS DOUBLE) AS norm_sq,
@@ -443,7 +431,7 @@ def array_fold_dot(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "map_ops",
     """SELECT doc_id, 'lang' AS meta_key, lang AS meta_value,
               lang AS lang_via_map, 2 AS n_keys
@@ -469,7 +457,7 @@ def map_ops(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "hash_checksum",
     """SELECT n_nationkey,
               sha256(concat_ws('|', n_nationkey, n_name, n_regionkey)) AS row_sha
@@ -484,7 +472,7 @@ def hash_checksum(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_levenshtein_link",
     # linkage is ASCII-GATED on both sides: Spark's levenshtein counts
     # CODEPOINTS while DuckDB's counts BYTES, so a non-ASCII pair
@@ -625,7 +613,7 @@ def str_levenshtein_link(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "date_boundaries",
     """SELECT o_orderkey,
               CAST(o_orderdate AS DATE) AS order_date,
@@ -650,7 +638,7 @@ def date_boundaries(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "array_posexplode",
     """SELECT vec_id, CAST(i AS INTEGER) AS pos,
               CAST(embedding[i + 1] AS DOUBLE) AS component
@@ -671,7 +659,7 @@ def array_posexplode(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "math_functions",
     f"""SELECT l_orderkey, l_linenumber,
                {sql_dround('ln(l_extendedprice)', 6)} AS ln_price,
@@ -701,7 +689,7 @@ def math_functions(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_encode_b64_hex",
     # encode() is DuckDB's utf-8 string→BLOB conversion; the former
     # CAST(... AS BLOB) threw on any non-ascii text (round-4
@@ -752,7 +740,7 @@ _URL_VALID_RE = (
 )
 
 
-@_op(
+@op(
     "str_url_parse",
     f"""WITH u AS (
          SELECT c_custkey,
@@ -806,7 +794,7 @@ def str_url_parse(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "bit_ops",
     """SELECT e1.event_id,
               CAST(e1.event_id & 255 AS BIGINT) AS low_byte,
@@ -844,7 +832,7 @@ def bit_ops(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "math_trig",
     f"""SELECT n_nationkey,
                {sql_dround('sin(n_nationkey * 0.25)', 6)} AS sin_v,
@@ -868,7 +856,7 @@ def math_trig(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "date_spine_gapfill",
     """WITH spine AS (
          SELECT CAST(unnest(generate_series(DATE '1995-01-01',
@@ -916,7 +904,7 @@ def date_spine_gapfill(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "array_exists_forall",
     """SELECT vec_id,
               len(list_filter(embedding, x -> CAST(x AS DOUBLE) > 2.5)) > 0
@@ -943,7 +931,7 @@ def array_exists_forall(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "json_nested_roundtrip",
     """WITH j AS (
          SELECT event_id,
@@ -984,7 +972,7 @@ def json_nested_roundtrip(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "json_variant_extract",
     # vschema is DERIVED from the payload (keys sorted, json types
     # mapped to variant type names), not pinned to the fixture's
@@ -1054,7 +1042,7 @@ def json_variant_extract(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "math_try_overflow",
     """SELECT o_orderkey,
               CASE WHEN o_orderkey <= 1023
@@ -1081,7 +1069,7 @@ def math_try_overflow(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_collate_ci",
     # the mixed-case construction upper() is ASCII-GATED: Java
     # upper('ß')='SS' but DuckDB upper('ß')='ẞ' (U+1E9E), so an
@@ -1134,7 +1122,7 @@ def str_collate_ci(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "xml_roundtrip_builtin",
     # the oracle mirrors the writer's XML-invalid-char sanitization
     # (see docstring): XML 1.0 cannot represent U+0000-U+0008/U+000B/
@@ -1205,7 +1193,7 @@ def xml_roundtrip_builtin(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "json_variant_explode",
     """SELECT event_id, CAST(0 AS INTEGER) AS pos, event_id % 7 AS elem FROM events
        UNION ALL
@@ -1231,7 +1219,7 @@ def json_variant_explode(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "str_regexp_extract_all",
     """SELECT p_partkey,
               COALESCE(array_to_string(regexp_extract_all(p_name, '[a-z]{6,}'),

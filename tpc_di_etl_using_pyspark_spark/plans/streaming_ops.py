@@ -14,22 +14,10 @@ from pyspark.sql import functions as F
 
 from ..streaming.ops import sessionize, sliding_sums, tumbling_counts
 from ._util import epoch_s, t
-
-QUERIES = {}
-ORACLES = {}
+from .registry import op
 
 
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_op(
+@op(
     "stream_tumbling_count",
     """SELECT CAST(FLOOR(EPOCH(date_trunc('hour', ts))) AS BIGINT) AS ws_sec,
               event_type, COUNT(*) AS n_events
@@ -40,7 +28,7 @@ def stream_tumbling_count(spark: SparkSession, d: str) -> DataFrame:
     return tumbling_counts(t(spark, d, "events"))
 
 
-@_op(
+@op(
     "stream_sliding_sum",
     # floor15 must FLOOR-divide: Spark's window() aligns pre-epoch
     # (negative-second) timestamps to the window start BELOW them,
@@ -66,7 +54,7 @@ def stream_sliding_sum(spark: SparkSession, d: str) -> DataFrame:
     return sliding_sums(t(spark, d, "events"))
 
 
-@_op(
+@op(
     "stream_session_window",
     """WITH o AS (
          SELECT user_id, ts, value,
@@ -101,7 +89,7 @@ def stream_session_window(spark: SparkSession, d: str) -> DataFrame:
     return sessionize(t(spark, d, "events"), "30 minutes")
 
 
-@_op(
+@op(
     "stream_watermark_late",
     """WITH m AS (
          SELECT event_id, user_id, ts, value,
@@ -150,7 +138,7 @@ def stream_watermark_late(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "stream_dedup_state",
     """SELECT user_id, event_type, event_id AS first_event_id FROM (
          SELECT user_id, event_type, event_id,
@@ -171,7 +159,7 @@ def stream_dedup_state(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "stream_foreachbatch_upsert",
     """SELECT user_id, event_type, event_id, value FROM (
          SELECT user_id, event_type, event_id, value,
@@ -201,7 +189,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "stream_stateful_totals",
     """SELECT user_id, COUNT(*) AS n_events,
               CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS BIGINT) AS total_micro
@@ -219,7 +207,7 @@ def stream_stateful_totals(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "stream_stream_join",
     """WITH v AS (SELECT event_id AS view_id, user_id, ts AS vts
                   FROM events WHERE event_type = 'view'),
@@ -252,7 +240,7 @@ def stream_stream_join(spark: SparkSession, d: str) -> DataFrame:
     return view_purchase_interval_join(views, purchases)
 
 
-@_op(
+@op(
     "stream_transform_with_state",
     """SELECT user_id, COUNT(*) AS n_events,
               MAX(CAST(FLOOR(value * 1000000) AS BIGINT)) AS max_micro
@@ -271,7 +259,7 @@ def stream_transform_with_state(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "stream_quality_gate",
     """WITH m AS (
          SELECT lang,
@@ -326,7 +314,7 @@ WHERE n_inter / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= 0.5
 """
 
 
-@_op("stream_incremental_dedup", _STREAM_INC_DEDUP_SQL)
+@op("stream_incremental_dedup", _STREAM_INC_DEDUP_SQL)
 def stream_incremental_dedup(spark: SparkSession, d: str) -> DataFrame:
     """Streaming ingest near-dup [EXT: the crawl-time operating mode —
     documents ARRIVE as a stream and each microbatch probes the

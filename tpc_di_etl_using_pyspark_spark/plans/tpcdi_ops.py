@@ -23,19 +23,7 @@ from ..tpcdi.pipeline import (
 )
 from .core_scans import _scratch
 from ._util import DEC, dround, epoch_s, sql_epoch_s, t
-
-QUERIES = {}
-ORACLES = {}
-
-
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from .registry import op
 
 
 def _batch_date_shift(v: DataFrame) -> int:
@@ -80,7 +68,7 @@ def _batch_date_shift(v: DataFrame) -> int:
     return shift
 
 
-@_op(
+@op(
     "tpcdi_scd2_dimcustomer",
     """SELECT CAST(o_custkey AS VARCHAR) || '-' || CAST(
                 ROW_NUMBER() OVER w AS VARCHAR) AS sk,
@@ -112,7 +100,7 @@ def tpcdi_scd2_dimcustomer(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_scd2_incremental",
     """WITH actions AS (
          SELECT o_custkey, o_orderkey, o_orderstatus,
@@ -162,7 +150,7 @@ def tpcdi_scd2_incremental(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_fact_cash_balances",
     """WITH daily AS (
          SELECT o_custkey AS account_id,
@@ -183,7 +171,7 @@ def tpcdi_fact_cash_balances(spark: SparkSession, d: str) -> DataFrame:
     return fact_cash_balances(o, "o_custkey", "o_orderdate", "o_totalprice")
 
 
-@_op(
+@op(
     "tpcdi_cdc_apply",
     """WITH current AS (
          SELECT o_orderkey, o_custkey, o_totalprice FROM orders
@@ -221,7 +209,7 @@ def tpcdi_cdc_apply(spark: SparkSession, d: str) -> DataFrame:
     return cdc_apply(current, cdc, ["o_orderkey"])
 
 
-@_op(
+@op(
     "tpcdi_marketing_nameplate",
     """SELECT c_custkey,
               NULLIF(concat_ws('+',
@@ -253,7 +241,7 @@ def tpcdi_marketing_nameplate(spark: SparkSession, d: str) -> DataFrame:
     return c.select("c_custkey", nameplate.alias("marketing_nameplate"))
 
 
-@_op(
+@op(
     "tpcdi_fact_market_history",
     """WITH daily AS (
          SELECT l_partkey AS key, CAST(l_shipdate AS DATE) AS quote_date,
@@ -289,7 +277,7 @@ def tpcdi_fact_market_history(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_prospect_match",
     """WITH prospect AS (
          SELECT CASE WHEN c_custkey > 9223372036849775807
@@ -351,7 +339,7 @@ def tpcdi_prospect_match(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_fact_holdings",
     """SELECT l_suppkey AS account_id, l_partkey AS security_id,
               CAST(l_shipdate AS DATE) AS trade_date,
@@ -388,7 +376,7 @@ def tpcdi_fact_holdings(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_dim_date",
     """SELECT d AS date_value,
               CAST(year(d) AS INTEGER) AS year_num,
@@ -436,7 +424,7 @@ def tpcdi_dim_date(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_dim_time",
     """SELECT s AS second_of_day,
               CAST(s // 3600 AS INTEGER) AS hour_num,
@@ -475,7 +463,7 @@ def tpcdi_dim_time(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_dim_trade",
     f"""SELECT user_id,
                MIN(CASE WHEN event_type = 'signup' THEN {sql_epoch_s('ts')} END)
@@ -506,7 +494,7 @@ def tpcdi_dim_trade(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_dimessages",
     """SELECT 1 AS batch_id, 'orders' AS message_source,
               'Row count' AS message_type, CAST(COUNT(*) AS VARCHAR) AS message_text
@@ -528,7 +516,7 @@ def tpcdi_dimessages(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "events_funnel",
     f"""WITH stages AS (
          SELECT user_id,
@@ -577,7 +565,7 @@ def events_funnel(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "events_retention",
     """WITH uw AS (
          SELECT DISTINCT user_id,
@@ -784,7 +772,7 @@ dim_company AS (
 """
 
 
-@_op(
+@op(
     "tpcdi_dim_company",
     f"WITH {_COMPANY_CTES} SELECT * FROM dim_company",
 )
@@ -794,7 +782,7 @@ def tpcdi_dim_company(spark: SparkSession, d: str) -> DataFrame:
     return _company_dim_from(_finwire_frames(spark, d)["CMP"])
 
 
-@_op(
+@op(
     "tpcdi_dim_security",
     f"""WITH {_COMPANY_CTES},
 n AS (SELECT COUNT(*) AS n_supp FROM supplier),
@@ -861,7 +849,7 @@ def tpcdi_dim_security(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_financial",
     f"""WITH {_COMPANY_CTES},
 q AS (SELECT s_suppkey % 10000000000 AS cik, CAST(r.i AS INTEGER) AS i
@@ -904,7 +892,7 @@ def tpcdi_financial(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_dim_broker",
     """WITH hr AS (
   SELECT c_custkey AS employee_id, c_custkey // 10 AS manager_id,
@@ -989,7 +977,7 @@ def tpcdi_dim_broker(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_fact_watches",
     """WITH w AS (
   SELECT o_custkey AS c_id,
@@ -1039,7 +1027,7 @@ def tpcdi_fact_watches(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_scd2_dimaccount",
     """WITH a AS (
   SELECT o_custkey % 2305843009213693952 * 4 + o_orderkey % 4 AS account_id,
@@ -1099,7 +1087,7 @@ def tpcdi_scd2_dimaccount(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_audit_reconciliation",
     f"""WITH {_COMPANY_CTES},
 n AS (SELECT COUNT(*) AS n_supp FROM supplier),
@@ -1221,7 +1209,7 @@ def tpcdi_audit_reconciliation(spark: SparkSession, d: str) -> DataFrame:
     return out
 
 
-@_op(
+@op(
     "tpcdi_reference_dims",
     """WITH st(st_id, st_name) AS (
          VALUES ('ACTV', 'Active'), ('CMPT', 'Completed'),
@@ -1261,7 +1249,7 @@ def tpcdi_reference_dims(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_scd2_hybrid_type1",
     """SELECT CAST(o_custkey AS VARCHAR) || '-' || CAST(
                 ROW_NUMBER() OVER w AS VARCHAR) AS sk,
@@ -1307,7 +1295,7 @@ def tpcdi_scd2_hybrid_type1(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_holdings_pnl",
     """WITH pos AS (
          SELECT l_suppkey AS account_id, l_partkey AS security_id,
@@ -1405,7 +1393,7 @@ def tpcdi_holdings_pnl(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "tpcdi_batch_e2e",
     f"""WITH {_COMPANY_CTES},
 cust_actions AS (
@@ -1655,7 +1643,7 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "events_attribution_last_touch",
     """WITH o AS (
          SELECT event_id, user_id, event_type,
@@ -1708,7 +1696,7 @@ def events_attribution_last_touch(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "audit_data_quality",
     """WITH li AS (SELECT * FROM lineitem), o AS (SELECT * FROM orders)
        SELECT 'fk_lineitem_orders' AS check_name,
@@ -1891,7 +1879,7 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
     return out
 
 
-@_op(
+@op(
     "events_markov_transitions",
     """WITH o AS (
          SELECT user_id, event_type,
@@ -1936,7 +1924,7 @@ def events_markov_transitions(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "events_path_trigrams",
     """WITH s AS (
          SELECT user_id, event_type AS e1,

@@ -27,22 +27,10 @@ from pyspark.sql.types import (
 
 from ..llm.similarity import query_vector
 from ._util import dround, sql_dround, t
-
-QUERIES = {}
-ORACLES = {}
+from .registry import op
 
 
-def _op(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-@_op(
+@op(
     "udf_python_scalar",
     """SELECT c_custkey,
               concat_ws('+',
@@ -81,7 +69,7 @@ _QCOS_SQL = (
 )
 
 
-@_op(
+@op(
     "udf_pandas_scalar",
     f"""WITH qv AS (SELECT list_transform(generate_series(0, 63),
                          d -> (((d * 37) % 19) - 9) / 9.0) AS q)
@@ -106,7 +94,7 @@ def udf_pandas_scalar(spark: SparkSession, d: str) -> DataFrame:
     return e.select("vec_id", dround(cos("embedding"), 6).alias("cos_sim"))
 
 
-@_op(
+@op(
     "udaf_pandas_grouped",
     f"""WITH x AS (
           SELECT label, i AS dim_idx, CAST(embedding[i] AS DOUBLE) AS comp
@@ -133,7 +121,7 @@ def udaf_pandas_grouped(spark: SparkSession, d: str) -> DataFrame:
     ).select("label", F.col("dim_idx").cast("int"), dround("comp", 6).alias("centroid"))
 
 
-@_op(
+@op(
     "udtf_apply_in_pandas",
     f"""SELECT event_id, user_id,
               {sql_dround('''(value - AVG(value) OVER (PARTITION BY user_id))
@@ -169,7 +157,7 @@ def udtf_apply_in_pandas(spark: SparkSession, d: str) -> DataFrame:
     return out.select("event_id", "user_id", dround("norm_value", 6).alias("norm_value"))
 
 
-@_op(
+@op(
     "udtf_map_in_pandas",
     """SELECT event_id,
               CASE WHEN json_type(props, '$.k') IN ('BIGINT', 'UBIGINT')
@@ -238,7 +226,7 @@ def udtf_map_in_pandas(spark: SparkSession, d: str) -> DataFrame:
     return e.select("event_id", "props", "value").mapInPandas(parse, schema)
 
 
-@_op(
+@op(
     "udtf_map_in_arrow",
     """SELECT l_orderkey, l_linenumber,
               l_extendedprice * (1 - l_discount) AS net_price
@@ -273,7 +261,7 @@ def udtf_map_in_arrow(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "udf_arrow_scalar",
     # length() = CHARACTERS (Python len semantics); strlen() is BYTES
     # and diverged on unicode names (round-4 adversarial probe).
@@ -304,7 +292,7 @@ def udf_arrow_scalar(spark: SparkSession, d: str) -> DataFrame:
     return c.select("c_custkey", tag("c_name").alias("tagged"))
 
 
-@_op(
+@op(
     "udf_sql_declarative",
     """SELECT l_orderkey, l_linenumber,
               CAST(ROUND(CAST(l_extendedprice * (1 + l_tax) AS DECIMAL(25,6)), 2)
@@ -330,7 +318,7 @@ def udf_sql_declarative(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "udtf_sql_table_fn",
     """SELECT 'big' AS tier, o_orderkey, o_totalprice
        FROM orders WHERE o_totalprice > 400000
@@ -361,7 +349,7 @@ def udtf_sql_table_fn(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@_op(
+@op(
     "udtf_python_lateral",
     """SELECT p_partkey, word, CAST(length(word) AS INTEGER) AS n
        FROM (SELECT p_partkey, unnest(string_split(p_type, ' ')) AS word

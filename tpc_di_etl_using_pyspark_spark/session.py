@@ -45,6 +45,27 @@ CODEGEN_CACHE_ENTRIES = 1000
 _CASE_MAPPING_CLASS = "org.apache.spark.sql.catalyst.util.CollationAwareUTF8String"
 
 
+# Local-mode sizes bench.py's recorded numbers were measured with; a
+# cluster deployment sets its own (the two SQL confs stay settable with
+# spark.conf.set on a running session).
+# Shuffle partitions: about one reducer per core; AQE coalescing trims
+# small stages. Production: ~2-3x total executor cores, or high enough
+# that partitions land in the 100MB-1GB band — AQE coalesces the
+# excess, so erring high is safe. For a cached plan that holds only
+# with canChangeCachedPlanOutputPartitioning set (in get_spark).
+SHUFFLE_PARTITIONS = 32
+# Broadcast threshold: the reference dims and 1-row aggregates always
+# broadcast. Production: keep it at most a few hundred MB — executors
+# hold the built relation per task slot.
+BROADCAST_THRESHOLD = 32 * 1024 * 1024
+# Shuffle/spill/broadcast compression codec: Spark's lz4. On an idle
+# host zstd measured a wash to slightly slower at fixture scale
+# (BASELINE.md), since shuffle payloads are KB-scale and codec CPU
+# outweighs the bytes saved. Production: zstd usually wins once
+# shuffle partitions carry 100MB+; measure before switching.
+IO_CODEC = "lz4"
+
+
 def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
@@ -54,30 +75,6 @@ def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -
     read (events.ts is ns — FIXTURES.md).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Scale-dependent settings come from the environment; the local
-    # defaults below are the ones bench.py's recorded numbers were
-    # measured with, and a cluster deployment overrides them.
-    # - SHUFFLE_PARTITIONS: local default 32 (about one reducer per
-    #   core; AQE coalescing trims small stages). Production: set to
-    #   ~2-3× total executor cores, or high enough that partitions
-    #   land in the 100MB-1GB band — AQE coalesces the excess, so
-    #   erring high is safe. For a cached plan that holds only with
-    #   canChangeCachedPlanOutputPartitioning set (below).
-    # - BROADCAST_THRESHOLD: local default 32 MiB (the reference dims
-    #   and 1-row aggregates always broadcast). Production: keep ≤ a
-    #   few hundred MB — executors hold the built relation per task
-    #   slot.
-    shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    bcast = os.environ.get(
-        "SPARK_GRAFT_BROADCAST_THRESHOLD", str(32 * 1024 * 1024)
-    )
-    # - IO_CODEC: shuffle/spill/broadcast compression codec. Local
-    #   default stays Spark's lz4: on an idle host zstd measured a
-    #   wash to slightly slower at fixture scale (BASELINE.md), since
-    #   shuffle payloads are KB-scale and codec CPU outweighs the
-    #   bytes saved. Production: zstd usually wins once shuffle
-    #   partitions carry 100MB+; measure before switching.
-    io_codec = os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -95,13 +92,13 @@ def get_spark(app_name: str = "tpcdi-spark-engine", master: str | None = None) -
         # exchanges before execution, same output; the perfbench
         # tpcdi_load pass fell 2.89 -> 2.38 s (median, 4 cores).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
+        .config("spark.sql.shuffle.partitions", str(SHUFFLE_PARTITIONS))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", bcast)
-        .config("spark.io.compression.codec", io_codec)
+        .config("spark.sql.autoBroadcastJoinThreshold", str(BROADCAST_THRESHOLD))
+        .config("spark.io.compression.codec", IO_CODEC)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # AQE numbers a query's codegen stages in the order its query
         # stages are created, which follows stage completion and so
