@@ -1,4 +1,4 @@
-"""Self-checks for rows-only LLM ops (SURVEY §5.2.3-4): properties the
+"""Self-checks for the LLM ops (SURVEY §5.2.3-4): properties the
 DuckDB oracle can't express — LSH candidate soundness, ANN recall."""
 
 from __future__ import annotations
@@ -91,6 +91,21 @@ def test_ivf_results_subset_of_brute_force_cell(spark, sf_dir):
     bf_ids = {r.vec_id for r in bf}
     overlap = sum(1 for r in ivf if r.vec_id in bf_ids)
     assert overlap >= 1, "IVF probe found nothing from the true top-50"
+
+
+def test_ivf_probing_every_cell_is_brute_force(spark, sf_dir):
+    """With n_probe = n_cells the probe filter keeps every vector, so the
+    IVF top-k must be exactly the brute-force top-k: same ids, same
+    scores, same order."""
+    emb = t(spark, sf_dir, "embeddings")
+    q = query_vector(64)
+    bf = [(r.vec_id, r.cos_sim) for r in brute_force_topk(emb, q, k=10).collect()]
+    ivf = [
+        (r.vec_id, r.cos_sim)
+        for r in ivf_topk(emb, q, k=10, n_cells=8, n_probe=8).collect()
+    ]
+    assert len(bf) == 10
+    assert ivf == bf
 
 
 def test_pack_sequences_invariants(spark, sf_dir):

@@ -8,6 +8,8 @@ shape is exactly the failure mode these catch.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from tpc_di_etl_using_pyspark_spark.plans._util import t
@@ -384,6 +386,33 @@ def test_ann_recall_scored_relation_broadcasts_queries(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
+
+
+# a norm fold: zip_with of one attribute with itself
+_NORM_FOLD = re.compile(r"aggregate\(zip_with\((\w+#\d+), \1,")
+
+
+def test_vector_norms_fold_below_the_pair_join(spark, sf_dir):
+    """A vector's norm is per-vector state: it must be folded on the
+    one-row-per-vector side of the pair join, never on the join line or
+    above it. The folds are interpreted per row (CodegenFallback), so a
+    norm on the pair relation is recomputed for every comparison."""
+    for op in (
+        "sim_knn_join",
+        "sim_embedding_neardup",
+        "sim_ann_recall_eval",
+        "sim_rp_lsh_cosine",
+    ):
+        df = all_queries()[op](spark, sf_dir)
+        lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        top = next(
+            i for i, line in enumerate(lines)
+            if re.sub(r"^[\s:|+-]*", "", line).startswith("Join ")
+        )
+        above = sum(len(_NORM_FOLD.findall(line)) for line in lines[: top + 1])
+        below = sum(len(_NORM_FOLD.findall(line)) for line in lines[top + 1:])
+        assert above == 0, (op, above)
+        assert below == 2, (op, below)  # one per side of the pair join
 
 
 def test_twap_reuses_window_partitioning_for_agg(spark, sf_dir):

@@ -3,9 +3,9 @@
 
 For each requested op: one warm-up + N timed runs to the noop sink
 (median reported), labelled via setJobDescription, and the
-explain("formatted") dumped to plans/<tag>/<op>_<suffix>.txt so the
-plan evidence matches the recorded timing. Caches cleared between ops
-(same discipline as bench.py / the driver).
+explain("formatted") dumped to plans/<tag>/<op>_<suffix>.txt (not
+tracked by git) so the plan evidence matches the recorded timing.
+Caches cleared between ops (same discipline as bench.py).
 
 Each op also gets the number of generated classes Spark compiled
 (codegen cache misses), for the warm-up (including the plan dump's
@@ -20,7 +20,7 @@ jobs the build ran (eager actions such as first(), count() or a
 checkpoint), counted by a job group around the call.
 
 Usage:
-  python tools/profile_ops.py [--runs N] [--tag r13] [--suffix before]
+  python tools/profile_ops.py [--runs N] [--tag dump] [--suffix before]
                               [--no-plans] op1 op2 ...
 Prints one JSON line: {"timings": {"op": sec, ...}, "compiles":
 {"op": {"warmup": n, "timed": [n, ...]}, ...}, "py4j_calls": {same
@@ -55,7 +55,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("ops", nargs="+")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--tag", default="r13")
+    ap.add_argument("--tag", default="dump")
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--no-plans", action="store_true")
     ap.add_argument(
@@ -78,7 +78,8 @@ def main() -> None:
         "plans",
         args.tag,
     )
-    os.makedirs(plan_dir, exist_ok=True)
+    if not args.no_plans:
+        os.makedirs(plan_dir, exist_ok=True)
 
     compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
     # py4j round trips: every command this thread sends

@@ -27,11 +27,18 @@ from pyspark.sql.types import (
 from ..llm.components import connected_components
 from ..llm.minhash import minhash_near_dups, shingles
 from ..llm.similarity import (
+    as_double,
     brute_force_topk,
-    ivf_multiprobe_topk,
+    ivf_cell,
+    ivf_centroids,
+    ivf_probe_cells,
     ivf_topk,
     knn_join_blocked,
+    l2_norm,
+    normed,
+    query,
     query_vector,
+    score,
 )
 from ._util import DEC, SQL_DEC, davg, dround, spread_scan, sql_davg, sql_dround, t
 from .registry import op
@@ -608,12 +615,35 @@ _QVEC_SQL = "list_transform(generate_series(0, 63), d -> (((d * 37) % 19) - 9) /
 
 
 def _sql_cos(vec_expr: str, q_expr: str) -> str:
-    # NULLIF mirrors llm/similarity.cosine: zero-norm -> NULL, no throw
+    # NULLIF mirrors llm/similarity.score: zero-norm -> NULL, no throw
     return (
         f"list_dot_product({vec_expr}, {q_expr}) / "
         f"NULLIF(sqrt(list_dot_product({vec_expr}, {vec_expr})) * "
         f"sqrt(list_dot_product({q_expr}, {q_expr})), 0.0)"
     )
+
+
+def _sql_vec(vec: list[float]) -> str:
+    # repr() float literals round-trip, so both engines read identical doubles
+    return "[" + ", ".join(repr(x) for x in vec) + "]"
+
+
+def _sql_ivf_cell(cents: list[list[float]]) -> tuple[str, str]:
+    """Oracle-side cell assignment, written independently of the Spark
+    fold (llm/similarity.ivf_cell): the select-list of per-centroid dot
+    products ``d0..dN`` over a ``v`` column, and the CASE chain that
+    picks the first maximum."""
+    n_cells = len(cents)
+    dot_cols = ",\n       ".join(
+        f"list_dot_product(v, {_sql_vec(cents[c])}) AS d{c}" for c in range(n_cells)
+    )
+    cases = "\n            ".join(
+        "WHEN "
+        + " AND ".join(f"d{c} >= d{o}" for o in range(n_cells) if o != c)
+        + f" THEN {c}"
+        for c in range(n_cells)
+    )
+    return dot_cols, cases
 
 
 def _ivf_probe_sql(
@@ -625,27 +655,13 @@ def _ivf_probe_sql(
     Spark fold's strict-greater update), probes the query's cell, and
     ranks by the shared rounded-cosine contract. repr() float literals
     round-trip, so both engines score identical doubles."""
-    from ..llm.similarity import ivf_centroids, query_vector
-
     cents = ivf_centroids(n_cells, dim)
     qvec = query_vector(dim)
     qcells = sorted(
         range(n_cells),
         key=lambda c: (-sum(x * y for x, y in zip(cents[c], qvec)), c),
     )[:n_probe]
-
-    def lit(vec: list[float]) -> str:
-        return "[" + ", ".join(repr(x) for x in vec) + "]"
-
-    dot_cols = ",\n       ".join(
-        f"list_dot_product(v, {lit(cents[c])}) AS d{c}" for c in range(n_cells)
-    )
-    cases = "\n            ".join(
-        "WHEN "
-        + " AND ".join(f"d{c} >= d{o}" for o in range(n_cells) if o != c)
-        + f" THEN {c}"
-        for c in range(n_cells)
-    )
+    dot_cols, cases = _sql_ivf_cell(cents)
     return f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 d AS (SELECT vec_id, v,
@@ -655,7 +671,7 @@ a AS (SELECT vec_id, v,
              CASE {cases} END AS cell
       FROM d)
 SELECT vec_id, CAST(cell AS INTEGER) AS cell,
-       CAST(ROUND(CAST({_sql_cos('v', lit(qvec))} AS DECIMAL(25,6)), 6) AS DOUBLE)
+       CAST(ROUND(CAST({_sql_cos('v', _sql_vec(qvec))} AS DECIMAL(25,6)), 6) AS DOUBLE)
          AS cos_sim
 FROM a WHERE cell IN ({", ".join(str(c) for c in qcells)})
 ORDER BY cos_sim DESC, vec_id LIMIT {k}
@@ -719,14 +735,10 @@ def sim_knn_join(spark: SparkSession, d: str) -> DataFrame:
 def sim_embedding_neardup(spark: SparkSession, d: str) -> DataFrame:
     """Embedding-cosine near-dup pairs within label blocks (threshold
     tuned to the fixture's cosine distribution: max ≈ 0.47)."""
-    from ..llm.similarity import as_double, cosine
-
     e = t(spark, d, "embeddings")
-    a = e.select(F.col("label").alias("blk"), F.col("vec_id").alias("id_a"),
-                 as_double("embedding").alias("va"))
-    b = e.select(F.col("label").alias("blk"), F.col("vec_id").alias("id_b"),
-                 as_double("embedding").alias("vb"))
-    cos = dround(cosine(F.col("va"), F.col("vb")), 6)
+    a = normed(e, F.col("label").alias("blk"), F.col("vec_id").alias("id_a"), v="va", nrm="na")
+    b = normed(e, F.col("label").alias("blk"), F.col("vec_id").alias("id_b"), v="vb", nrm="nb")
+    cos = dround(score("va", "na", "vb", "nb"), 6)
     return (
         a.join(b, "blk")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -781,7 +793,7 @@ def sim_ivf_multiprobe_topk(spark: SparkSession, d: str) -> DataFrame:
     partition pruning applies when the index is cell-partitioned
     (sim_ivf_index_partitioned)."""
     e = t(spark, d, "embeddings")
-    return ivf_multiprobe_topk(e, query_vector(64), k=10, n_cells=8, n_probe=2)
+    return ivf_topk(e, query_vector(64), k=10, n_cells=8, n_probe=2)
 
 
 @op("sim_ivf_topk", _ivf_probe_sql())
@@ -1287,41 +1299,22 @@ def sim_ivf_index_partitioned(spark: SparkSession, d: str) -> DataFrame:
     corpus."""
     import os as _os
 
-    from ..llm.similarity import as_double, cosine, ivf_centroids
-
     e = t(spark, d, "embeddings")
     n_cells, qvec = 8, query_vector(64)
-    cents = ivf_centroids(n_cells, 64)
-    cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
     v = as_double("embedding")
-
-    def best_cell(vec):
-        idx = F.sequence(F.lit(0), F.lit(n_cells - 1))
-        from ..llm.similarity import dot
-
-        return F.aggregate(
-            idx,
-            F.struct(F.lit(-1).alias("cell"), F.lit(float("-inf")).alias("score")),
-            lambda acc, i: F.when(
-                dot(F.element_at(cent_arr, i + 1), vec) > acc["score"],
-                F.struct(i.cast("int").alias("cell"),
-                         dot(F.element_at(cent_arr, i + 1), vec).alias("score")),
-            ).otherwise(acc),
-        )["cell"]
-
     tag = _os.path.basename(_os.path.normpath(d)) or "sf"
     # pid-scoped like plans/core_scans._scratch: concurrent engine
     # processes must not clobber each other's index between write & probe
     path = f"/tmp/spark_graft_scratch/p{_os.getpid()}/{tag}/ivf_index"
     _os.makedirs(_os.path.dirname(path), exist_ok=True)
-    index = e.select("vec_id", v.alias("v"), best_cell(v).alias("cell"))
-    index.write.mode("overwrite").partitionBy("cell").parquet(path)
-    qcell = max(
-        range(n_cells), key=lambda c: sum(x * y for x, y in zip(cents[c], qvec))
+    index = e.select(
+        "vec_id", v.alias("v"), ivf_cell(v, ivf_centroids(n_cells, 64)).alias("cell")
     )
-    q = F.array(*[F.lit(x) for x in qvec])
-    # explicit schema: an empty corpus writes zero part files and
-    # read-back inference throws (r11 empty-slice sweep)
+    index.write.mode("overwrite").partitionBy("cell").parquet(path)
+    (qcell,) = ivf_probe_cells(qvec, n_cells)
+    q, qn = query(qvec)
+    # explicit schema: an empty corpus writes zero part files, and
+    # reading those back with schema inference throws
     probe = (
         spark.read.schema(index.schema)
         .parquet(path)
@@ -1331,7 +1324,7 @@ def sim_ivf_index_partitioned(spark: SparkSession, d: str) -> DataFrame:
         probe.select(
             "vec_id",
             F.col("cell").cast("int").alias("cell"),
-            dround(cosine(F.col("v"), q), 6).alias("cos_sim"),
+            dround(score("v", l2_norm("v"), q, qn), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(10)
@@ -2191,7 +2184,6 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     The oracle mirrors the banding exactly (deterministic planes), so
     approximate recall is certified, not hidden."""
     from ..llm.minhash import candidate_pairs
-    from ..llm.similarity import as_double
 
     e = t(spark, d, "embeddings")
     comps = e.select(
@@ -2260,34 +2252,15 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     # uncapped oracle.
     max_bucket = 200
 
-    # norms are per-VECTOR, not per-pair: computing them once on the
-    # 1-row-per-vector relation instead of inside the pair-level
-    # cosine removes two of the three 64-element folds per candidate
-    # (bit-identical: same sqrt over the same array either way)
-    from ..llm.similarity import dot as _dot
-    from ..llm.similarity import l2_norm
-
-    emb_d = e.select(
-        "vec_id",
-        as_double("embedding").alias("emb"),
-    ).select("vec_id", "emb", l2_norm(F.col("emb")).alias("nrm"))
     # candidate pairs: one band-keyed aggregation of the capped bucket
     # members (capping before the collect instead of after it measured
     # A/B 2.51 → 2.17 s at sf0.1; outputs hash-identical)
     cand = candidate_pairs(sigs, "vec_id", max_bucket).select(
         F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
     )
-    ea = emb_d.select(
-        F.col("vec_id").alias("id_a"), F.col("emb").alias("va"), F.col("nrm").alias("na")
-    )
-    eb = emb_d.select(
-        F.col("vec_id").alias("id_b"), F.col("emb").alias("vb"), F.col("nrm").alias("nb")
-    )
-    cos = dround(
-        _dot(F.col("va"), F.col("vb"))
-        / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)),
-        6,
-    )
+    ea = normed(e, F.col("vec_id").alias("id_a"), v="va", nrm="na")
+    eb = normed(e, F.col("vec_id").alias("id_b"), v="vb", nrm="nb")
+    cos = dround(score("va", "na", "vb", "nb"), 6)
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
@@ -2921,26 +2894,11 @@ def text_js_divergence_sources(spark: SparkSession, d: str) -> DataFrame:
 
 def _ann_recall_sql(n_cells: int = 8, dim: int = 64, k: int = 10, n_queries: int = 20) -> str:
     """Oracle for the IVF recall evaluation: replays the deterministic
-    cell assignment (same first-max-wins CASE chain as _ivf_probe_sql)
+    cell assignment (the first-max-wins CASE chain of _sql_ivf_cell)
     for every vector, takes the first ``n_queries`` vectors as probe
     queries, and computes exact-top-k vs in-cell-top-k overlap with the
     shared rounded-cosine + id-tiebreak ranking contract."""
-    from ..llm.similarity import ivf_centroids
-
-    cents = ivf_centroids(n_cells, dim)
-
-    def lit(vec: list[float]) -> str:
-        return "[" + ", ".join(repr(x) for x in vec) + "]"
-
-    dot_cols = ",\n       ".join(
-        f"list_dot_product(v, {lit(cents[c])}) AS d{c}" for c in range(n_cells)
-    )
-    cases = "\n            ".join(
-        "WHEN "
-        + " AND ".join(f"d{c} >= d{o}" for o in range(n_cells) if o != c)
-        + f" THEN {c}"
-        for c in range(n_cells)
-    )
+    dot_cols, cases = _sql_ivf_cell(ivf_centroids(n_cells, dim))
     return f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 d AS (SELECT vec_id, v,
@@ -2986,34 +2944,16 @@ def sim_ann_recall_eval(spark: SparkSession, d: str) -> DataFrame:
     is what a 100 TB pipeline runs on a sampled probe set to pick
     n_cells/n_probe — the measurement is first-class, not a test-only
     artifact."""
-    from ..llm.similarity import as_double, cosine, ivf_centroids
-
     n_cells, k, n_queries = 8, 10, 20
     e = t(spark, d, "embeddings")
-    cents = ivf_centroids(n_cells, 64)
-    cent_arr = F.array(*[F.array(*[F.lit(x) for x in c]) for c in cents])
-    v = as_double("embedding")
-
-    from ..llm.similarity import dot as _dot
-
-    def best_cell(vec):
-        idx = F.sequence(F.lit(0), F.lit(n_cells - 1))
-        return F.aggregate(
-            idx,
-            F.struct(F.lit(-1).alias("cell"), F.lit(float("-inf")).alias("score")),
-            lambda acc, i: F.when(
-                _dot(F.element_at(cent_arr, i + 1), vec) > acc["score"],
-                F.struct(
-                    i.cast("int").alias("cell"),
-                    _dot(F.element_at(cent_arr, i + 1), vec).alias("score"),
-                ),
-            ).otherwise(acc),
-        )["cell"]
-
-    a = e.select("vec_id", v.alias("v"), best_cell(v).alias("cell"))
+    # norms and cells once per vector, on both sides of the cross join
+    a = normed(e, "vec_id").select(
+        "*", ivf_cell(F.col("v"), ivf_centroids(n_cells, 64)).alias("cell")
+    )
     q = a.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
         F.col("cell").alias("q_cell"),
     )
     scored = (
@@ -3023,7 +2963,7 @@ def sim_ann_recall_eval(spark: SparkSession, d: str) -> DataFrame:
             "q_id",
             "vec_id",
             (F.col("cell") == F.col("q_cell")).alias("in_cell"),
-            dround(cosine(F.col("v"), F.col("qv")), 6).alias("cos_sim"),
+            dround(score("v", "nrm", "qv", "qn"), 6).alias("cos_sim"),
         )
     )
     w_exact = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
@@ -4096,19 +4036,16 @@ def pipeline_rag_e2e(spark: SparkSession, d: str) -> DataFrame:
             "chunk_text"
         ),
     )
-    from ..llm.similarity import as_double, cosine
-
-    q = F.array(*[F.lit(x) for x in query_vector()])
-    cos6 = F.round(
-        cosine(as_double("embedding"), q).cast("decimal(25,6)"), 6
-    ).cast("double")
-    scored = chunks.join(
-        emb.select(F.col("vec_id").alias("doc_id"), "embedding"), "doc_id"
-    ).select(
+    # each doc is scored once, before the join fans it out to its chunks
+    q, qn = query(query_vector())
+    docs = normed(emb, F.col("vec_id").alias("doc_id")).select(
+        "doc_id", dround(score("v", "nrm", q, qn), 6).alias("cos6")
+    )
+    scored = chunks.join(docs, "doc_id").select(
         "doc_id",
         "chunk_idx",
         "chunk_text",
-        (cos6 - F.lit(0.001) * F.col("chunk_idx")).alias("score"),
+        (F.col("cos6") - F.lit(0.001) * F.col("chunk_idx")).alias("score"),
     )
     return (
         scored.select(
