@@ -34,10 +34,13 @@ from pyspark.sql import functions as F
 from tpc_di_etl_using_pyspark_spark.llm.components import connected_components
 from tpc_di_etl_using_pyspark_spark.llm.minhash import (
     band_keys,
+    explode_bands,
     minhash_signature,
     shingles,
 )
+from tpc_di_etl_using_pyspark_spark.llm.simhash import fingerprint_slices
 from tpc_di_etl_using_pyspark_spark.plans._util import t
+from tpc_di_etl_using_pyspark_spark.plans.llm import _RP_BAND_KEYS
 from tpc_di_etl_using_pyspark_spark.plans.registry import all_queries
 from tpc_di_etl_using_pyspark_spark.schemas import FINWIRE_CMP_LAYOUT
 from tpc_di_etl_using_pyspark_spark.sources.fixedwidth import parse_fixed_width
@@ -135,6 +138,47 @@ def _band_keys_f(sig, id_col, num_hashes, bands):
     )
 
 
+def _slices_f(fp, id_col, chunk_bits):
+    mask = (1 << chunk_bits) - 1
+    slices = [
+        F.struct(
+            F.lit(i).alias("chunk_idx"),
+            F.shiftrightunsigned(F.col("simhash"), i * chunk_bits)
+            .bitwiseAND(F.lit(mask))
+            .alias("chunk"),
+        )
+        for i in range(60 // chunk_bits)
+    ]
+    return fp.select(
+        F.col(id_col), "simhash", F.explode(F.array(*slices)).alias("bk")
+    ).select(
+        id_col,
+        "simhash",
+        F.col("bk.chunk_idx").alias("chunk_idx"),
+        F.col("bk.chunk").alias("chunk"),
+    )
+
+
+def _rp_bands_f(dots):
+    def key(lo):
+        return F.concat(
+            *[
+                F.when(F.col(f"dp{p}") >= 0, F.lit("1")).otherwise(F.lit("0"))
+                for p in range(lo, lo + 8)
+            ]
+        )
+
+    bands = [
+        F.struct(F.lit(b).alias("band_idx"), key(8 * b).alias("band_key"))
+        for b in range(2)
+    ]
+    return dots.select("vec_id", F.explode(F.array(*bands)).alias("bk")).select(
+        "vec_id",
+        F.col("bk.band_idx").alias("band_idx"),
+        F.col("bk.band_key").alias("band_key"),
+    )
+
+
 def _fixed_width_f(lines, layout, value_col="value"):
     return lines.select(
         *[
@@ -165,6 +209,23 @@ def test_minhash_sql_text_plans_like_functions(spark):
     assert _plan(band_keys(sig, "doc_id", 32, 8)) == _plan(
         _band_keys_f(sig, "doc_id", 32, 8)
     )
+
+
+def test_simhash_slices_sql_text_plans_like_functions(spark):
+    fp = spark.range(6).selectExpr("id AS doc_id", "id * 1234567890123 AS simhash")
+    assert _plan(fingerprint_slices(fp, "doc_id", 15)) == _plan(
+        _slices_f(fp, "doc_id", 15)
+    )
+
+
+def test_rp_band_keys_sql_text_plans_like_functions(spark):
+    # sim_rp_lsh_cosine's per-plane dot products dp0..dp15 (bigint)
+    dots = spark.range(6).selectExpr(
+        "id AS vec_id", *[f"id - {p} AS dp{p}" for p in range(16)]
+    )
+    assert _plan(
+        explode_bands(dots, ["vec_id"], "band_idx", "band_key", _RP_BAND_KEYS)
+    ) == _plan(_rp_bands_f(dots))
 
 
 def test_fixed_width_sql_text_plans_like_functions(spark):

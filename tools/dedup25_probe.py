@@ -126,7 +126,7 @@ def bucket_stats(spark) -> dict[str, dict]:
         minhash_signature,
         shingles,
     )
-    from tpc_di_etl_using_pyspark_spark.llm.simhash import _chunked, simhash
+    from tpc_di_etl_using_pyspark_spark.llm.simhash import fingerprint_slices, simhash
 
     doc = t(spark, SCALED, "documents")
     emb = t(spark, SCALED, "embeddings")
@@ -138,10 +138,13 @@ def bucket_stats(spark) -> dict[str, dict]:
         mh_bk, ["band_idx", "band_key"]
     )
 
-    ch = _chunked(simhash(doc, "doc_id", "text"), "doc_id", 15)
+    ch = fingerprint_slices(simhash(doc, "doc_id", "text"), "doc_id", 15)
     out["simhash slices (15-bit)"] = _occupancy(ch, ["chunk_idx", "chunk"])
 
-    # rp-LSH band keys — same construction as sim_rp_lsh_cosine
+    # rp-LSH band keys: the same key values as sim_rp_lsh_cosine's
+    # bands, built another way — a planes join and a sorted collect_list
+    # per band, where the op computes the plane weights inline and
+    # explodes both band keys with explode_bands
     comps = emb.select(
         "vec_id",
         F.posexplode(

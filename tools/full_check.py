@@ -42,7 +42,7 @@ PY = sys.executable
 # Floor for step 3: the suite had this many tests when the floor was
 # last set. Raise it whenever tests are added; a collect run BELOW it
 # means a file silently fell out of collection.
-EXPECTED_MIN_TESTS = 1083
+EXPECTED_MIN_TESTS = 1085
 
 
 def run(label: str, cmd: list[str]) -> tuple[str, bool, str]:

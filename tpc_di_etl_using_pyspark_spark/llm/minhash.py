@@ -48,8 +48,8 @@ def shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame
     convention every DuckDB oracle implements (out-of-range word
     indexes make the gram NULL, which then joins nothing). The
     earlier clipped-short-gram behavior silently diverged from the
-    mirrors on short docs (round-4 adversarial probe caught it via
-    dedup_simhash's fingerprints); absent-from-index is also the
+    mirrors on short docs (a hostile fixture's 1-2 word docs showed it
+    through dedup_simhash's fingerprints); absent-from-index is also the
     right dedup semantics — a 1-2 word doc has no k-gram identity.
     """
     # materialize the split in its own projection BEFORE the transform
@@ -81,22 +81,39 @@ def minhash_signature(
     return sh.groupBy(id_col).agg(*aggs)
 
 
+def explode_bands(
+    df: DataFrame, keep: list[str], idx: str, key: str, keys: list[str]
+) -> DataFrame:
+    """(keep..., idx, key): one row per SQL expression in ``keys``, its
+    position as ``idx`` and its value as ``key``.
+
+    The band/slice builder every LSH generator shares: minhash bands,
+    simhash fingerprint slices, random-hyperplane bands. All the keys
+    are one SQL expression, so the build is one round trip however many
+    there are (see minhash_signature); struct(... AS ...) prints like
+    F.struct, so the plan is the one the F.* form builds.
+    """
+    cols = [f"`{c}`" for c in keep]
+    structs = ", ".join(
+        f"struct({i} AS {idx}, {k} AS {key})" for i, k in enumerate(keys)
+    )
+    return df.selectExpr(*cols, f"explode(array({structs})) AS bk").selectExpr(
+        *cols, f"bk.{idx} AS {idx}", f"bk.{key} AS {key}"
+    )
+
+
 def band_keys(
     sig: DataFrame, id_col: str, num_hashes: int = 32, bands: int = 8
 ) -> DataFrame:
     """(id, band_idx, band_key) — one row per band."""
     rows_per_band = num_hashes // bands
-    # one SQL expression for all band structs (one round trip, see
-    # minhash_signature); struct(... AS ...) prints like F.struct
-    structs = ", ".join(
-        f"struct({b} AS band_idx, xxhash64("
+    keys = [
+        "xxhash64("
         + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-        + ") AS band_key)"
+        + ")"
         for b in range(bands)
-    )
-    return sig.selectExpr(
-        f"`{id_col}`", f"explode(array({structs})) AS bk"
-    ).selectExpr(f"`{id_col}`", "bk.band_idx AS band_idx", "bk.band_key AS band_key")
+    ]
+    return explode_bands(sig, [id_col], "band_idx", "band_key", keys)
 
 
 def cap_buckets(

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .minhash import cap_buckets
+from .minhash import cap_buckets, explode_bands
 
 SIMHASH_BITS = 60  # 15 hex chars of md5 → fits BIGINT in both engines
 
@@ -84,44 +84,26 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     return per_doc.select(id_col, fp.alias("simhash"))
 
 
-def _chunk(col, i: int, chunk_bits: int = 15):
-    return F.shiftrightunsigned(col, i * chunk_bits).bitwiseAND(
-        F.lit((1 << chunk_bits) - 1)
-    )
-
-
 def hamming(a, b):
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def _chunked(fp: DataFrame, id_col: str, chunk_bits: int) -> DataFrame:
-    """One row per (doc, chunk): the fingerprint split into
-    60/chunk_bits equal bit slices. By pigeonhole, two fingerprints
-    within Hamming distance (60/chunk_bits − 1) agree exactly on ≥1
-    slice, so a self-join keyed on (chunk_idx, chunk) finds every such
-    pair without a cartesian product. chunk_bits is the recall/cost
-    knob: narrower slices catch larger Hamming radii but make bigger
-    (more collision-prone) join buckets.
+def fingerprint_slices(fp: DataFrame, id_col: str, chunk_bits: int) -> DataFrame:
+    """(id, simhash, chunk_idx, chunk): one row per (doc, slice), the
+    fingerprint split into 60/chunk_bits equal bit slices. By
+    pigeonhole, two fingerprints within Hamming distance
+    (60/chunk_bits − 1) agree exactly on ≥1 slice, so a self-join keyed
+    on (chunk_idx, chunk) finds every such pair without a cartesian
+    product. chunk_bits is the recall/cost knob: narrower slices catch
+    larger Hamming radii but make bigger (more collision-prone) join
+    buckets.
     """
-    n_chunks = SIMHASH_BITS // chunk_bits
-    return fp.select(
-        F.col(id_col),
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("chunk_idx"),
-                    _chunk(F.col("simhash"), i, chunk_bits).alias("chunk"),
-                )
-                for i in range(n_chunks)
-            ])
-        ).alias("c"),
-    ).select(
-        id_col,
-        "simhash",
-        F.col("c.chunk_idx").alias("chunk_idx"),
-        F.col("c.chunk").alias("chunk"),
-    )
+    mask = (1 << chunk_bits) - 1
+    slices = [
+        f"shiftrightunsigned(simhash, {i * chunk_bits}) & {mask}"
+        for i in range(SIMHASH_BITS // chunk_bits)
+    ]
+    return explode_bands(fp, [id_col, "simhash"], "chunk_idx", "chunk", slices)
 
 
 def fingerprint_pairs(
@@ -145,7 +127,9 @@ def fingerprint_pairs(
     hidden.
     """
     chunks = cap_buckets(
-        _chunked(fp, id_col, chunk_bits), ["chunk_idx", "chunk"], max_bucket
+        fingerprint_slices(fp, id_col, chunk_bits),
+        ["chunk_idx", "chunk"],
+        max_bucket,
     )
     a = chunks.select(
         F.col(id_col).alias("doc_a"), F.col("simhash").alias("sh_a"), "chunk_idx", "chunk"
@@ -216,7 +200,7 @@ def simhash_candidate_pairs(
     # relation is tiny (≈2 rows/doc at 15-bit slices), so the eager
     # materialization job is cheap and lineage truncation is free.
     chunks = cap_buckets(
-        _chunked(simhash(df, id_col, text_col), id_col, chunk_bits),
+        fingerprint_slices(simhash(df, id_col, text_col), id_col, chunk_bits),
         ["chunk_idx", "chunk"],
         max_bucket,
     ).localCheckpoint()

@@ -74,6 +74,18 @@ DEC = "decimal(25,6)"
 SQL_DEC = "DECIMAL(25,6)"
 
 
+def dec_norm_sq(ad: Column) -> Column:
+    """Squared L2 norm of a double array as DEC: each squared term is
+    cast to DEC before it is added, so the fold is exact and
+    order-independent on both engines (the dsum rule; a raw double fold
+    can round apart at the 6th decimal)."""
+    return F.aggregate(
+        F.zip_with(ad, ad, lambda x, y: x * y),
+        F.lit(0).cast(DEC),
+        lambda s, x: (s + x.cast(DEC)).cast(DEC),
+    )
+
+
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 # Parquet schemas inferred so far in this process, by

@@ -40,7 +40,7 @@ from ..llm.similarity import (
     query_vector,
     score,
 )
-from ._util import DEC, SQL_DEC, davg, dround, spread_scan, sql_davg, sql_dround, t
+from ._util import DEC, SQL_DEC, davg, dec_norm_sq, dround, spread_scan, sql_davg, sql_dround, t
 from .registry import op
 
 
@@ -182,6 +182,16 @@ def text_lang_id(spark: SparkSession, d: str) -> DataFrame:
     return s.select("doc_id", pred.alias("lang_pred"), "sc_en", "sc_de", "sc_fr", "sc_es")
 
 
+def _n_stop(words: Column) -> Column:
+    """How many of ``words`` are one of the four quality stopwords."""
+    return F.size(
+        F.filter(
+            words,
+            lambda w: (w == "the") | (w == "a") | (w == "value") | (w == "data"),
+        )
+    )
+
+
 @op(
     "text_quality_score",
     """WITH q AS (
@@ -203,15 +213,11 @@ def text_quality_score(spark: SparkSession, d: str) -> DataFrame:
     """Quality scoring via length / stopword-ratio heuristics."""
     doc = t(spark, d, "documents")
     words = F.split(F.lower("text"), " ")
-    stops = ["the", "a", "value", "data"]
-    n_stop = F.size(
-        F.filter(words, lambda w: (w == stops[0]) | (w == stops[1]) | (w == stops[2]) | (w == stops[3]))
-    )
     q = doc.select(
         "doc_id",
         "n_chars",
         F.size(words).alias("n_words"),
-        n_stop.alias("n_stop"),
+        _n_stop(words).alias("n_stop"),
     )
     awl = F.col("n_chars").cast("double") / F.col("n_words")
     sr = F.col("n_stop").cast("double") / F.col("n_words")
@@ -296,6 +302,18 @@ def text_label_quality(spark: SparkSession, d: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _recrawled(spark: SparkSession, d: str, *cols: str) -> DataFrame:
+    """(doc_id, *cols) of the documents ∪ every tenth document again
+    under doc_id + 1e6 — a re-crawl. The fixture has no exact dups, so
+    the exact-dedup ops run on this corpus, whose dup groups are
+    (original, copy) pairs."""
+    doc = t(spark, d, "documents").select("doc_id", *cols)
+    recrawl = doc.filter(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"), *cols
+    )
+    return doc.unionByName(recrawl)
+
+
 @op(
     "dedup_cluster_cc",
     """WITH corpus AS (
@@ -312,11 +330,7 @@ def dedup_cluster_cc(spark: SparkSession, d: str) -> DataFrame:
     id. The oracle states the fixpoint (min id over the dup group) —
     the Spark side must converge to it through the generic iterative
     operator."""
-    doc = t(spark, d, "documents").select("doc_id", "text")
-    recrawl = doc.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    corpus = doc.unionByName(recrawl)
+    corpus = _recrawled(spark, d, "text")
     # star edges (group-min → each other member): component diameter 1,
     # so propagation converges in one superstep however large the dup
     # cluster — chain edges (lag) would need one superstep per member
@@ -353,11 +367,7 @@ def dedup_keep_best(spark: SparkSession, d: str) -> DataFrame:
     (longest, id tiebreak) and drop the rest [EXT: the keep-one step
     every training-corpus dedup pipeline ends with]. One window
     shuffle on the cluster key."""
-    doc = t(spark, d, "documents").select("doc_id", "text", "n_chars")
-    recrawl = doc.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "n_chars"
-    )
-    corpus = doc.unionByName(recrawl)
+    corpus = _recrawled(spark, d, "text", "n_chars")
     wc = Window.partitionBy("text")
     wr = Window.partitionBy("text").orderBy(F.col("n_chars").desc(), "doc_id")
     return (
@@ -382,11 +392,7 @@ def dedup_exact_hash(spark: SparkSession, d: str) -> DataFrame:
     """Exact dedup via content hash. The fixture has no exact dups, so
     the corpus is documents ∪ a re-crawled 10% slice — dup groups are
     then (orig, copy) with the keeper = lowest doc_id."""
-    doc = t(spark, d, "documents").select("doc_id", "text")
-    recrawl = doc.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    corpus = doc.unionByName(recrawl)
+    corpus = _recrawled(spark, d, "text")
     return (
         corpus.groupBy(F.sha2("text", 256).alias("text_sha"))
         .agg(F.count(F.lit(1)).alias("n_copies"), F.min("doc_id").alias("keeper_doc_id"))
@@ -509,9 +515,9 @@ def dedup_simhash(spark: SparkSession, d: str) -> DataFrame:
     from ..llm.minhash import jaccard_verify, shingles
     from ..llm.simhash import simhash_candidate_pairs
 
-    # spread_scan (r13, guide §2.5): fingerprinting + shingling are
-    # map work over a one-task fixture scan (0.92 → 0.53 s at sf0.1);
-    # no-op on well-split inputs
+    # spread_scan: fingerprinting + shingling are map work, and a
+    # one-row-group fixture scan hands them to one task (0.92 → 0.53 s
+    # at sf0.1); no-op on well-split inputs
     doc = spread_scan(t(spark, d, "documents"), "doc_id")
     # candidate relation replays cheaply off the localCheckpointed
     # chunk slices, so prune_sets' second evaluation of it is a join
@@ -575,13 +581,13 @@ WHERE n_inter / CAST(sa.n + sb.n - n_inter AS DOUBLE) >= 0.02
 """
 
 
-@op("dedup_ngram_jaccard", _NGRAM_SQL)
-def dedup_ngram_jaccard(spark: SparkSession, d: str) -> DataFrame:
-    """Exact 3-gram Jaccard pairs within a `source` block (blocking key
-    bounds the quadratic join — the scale lever)."""
-    doc = t(spark, d, "documents")
-    # distinct shingle sets (shingles() keeps duplicates by design —
-    # this op's Jaccard is over sets, mirroring the oracle's DISTINCT)
+def _source_gram_overlap(doc: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b) for every doc pair of one
+    `source` sharing a 3-gram: the distinct-3-gram set sizes and their
+    intersection. The sets are distinct (shingles() keeps duplicates by
+    design; the n-gram measures are over sets, mirroring the oracles'
+    DISTINCT), and the source blocking key bounds the quadratic join —
+    the scale lever. Each caller applies its own measure and cut."""
     g = (
         shingles(doc, "doc_id", "text", k=3)
         .dropDuplicates(["doc_id", "shingle"])
@@ -598,10 +604,17 @@ def dedup_ngram_jaccard(spark: SparkSession, d: str) -> DataFrame:
     )
     sa = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     sb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+@op("dedup_ngram_jaccard", _NGRAM_SQL)
+def dedup_ngram_jaccard(spark: SparkSession, d: str) -> DataFrame:
+    """Exact 3-gram Jaccard pairs within a `source` block (blocking key
+    bounds the quadratic join — the scale lever)."""
+    doc = t(spark, d, "documents")
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double")
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _source_gram_overlap(doc)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= 0.02)
     )
@@ -940,7 +953,7 @@ _FRAME_STRIDE = 4
     # chunks in both engines (DuckDB substring and Python slicing are
     # both character-based), so the frame COUNT must be char-based
     # too. The former strlen() agreed on every ASCII fixture but
-    # overcounted frames ~3x on multibyte text — caught by the r13
+    # overcounted frames ~3x on multibyte text — caught by the
     # NFD-decomposed-text probe (tools/probe_nfd_text.py: 89 vs 93
     # rows on NFD Hangul docs), the one fixture class where
     # bytes-per-codepoint exceeds 1 on enough text to cross a
@@ -993,11 +1006,11 @@ _SPLIT_A = 2654435761
 _SPLIT_M = 4294967296
 _SPLIT_TRAIN = 3435973836  # ~floor(0.8 * 2^32)
 _SPLIT_VAL = 3865470565  # ~floor(0.9 * 2^32)
-# OVERFLOW-FREE (id * A) mod 2^32 (r11 r13-window probe): the naive
-# int64 product overflows for id > 2^63/A ≈ 3.47e9 — ANSI
-# ARITHMETIC_OVERFLOW in Spark, a multiplication-overflow error in
-# DuckDB; a corpus with more than ~3.5 billion documents would kill
-# the splitter. Decompose x = id mod 2^32 into 16-bit halves:
+# OVERFLOW-FREE (id * A) mod 2^32, because the naive int64 product
+# overflows for id > 2^63/A ≈ 3.47e9 — ANSI ARITHMETIC_OVERFLOW in
+# Spark, a multiplication-overflow error in DuckDB; a corpus with more
+# than ~3.5 billion documents would kill the splitter. Decompose
+# x = id mod 2^32 into 16-bit halves:
 #   (x·A) mod 2^32 = ((x_hi·A mod 2^16)·2^16 + x_lo·A) mod 2^32
 # — every intermediate < 2^48, and the result is bit-identical to
 # the naive form wherever that form didn't overflow (verified over
@@ -1007,7 +1020,7 @@ _SPLIT_VAL = 3865470565  # ~floor(0.9 * 2^32)
 # % 2^32 — a no-op for id >= 0): both engines' % follows the dividend
 # sign and both `//`/trunc-cast truncate toward zero, so a negative id
 # previously produced a negative "bucket" that depended on those
-# truncation semantics agreeing (ADVICE r11). On a nonnegative x the
+# truncation semantics agreeing across engines. On a nonnegative x the
 # 16-bit split below is pure integer arithmetic — Spark uses
 # shiftright(x, 16), never a float division.
 _SPLIT_X_SQL = f"((doc_id % {_SPLIT_M}) + {_SPLIT_M}) % {_SPLIT_M}"
@@ -1174,11 +1187,12 @@ def text_normalize_unicode(spark: SparkSession, d: str) -> DataFrame:
     # CASE gates the empty-array COALESCE ('' like Spark's array_join)
     # so a NULL embedding stays NULL in BOTH engines — an unconditional
     # COALESCE would turn DuckDB's NULL-input NULL into '' while Spark
-    # keeps NULL (round-6 review finding). The inner per-element
-    # COALESCE(..., '\N') mirrors Spark's array_join nullReplacement:
-    # without it BOTH engines silently SKIP NULL elements, so the
+    # keeps NULL, and the op would not match its oracle on a NULL
+    # embedding. The inner per-element COALESCE(..., '\N') mirrors
+    # Spark's array_join nullReplacement: without it BOTH engines
+    # silently SKIP NULL elements, so the
     # joined code vector would carry fewer components than `dim`
-    # reports (round-6 ADVICE — lossless requires count(q8) == dim).
+    # reports (lossless requires count(q8) == dim).
     """SELECT vec_id,
               CASE WHEN embedding IS NULL THEN NULL
                    ELSE COALESCE(array_to_string(
@@ -1202,8 +1216,8 @@ def vec_quantize_int8(spark: SparkSession, d: str) -> DataFrame:
     component count always equals `dim` — fixture embeddings contain
     no NULL elements today, but the encoding must not silently drop
     them) and flat-scalar, because the driver canonicalizer cannot
-    hash array-typed output columns (the agg_collect_sorted r5
-    failure class)."""
+    hash array-typed output columns (it fails with "unhashable
+    type" on them even when the values match)."""
     e = t(spark, d, "embeddings")
     q8 = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 127).cast("int")
@@ -1349,7 +1363,7 @@ def sample_stratified_exact(spark: SparkSession, d: str) -> DataFrame:
     """Exact stratified sampling: every stratum contributes exactly
     ceil(20%) of its rows, chosen by a deterministic multiplicative
     hash rank (the shared overflow-free _split_bucket — the naive
-    id*A product overflows int64 beyond ~3.5e9 ids; r11 probe) —
+    id*A product overflows int64 beyond ~3.5e9 ids) —
     reproducible across runs and engines, unlike df.sampleBy
     (Bernoulli, approximate per-stratum fractions). One window
     shuffle on the stratum key [EXT: train-split curation]."""
@@ -1389,10 +1403,9 @@ def text_unigram_logprob(spark: SparkSession, d: str) -> DataFrame:
     doc = t(spark, d, "documents")
     w = doc.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word"))
     # corpus token total from per-row split sizes, not from the
-    # exploded relation (optimization r13, guide §2.4): Σ size(split)
-    # ≡ count(explode(split)) exactly, but the count branch was one
-    # more full evaluation of the corpus-wide explode; this is a
-    # narrow map with no Generate
+    # exploded relation: Σ size(split) ≡ count(explode(split)) exactly,
+    # but counting the explode evaluates the corpus-wide Generate once
+    # more; this is a narrow map with no Generate
     n = doc.select(
         F.size(F.split(F.lower("text"), " ")).alias("_nt")
     ).agg(F.sum("_nt").cast("double").alias("total"))
@@ -1563,8 +1576,8 @@ def text_contamination_ngram(spark: SparkSession, d: str) -> DataFrame:
     # deliberately NO broadcast hint: in THIS fixture the src0 proxy is
     # a fixed 1/20 SLICE of the corpus, so its gram relation grows
     # linearly with the data and a forced broadcast would OOM exactly
-    # where the op must survive (round-6 review finding). In production
-    # the benchmark set is fixed-size — broadcast it THERE; here the
+    # where the op must survive. In production the benchmark set is
+    # fixed-size — broadcast it THERE; here the
     # gram-keyed shuffle join is the shape that holds at any volume.
     hits = (
         corpus.join(bench, "shingle")
@@ -1580,8 +1593,8 @@ def text_contamination_ngram(spark: SparkSession, d: str) -> DataFrame:
 @op(
     "text_repetition_score",
     # 2-gram signals exist only for docs with >= 2 words; Spark's
-    # shingles() emits none below k (round-4 convention), so the
-    # oracle filters the same universe
+    # shingles() emits none below k (the gram-family convention), so
+    # the oracle filters the same universe
     """WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS words
                   FROM documents
                   WHERE len(string_split(lower(text), ' ')) >= 2),
@@ -1665,15 +1678,11 @@ def vec_l2_normalize(spark: SparkSession, d: str) -> DataFrame:
     production shape is the array-valued narrow map (no shuffle); the
     REGISTERED output posexplodes it to long (vec_id, pos, u) rows
     because the driver canonicalizer cannot hash array-typed output
-    columns (the agg_collect_sorted r5 failure class) — each unit
+    columns (it fails with "unhashable type" on them) — each unit
     component is still the exact x/norm double."""
     e = t(spark, d, "embeddings")
     ad = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(ad, ad, lambda x, y: x * y),
-        F.lit(0).cast(DEC),
-        lambda s, x: (s + x.cast(DEC)).cast(DEC),
-    )
+    dot = dec_norm_sq(ad)
     # Materialize the norm as a column BEFORE the per-element divide:
     # referencing the norm expression inside the transform lambda would
     # re-evaluate the whole fold per element (O(dim²) per row — measured
@@ -1682,8 +1691,8 @@ def vec_l2_normalize(spark: SparkSession, d: str) -> DataFrame:
         "vec_id", ad.alias("ad"), F.sqrt(dot.cast("double")).alias("l2_norm")
     )
     # NULLIF: a zero vector has no unit direction — NULL elements in
-    # both engines instead of an ANSI DIVIDE_BY_ZERO (round-4
-    # adversarial probe)
+    # both engines instead of an ANSI DIVIDE_BY_ZERO, which would kill
+    # the stage on a corpus holding one all-zero embedding
     exploded = withnorm.select(
         "vec_id", F.posexplode("ad").alias("pos0", "x"), "l2_norm"
     )
@@ -1793,19 +1802,12 @@ def text_quality_linear(spark: SparkSession, d: str) -> DataFrame:
     map, no shuffle — at 100 TB this runs at scan speed."""
     doc = t(spark, d, "documents")
     words = F.split(F.lower("text"), " ")
-    stops = ["the", "a", "value", "data"]
-    n_stop = F.size(
-        F.filter(
-            words,
-            lambda w: (w == stops[0]) | (w == stops[1]) | (w == stops[2]) | (w == stops[3]),
-        )
-    )
     q = doc.select(
         "doc_id",
         "lang",
         F.col("n_chars").cast("bigint").alias("n_chars"),
         F.size(words).cast("bigint").alias("n_words"),
-        n_stop.cast("bigint").alias("n_stop"),
+        _n_stop(words).cast("bigint").alias("n_stop"),
     )
     awl_c = F.least(
         F.expr("(n_chars * 100) div n_words"), F.lit(800).cast("bigint")
@@ -1995,7 +1997,7 @@ def sample_temperature_mixture(spark: SparkSession, d: str) -> DataFrame:
     double); quotas are exact integer division of the 200-doc budget;
     the quota is filled by a deterministic multiplicative-hash rank
     within each source (the shared overflow-free _split_bucket — the
-    naive id*A product overflows int64 beyond ~3.5e9 ids; r11 probe)
+    naive id*A product overflows int64 beyond ~3.5e9 ids)
     — reproducible, no RNG, no collect. Shape at 100 TB: one
     combinable count, one tiny quota relation broadcast back, one
     per-source rank window."""
@@ -2051,9 +2053,9 @@ def vec_centroid_per_label(spark: SparkSession, d: str) -> DataFrame:
     any corpus size). Means are exact-sum / count — bit-identical
     doubles in both engines.
 
-    Output is LONG form, one row per (label, pos) component: the r5
-    driver canonicalizer cannot hash array-typed output columns (the
-    agg_collect_sorted failure), and long form is also the shape the
+    Output is LONG form, one row per (label, pos) component: the
+    driver canonicalizer cannot hash array-typed output columns (it
+    fails with "unhashable type"), and long form is also the shape the
     downstream consumers (kmeans refine, IVF assignment) join on —
     re-assembly into array<double> is one array_sort(collect_list)
     away when a caller wants it."""
@@ -2133,6 +2135,18 @@ _RP_COS_SQL = """
          AS DECIMAL(25,6)), 6) AS DOUBLE)"""
 
 
+# sim_rp_lsh_cosine's two band keys: band b is the sign bits of the
+# plane dot products dp{8b}..dp{8b+7} as a '0'/'1' string
+_RP_BAND_KEYS = [
+    "concat("
+    + ", ".join(
+        f"CASE WHEN dp{p} >= 0 THEN '1' ELSE '0' END" for p in range(lo, lo + 8)
+    )
+    + ")"
+    for lo in (0, 8)
+]
+
+
 @op(
     "sim_rp_lsh_cosine",
     f"""WITH planes AS (
@@ -2183,7 +2197,7 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     contract as dedup_minhash_lsh but for the embedding column.
     The oracle mirrors the banding exactly (deterministic planes), so
     approximate recall is certified, not hidden."""
-    from ..llm.minhash import candidate_pairs
+    from ..llm.minhash import candidate_pairs, explode_bands
 
     e = t(spark, d, "embeddings")
     comps = e.select(
@@ -2215,31 +2229,7 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
         ]
     )
 
-    def _band_key(lo: int):
-        return F.concat(
-            *[
-                F.when(F.col(f"dp{p}") >= 0, F.lit("1")).otherwise(F.lit("0"))
-                for p in range(lo, lo + 8)
-            ]
-        )
-
-    sigs = dots.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit(0).alias("band_idx"), _band_key(0).alias("band_key")
-                ),
-                F.struct(
-                    F.lit(1).alias("band_idx"), _band_key(8).alias("band_key")
-                ),
-            )
-        ).alias("bk"),
-    ).select(
-        "vec_id",
-        F.col("bk.band_idx").alias("band_idx"),
-        F.col("bk.band_key").alias("band_key"),
-    )
+    sigs = explode_bands(dots, ["vec_id"], "band_idx", "band_key", _RP_BAND_KEYS)
 
     # bucket-occupancy cap (llm/minhash.py cap_buckets):
     # a degenerate corpus — heavy exact duplicates, all-zero vectors —
@@ -2395,9 +2385,9 @@ def vec_kmeans_refine(spark: SparkSession, d: str) -> DataFrame:
     (tie-broken by cell id) is bit-identical across engines — that is
     what lets an iterative ML-style algorithm be certified by a SQL
     oracle with two unrolled iterations."""
-    # spread_scan (r13, guide §2.5): the cached exploded components
-    # inherit the one-task scan's partitioning, so every assignment
-    # pass ran single-core (1.88 → 1.20 s at sf0.1); no-op on
+    # spread_scan: the cached exploded components inherit the
+    # one-task scan's partitioning, so every assignment pass ran
+    # single-core (1.88 → 1.20 s at sf0.1); no-op on
     # well-split inputs
     e = spread_scan(t(spark, d, "embeddings"), "vec_id")
     # cache: comps feeds assign(c1), the centroid update, and
@@ -2483,6 +2473,47 @@ def vec_kmeans_refine(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
+def _fake_resize(doc: DataFrame, schema: StructType) -> DataFrame:
+    """Decode and resize each (doc_id, content) payload via mapInPandas,
+    keeping the ``schema`` columns of (doc_id, n_bytes, src_w, src_h,
+    dst_w, dst_h, resized_sha). The decoder is a deterministic fake —
+    geometry from byte length, image libs are absent offline — then an
+    aspect-preserving integer box fit to 64 px and a digest of the
+    resized image. The batch function is a closure, so Spark pickles it
+    by value and the workers need not import this package."""
+    cols = schema.fieldNames()
+
+    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            n = pdf["content"].map(len).astype("int64")
+            src_w = (n % 256 + 1).astype("int64")
+            src_h = ((n // 256) % 256 + 1).astype("int64")
+            wide = src_w >= src_h
+            dst_w = (src_w * 64 // src_h).where(~wide, 64).astype("int32")
+            dst_h = (src_h * 64 // src_w).where(wide, 64).astype("int32")
+            key = (
+                pdf["doc_id"].astype(str)
+                + "x" + pd.Series(dst_w).astype(str)
+                + "x" + pd.Series(dst_h).astype(str)
+            )
+            out = pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "n_bytes": n,
+                    "src_w": src_w.astype("int32"),
+                    "src_h": src_h.astype("int32"),
+                    "dst_w": dst_w,
+                    "dst_h": dst_h,
+                    "resized_sha": key.map(
+                        lambda s: hashlib.sha256(s.encode()).hexdigest()
+                    ),
+                }
+            )
+            yield out[cols]
+
+    return doc.mapInPandas(resize, schema=schema)
+
+
 _RESIZE_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -2522,40 +2553,12 @@ def multimodal_image_resize(spark: SparkSession, d: str) -> DataFrame:
     offline), but every piece of engine surface a real resizer needs
     is exercised: binary in, Arrow-batched partition-parallel Python,
     integer box-fit arithmetic (exact in both engines), bytes-shaped
-    output keyed by a verifiable digest. Swap `_fake_decode` for a
-    real imaging library and nothing else changes."""
+    output keyed by a verifiable digest. Swap `_fake_resize`'s body for
+    a real imaging library and nothing else changes."""
     doc = t(spark, d, "documents").select(
         "doc_id", F.encode("text", "utf-8").alias("content")
     )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["content"].map(len).astype("int64")
-            # _fake_decode: geometry from byte length (no pixel libs here)
-            src_w = (n % 256 + 1).astype("int64")
-            src_h = ((n // 256) % 256 + 1).astype("int64")
-            wide = src_w >= src_h
-            dst_w = (src_w * 64 // src_h).where(~wide, 64).astype("int32")
-            dst_h = (src_h * 64 // src_w).where(wide, 64).astype("int32")
-            key = (
-                pdf["doc_id"].astype(str)
-                + "x" + pd.Series(dst_w).astype(str)
-                + "x" + pd.Series(dst_h).astype(str)
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "src_w": src_w.astype("int32"),
-                    "src_h": src_h.astype("int32"),
-                    "dst_w": dst_w,
-                    "dst_h": dst_h,
-                    "resized_sha": key.map(
-                        lambda s: hashlib.sha256(s.encode()).hexdigest()
-                    ),
-                }
-            )
-
-    return doc.mapInPandas(resize, schema=_RESIZE_SCHEMA)
+    return _fake_resize(doc, _RESIZE_SCHEMA)
 
 
 @op(
@@ -2807,8 +2810,8 @@ def sample_negative_pairs(spark: SparkSession, d: str) -> DataFrame:
     )
     # BOTH operands pre-reduced mod 2^31 BEFORE the *1000 and the LCG
     # multiply: the raw vec_id*1000 itself overflows past ~9.2e15 ids
-    # and the LCG product past ~8.3e6 (r10 find, generalized by the
-    # r12 extremes probe to hash-scale ids) — every intermediate now
+    # and the LCG product past ~8.3e6 (an ANSI ARITHMETIC_OVERFLOW on
+    # hash-scale ids, e.g. 64-bit hashed keys) — every intermediate now
     # stays < 2^62 at ANY id magnitude, and the result is identical
     # by modular arithmetic wherever the naive forms didn't overflow.
     pair_key = (
@@ -3053,11 +3056,15 @@ def pipeline_pretrain_e2e(spark: SparkSession, d: str) -> DataFrame:
     (drop survivors sharing ≥3 distinct 5-grams with any 'src0'
     benchmark doc) → deterministic train/val/test split.
 
-    Each stage is an individually certified registry op
-    (pipeline_corpus_curation, dedup_minhash_lsh,
-    text_contamination_ngram); this op certifies their COMPOSITION —
-    filters feed the dedup, the dedup feeds the screen, one dataflow,
-    no driver round-trips. Scale: the near-dup stage inherits
+    The stages share the engine's builders, not whole registry ops:
+    the near-dup stage is ``minhash_near_dups`` (the pipeline behind
+    dedup_minhash_lsh) and the contamination screen is built on
+    ``shingles``. The gate and the exact dedup are this op's own (a
+    min(struct) aggregate, not pipeline_corpus_curation's window), and
+    contamination is screened by its own 5-gram join on the
+    exact-deduped corpus, not through text_contamination_ngram. This
+    op certifies the COMPOSITION — filters feed the dedup, the dedup
+    feeds the screen, one dataflow, no driver round-trips. Scale: the near-dup stage inherits
     minhash's capped-bucket candidate bound on the (already gated and
     exact-deduped) corpus; the contamination join is keyed on the
     gram with the benchmark side small-by-construction."""
@@ -3074,12 +3081,12 @@ def pipeline_pretrain_e2e(spark: SparkSession, d: str) -> DataFrame:
     gated = sized.filter(
         (F.col("lang") == "en") & F.col("n_words").between(20, 70)
     )
-    # exact dedup as a combinable aggregate (optimization r13, guide
-    # §2.3 'aggregate before you shuffle'): min(struct(doc_id, ...))
-    # keeps exactly the row_number()=1 row (doc_id leads the struct,
-    # so lexicographic min ≡ ORDER BY doc_id; n_words/source ride
-    # along from the winning row — n_words is text-derived and
-    # identical across dups anyway). Unlike the former text-keyed
+    # exact dedup as a combinable aggregate, so rows combine before
+    # they shuffle: min(struct(doc_id, ...)) keeps exactly the
+    # row_number()=1 row (doc_id leads the struct, so lexicographic
+    # min ≡ ORDER BY doc_id; n_words/source ride along from the
+    # winning row — n_words is text-derived and identical across dups
+    # anyway). Unlike the former text-keyed
     # window, this gets MAP-SIDE partial aggregation, so duplicate
     # rows collapse before the exchange instead of all shipping to
     # one partition per text.
@@ -3093,12 +3100,11 @@ def pipeline_pretrain_e2e(spark: SparkSession, d: str) -> DataFrame:
             F.col("_r.source").alias("source"),
         )
     )
-    # Evaluate the dedup subtree ONCE (optimization r14, VERDICT r13
-    # item 1, guide §2.4/§5): the r13 shape re-ran the groupBy(text)
-    # aggregation once per downstream reference — the driver counted 8
-    # evaluations (32 min(struct) nodes, 0 ReusedExchange) and the op
-    # regressed 2.98→5.23 s at local[32] while running FASTER on 8
-    # cores (eight concurrent full-text hash-aggregation maps are
+    # Evaluate the dedup subtree ONCE: without a materialization the
+    # plan re-ran the groupBy(text) aggregation once per downstream
+    # reference — 8 evaluations (32 min(struct) nodes, 0
+    # ReusedExchange) — and the op regressed 2.98→5.23 s at local[32]
+    # while running FASTER on 8 cores (eight concurrent full-text hash-aggregation maps are
     # exactly the memory/GC shape that worsens with parallelism).
     # localCheckpoint(eager=False) truncates the lineage so every
     # branch reads the one materialized corpus instead of rebuilding
@@ -3106,9 +3112,9 @@ def pipeline_pretrain_e2e(spark: SparkSession, d: str) -> DataFrame:
     # cache() was re-tested and is still slower (2.40 vs 1.75 s
     # bench-protocol median at sf0.1 — columnar write overhead), and
     # the window-dedup revert (1.90 s) loses map-side partial
-    # aggregation at scale. Fault-tolerance trade documented in guide
-    # §5: a lost executor forfeits checkpoint blocks — acceptable for
-    # an in-query intermediate that production would sink to parquet.
+    # aggregation at scale. The fault-tolerance trade: a lost executor
+    # forfeits checkpoint blocks — acceptable for an in-query
+    # intermediate that production would sink to parquet.
     corpus = exact.filter(F.col("source") != "src0").localCheckpoint(
         eager=False
     )
@@ -3123,8 +3129,8 @@ def pipeline_pretrain_e2e(spark: SparkSession, d: str) -> DataFrame:
     )
     nd_drop = nd_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     survivors = corpus.join(nd_drop, "doc_id", "left_anti")
-    # contamination is screened on the CORPUS, not on survivors
-    # (optimization r14, guide §2.4 'fewer references'): a doc's
+    # contamination is screened on the CORPUS, not on survivors, so
+    # the survivors relation has fewer references: a doc's
     # contamination verdict depends only on its own 5-grams, so
     # screening the superset is set-identical after the final
     # anti-join — and `survivors` (which re-evaluates the whole
@@ -3299,33 +3305,7 @@ def pipeline_multimodal_e2e(spark: SparkSession, d: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("doc_id", "content")
     )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf["content"].map(len).astype("int64")
-            src_w = (n % 256 + 1).astype("int64")
-            src_h = ((n // 256) % 256 + 1).astype("int64")
-            wide = src_w >= src_h
-            dst_w = (src_w * 64 // src_h).where(~wide, 64).astype("int32")
-            dst_h = (src_h * 64 // src_w).where(wide, 64).astype("int32")
-            key = (
-                pdf["doc_id"].astype(str)
-                + "x" + pd.Series(dst_w).astype(str)
-                + "x" + pd.Series(dst_h).astype(str)
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n,
-                    "dst_w": dst_w,
-                    "dst_h": dst_h,
-                    "resized_sha": key.map(
-                        lambda s: hashlib.sha256(s.encode()).hexdigest()
-                    ),
-                }
-            )
-
-    feats = kept.mapInPandas(resize, schema=_MM_E2E_SCHEMA)
+    feats = _fake_resize(kept, _MM_E2E_SCHEMA)
     emb = t(spark, d, "embeddings").select(
         F.col("vec_id").alias("doc_id"), "label"
     )
@@ -3333,7 +3313,7 @@ def pipeline_multimodal_e2e(spark: SparkSession, d: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round-3 extension batch: substring-window dedup signal, per-doc keyword
+# Corpus-signal ops: substring-window dedup signal, per-doc keyword
 # extraction, snapshot novelty, perceptual-hash multimodal near-dup,
 # cross-source near-dup matrix, Gopher-style composite quality filter.
 # --------------------------------------------------------------------------
@@ -3404,9 +3384,8 @@ def dedup_substring_windows(spark: SparkSession, d: str) -> DataFrame:
         .cast("long")
         .alias("wh"),
     )
-    # ONE pass over the window relation (optimization r13, guide
-    # §2.4): ">= 2 distinct docs share this hash" ≡ min(doc_id) ≠
-    # max(doc_id) within the wh partition — two O(1)-state window
+    # ONE pass over the window relation: ">= 2 distinct docs share
+    # this hash" ≡ min(doc_id) ≠ max(doc_id) within the wh partition — two O(1)-state window
     # aggregates over a single wh-keyed exchange. The former
     # groupBy(wh)+countDistinct+join-back form evaluated the whole
     # explode+md5 window relation TWICE (once per branch) and paid two
@@ -3455,47 +3434,28 @@ SELECT doc_id, word, tfidf, CAST(rnk AS INT) AS rnk FROM r WHERE rnk <= 3
 @op("text_keyword_topk", _KEYWORD_SQL)
 def text_keyword_topk(spark: SparkSession, d: str) -> DataFrame:
     """Top-3 TF-IDF keywords per document [EXT: per-doc keyword
-    extraction for corpus tagging/routing]. Ranking runs on the
-    6-dp-rounded score (the cross-engine-stable value) with the word
-    as total-order tiebreak. Scale: the per-doc window partitions on
+    extraction for corpus tagging/routing]: text_tfidf's scores, ranked
+    per doc. Ranking runs on the 6-dp-rounded score (the
+    cross-engine-stable value) with the word as total-order tiebreak. Scale: the per-doc window partitions on
     doc_id — no global sort; the doc-frequency relation is unhinted
     (10^8+ distinct tokens at corpus scale must not broadcast)."""
-    doc = t(spark, d, "documents")
-    w = doc.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word"))
-    tf = w.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("cnt"))
-    dl = w.groupBy("doc_id").agg(F.count(F.lit(1)).alias("doclen"))
-    dfreq = w.groupBy("word").agg(F.countDistinct("doc_id").alias("dfn"))
-    n = doc.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-    scored = (
-        tf.join(dl, "doc_id")
-        .join(dfreq, "word")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            "word",
-            dround(
-                (F.col("cnt") / F.col("doclen"))
-                * F.log(F.col("n_docs") / F.col("dfn")),
-                6,
-            ).alias("tfidf"),
-        )
-    )
     win = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("word")
     )
     return (
-        scored.withColumn("rnk", F.row_number().over(win))
+        text_tfidf(spark, d).withColumn("rnk", F.row_number().over(win))
         .filter(F.col("rnk") <= 3)
         .select("doc_id", "word", "tfidf", F.col("rnk").cast("int").alias("rnk"))
     )
 
 
-# Short-doc guard (ADVICE r3): grams exist only for docs with >= 3
-# words. Spark's shingles() clips a short gram for tiny docs while the
-# `words[i] || ' ' || ...` oracle convention yields NULL (unjoinable),
-# so both engines filter size(words) >= 3 up front — the convention
-# for the whole gram family. Tokenization convention: single-space
-# word boundaries (the documents fixture is single-space-delimited;
+# Short-doc guard: grams exist only for docs with >= 3 words. Spark's
+# shingles() emits no gram for a doc under k words, and the
+# `words[i] || ' ' || ...` oracle convention yields NULL (unjoinable);
+# both engines also filter size(words) >= 3 up front, so the short-doc
+# edge is explicit in the op and its oracle rather than left to the two
+# gram builders — the convention for the whole gram family.
+# Tokenization convention: single-space word boundaries (the documents fixture is single-space-delimited;
 # shingles() splits \\s+, the oracles split ' ' — equivalent on this
 # corpus, and the guard makes the short-doc edge explicit rather than
 # fixture-dependent).
@@ -3608,11 +3568,7 @@ def multimodal_phash_neardup(spark: SparkSession, d: str) -> DataFrame:
     from ._util import _ensure_pkg_on_executors
 
     _ensure_pkg_on_executors(spark)
-    doc = t(spark, d, "documents").select("doc_id", "text")
-    recrawl = doc.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    corpus = doc.unionByName(recrawl).select(
+    corpus = _recrawled(spark, d, "text").select(
         "doc_id", F.encode("text", "utf-8").alias("content")
     )
 
@@ -3857,30 +3813,15 @@ FROM lx
 def text_perplexity_bucket(spark: SparkSession, d: str) -> DataFrame:
     """CCNet-style perplexity bucketing [EXT: Wenzek et al. 2020 —
     split each language's docs into head/middle/tail by LM perplexity;
-    head ~ clean text, tail ~ noise]: per-doc mean unigram NLL (the
-    offline LM stand-in, same signal as text_unigram_logprob), then
-    NTILE(3) within language ordered by (avg_nll, doc_id) — the id
-    tiebreak keeps the tertile assignment total-ordered and
-    deterministic at any parallelism. The NLL is an exact-decimal
-    mean, so ordering is cross-engine stable. Scale: two combinable
+    head ~ clean text, tail ~ noise]: text_unigram_logprob's per-doc
+    mean unigram NLL (the offline LM stand-in), then NTILE(3) within
+    language ordered by (avg_nll, doc_id) — the id tiebreak keeps the
+    tertile assignment total-ordered and deterministic at any
+    parallelism. The NLL is an exact-decimal mean, so ordering is
+    cross-engine stable. Scale: two combinable
     aggs + an unhinted vocab join (AQE decides), one per-lang window."""
     doc = t(spark, d, "documents")
-    w = doc.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word"))
-    # corpus token total from per-row split sizes, not from the
-    # exploded relation (optimization r13, guide §2.4): Σ size(split)
-    # ≡ count(explode(split)) exactly, but the count branch was one
-    # more full evaluation of the corpus-wide explode; this is a
-    # narrow map with no Generate
-    n = doc.select(
-        F.size(F.split(F.lower("text"), " ")).alias("_nt")
-    ).agg(F.sum("_nt").cast("double").alias("total"))
-    cnt = w.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    nll = (
-        w.join(cnt, "word")
-        .crossJoin(F.broadcast(n))
-        .groupBy("doc_id")
-        .agg(davg(-F.log(F.col("c") / F.col("total")), "avg_nll"))
-    )
+    nll = text_unigram_logprob(spark, d)
     lx = nll.join(doc.select("doc_id", "lang"), "doc_id")
     win = Window.partitionBy("lang").orderBy("avg_nll", "doc_id")
     tert = F.ntile(3).over(win)
@@ -3929,12 +3870,12 @@ def vec_covariance_matrix(spark: SparkSession, d: str) -> DataFrame:
     triangle) and partial-aggregated before the only shuffle —
     groupBy(i, j) with exactly 2080 groups, so shuffle volume is
     O(partitions x 2080), independent of corpus size."""
-    # spread_scan (r13, guide §2.5): the 2080-term pair explosion +
-    # partial aggregation is map work over a one-task fixture scan
-    # (1.47 → 1.21 s at sf0.1); no-op on well-split inputs
+    # spread_scan: the 2080-term pair explosion + partial aggregation
+    # is map work over a one-task fixture scan (1.47 → 1.21 s at
+    # sf0.1); no-op on well-split inputs
     emb = spread_scan(t(spark, d, "embeddings"), "vec_id")
-    # quantize ONCE per row (optimization r13, guide §1.2 step 2): the
-    # integer micro-unit array is computed 64 floors/row up front and
+    # quantize ONCE per row, not once per pair term: the integer
+    # micro-unit array is computed 64 floors/row up front and
     # both expansions read it — the former form re-applied floor()
     # inside the pair explosion (64×65 = 4160 floors per row) and
     # generated the full 64×64 grid only to drop the strict lower
@@ -4012,30 +3953,16 @@ ORDER BY score DESC, doc_id, chunk_idx LIMIT 5
 def pipeline_rag_e2e(spark: SparkSession, d: str) -> DataFrame:
     """End-to-end retrieval dataflow [EXT: the RAG serving path as one
     plan — chunk, embed-join, score, top-k]: 32-token/8-overlap chunks
-    (text_chunk_overlap's map-side grid), each chunk keyed to its
-    parent doc's embedding (the offline stand-in for a per-chunk
+    (text_chunk_overlap's map-side grid, called as that op), each
+    chunk keyed to its parent doc's embedding (the offline stand-in for a per-chunk
     encoder — the join/rank plumbing is the surface), cosine vs the
     deterministic query vector with a 0.001/chunk position penalty
     (later chunks rank below earlier ones at equal relevance), global
     top-5. Scale: chunking never shuffles; the embedding join is
     doc-keyed; the top-5 is per-partition top-k + single-reducer merge
     (TakeOrderedAndProject), never a global sort."""
-    doc = t(spark, d, "documents")
     emb = t(spark, d, "embeddings")
-    stride = _CHUNK_C - _CHUNK_O
-    wd = doc.select("doc_id", F.split(F.lower("text"), " ").alias("words"))
-    starts = F.sequence(
-        F.lit(1),
-        F.greatest(F.size("words") - F.lit(_CHUNK_O), F.lit(1)),
-        F.lit(stride),
-    )
-    chunks = wd.select("doc_id", "words", F.explode(starts).alias("i")).select(
-        "doc_id",
-        ((F.col("i") - 1) / stride).cast("int").alias("chunk_idx"),
-        F.concat_ws(" ", F.slice("words", F.col("i"), _CHUNK_C)).alias(
-            "chunk_text"
-        ),
-    )
+    chunks = text_chunk_overlap(spark, d).drop("n_tokens")
     # each doc is scored once, before the join fans it out to its chunks
     q, qn = query(query_vector())
     docs = normed(emb, F.col("vec_id").alias("doc_id")).select(
@@ -4095,8 +4022,8 @@ def canonicalize_url(url: Column) -> Column:
     Property-tested over randomized decorations in
     tests/test_properties.py; the SQL oracle mirrors the chain.
 
-    Regex-anchor contract (r9 probe + r10 ADVICE): the fragment strip
-    is '(?s)#.*' — dotall, unanchored. Unanchored because with a '$'
+    Regex-anchor contract (both engines' regex dialects probed): the
+    fragment strip is '(?s)#.*' — dotall, unanchored. Unanchored because with a '$'
     the engines diverge on any url containing a newline (Java's $
     matches before a final terminator, RE2's does not); DOTALL because
     the engines' plain '.' classes differ too — Java's '.' excludes
@@ -4235,31 +4162,17 @@ def pipeline_ccnet_e2e(spark: SparkSession, d: str) -> DataFrame:
     raw text), unigram-NLL tertiles within each PREDICTED language,
     and the exact-substring duplication fraction; keep = head/middle
     tertile AND dup_frac <= 0.5; output per (lang, bucket) doc/token
-    accounting. Composition of three certified per-doc relations
-    (text_lang_id, text_perplexity_bucket's NLL, dedup_substring_
-    windows' dup fraction) joined on doc_id — three combinable agg
-    pipelines + one per-lang window; nothing quadratic anywhere."""
+    accounting. Composition of three certified per-doc relations, each
+    built by calling its registry op (text_lang_id's prediction,
+    text_unigram_logprob's NLL, dedup_substring_windows' dup fraction)
+    and joined on doc_id — three combinable agg pipelines + one
+    per-lang window; nothing quadratic anywhere."""
     doc = t(spark, d, "documents")
     langp = text_lang_id(spark, d).select("doc_id", "lang_pred")
     ntok = doc.select(
         "doc_id", F.size(F.split(F.lower("text"), " ")).alias("n_tokens")
     )
-    w = doc.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word"))
-    # corpus token total from per-row split sizes, not from the
-    # exploded relation (optimization r13, guide §2.4): Σ size(split)
-    # ≡ count(explode(split)) exactly, but the count branch was one
-    # more full evaluation of the corpus-wide explode; this is a
-    # narrow map with no Generate
-    n = doc.select(
-        F.size(F.split(F.lower("text"), " ")).alias("_nt")
-    ).agg(F.sum("_nt").cast("double").alias("total"))
-    cnt = w.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    nll = (
-        w.join(cnt, "word")
-        .crossJoin(F.broadcast(n))
-        .groupBy("doc_id")
-        .agg(davg(-F.log(F.col("c") / F.col("total")), "avg_nll"))
-    )
+    nll = text_unigram_logprob(spark, d)
     dupf = dedup_substring_windows(spark, d).select("doc_id", "dup_frac")
     scored = (
         langp.join(nll, "doc_id").join(dupf, "doc_id").join(ntok, "doc_id")
@@ -4342,7 +4255,7 @@ def sample_epoch_shuffle(spark: SparkSession, d: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# BM25 retrieval + containment near-dup (round-3 continuation)
+# BM25 retrieval + containment near-dup
 # --------------------------------------------------------------------------
 
 _BM25_TERMS = ("vector", "merge", "spark")
@@ -4492,26 +4405,9 @@ def dedup_ngram_containment(spark: SparkSession, d: str) -> DataFrame:
     doc = t(spark, d, "documents").filter(
         F.size(F.split(F.lower("text"), " ")) >= 3
     )
-    g = (
-        shingles(doc, "doc_id", "text", k=3)
-        .dropDuplicates(["doc_id", "shingle"])
-        .join(doc.select("doc_id", "source"), "doc_id")
-    )
-    sz = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = g.select(F.col("doc_id").alias("doc_a"), "source", "shingle")
-    b = g.select(F.col("doc_id").alias("doc_b"), "source", "shingle")
-    inter = (
-        a.join(b, ["source", "shingle"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sz.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sz.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     cont = F.col("n_inter") / F.least("n_a", "n_b").cast("double")
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _source_gram_overlap(doc)
         .select("doc_a", "doc_b", cont.alias("containment"))
         .filter(F.col("containment") >= 0.5)
     )
@@ -4568,8 +4464,7 @@ def vec_pca_power_iteration(spark: SparkSession, d: str) -> DataFrame:
     (|component| ≲ 2, i.e. normalized vectors — the corpus contract):
     the exact-integer stages need Σ w1q² < 2^63, which bounds |cov|
     at ~6; out-of-domain magnitudes raise a loud ANSI overflow
-    instead of silently losing exactness (round-4 adversarial
-    probe)."""
+    instead of silently losing exactness."""
     # cache: the 2080-row covariance relation feeds both orientation
     # branches and both iterations — uncached, ReusedExchange still
     # re-runs the corpus-sized pair explosion for the second branch
@@ -4634,7 +4529,8 @@ def vec_pca_power_iteration(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-# Fully integer dot product (round 4): xi = round(x·2^24) is exact for
+# Fully integer dot product, so no double→DECIMAL midpoint can round
+# apart across engines: xi = round(x·2^24) is exact for
 # float32 components, m = round(v2·1e6) recovers the 6-dp-certified
 # direction as an exact BIGINT, so Σ xi·m is one exact integer in both
 # engines (|Σ| ≤ 64·2^25·1e6 ≈ 2.1e15 « 2^63 under the unit-scale
@@ -4676,7 +4572,7 @@ def vec_pca_project(spark: SparkSession, d: str) -> DataFrame:
     exact integer in both engines and the 6-dp result is a sign-aware
     integer HALF_UP — no double→DECIMAL step (whose repr-vs-binary
     midpoint hazard fires on dyadic components, e.g. int8-dequantized
-    embeddings; round-4 adversarial probe)."""
+    embeddings)."""
     pca = vec_pca_power_iteration(spark, d).select(
         F.col("dim").alias("pos"),
         F.round(F.col("v2") * 1000000).cast("long").alias("m"),
@@ -4700,9 +4596,9 @@ def vec_pca_project(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-# Sampled-audit truth side (VERDICT r3 item 3): the exhaustive
-# exact-Jaccard truth relation is deliberately unscalable, so the
-# audit universe is a deterministic md5 doc sample (60-bit md5 of the
+# Sampled-audit truth side, so that the audit itself scales: the
+# exhaustive exact-Jaccard truth relation is quadratic, so the audit
+# universe is a deterministic md5 doc sample (60-bit md5 of the
 # id, mod 100 < _EVAL_TRUTH_PCT) — the posture production recall
 # audits actually run, and the quadratic truth join shrinks ~pct².
 # The CERTIFIED mode is the sampled mode (pct=30 < 100); both the
@@ -4758,8 +4654,8 @@ def dedup_eval_simhash_recall(spark: SparkSession, d: str) -> DataFrame:
     """Measured precision/recall of the production simhash near-dup
     pipeline against exhaustive exact ground truth [EXT: the eval
     harness every approximate dedup deployment needs — banding/slicing
-    recall is an empirical property (it BROKE at sf0.1 in round 2),
-    so it must be measured, not assumed].
+    recall is an empirical property (capped slices once lost true
+    pairs at sf0.1), so it must be measured, not assumed].
 
     Truth = every pair with exact 3-gram Jaccard ≥ 0.5 within a
     DETERMINISTIC md5 doc sample (_EVAL_TRUTH_PCT = 30% of ≥3-word
@@ -4853,9 +4749,9 @@ def dedup_eval_simhash_recall(spark: SparkSession, d: str) -> DataFrame:
 def vec_pca_domain_check(spark: SparkSession, d: str) -> DataFrame:
     """PCA-family domain precondition [EXT: the unit-scale contract
     |x| ≤ 2 that vec_pca_power_iteration / vec_pca_project's integer
-    fixed-point exactness bound (Σw·q² < 2^63) assumes — VERDICT r4/r5
-    carried risk: out-of-domain corpora previously surfaced only as a
-    loud ANSI overflow mid-iteration].
+    fixed-point exactness bound (Σw·q² < 2^63) assumes — without it an
+    out-of-domain corpus surfaces only as a loud ANSI overflow
+    mid-iteration].
 
     Run BEFORE the PCA ops: one combinable aggregate over the exploded
     components (map-side partials, a single 1-row shuffle at any

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._util import DEC, dround, sql_dround, t
+from ._util import dec_norm_sq, dround, sql_dround, t
 from .registry import op
 
 
@@ -418,12 +418,7 @@ def array_fold_dot(spark: SparkSession, d: str) -> DataFrame:
     order-independent on both engines — raw double sums accumulate in
     engine-specific order and can round apart at the 6th decimal."""
     e = t(spark, d, "embeddings")
-    ad = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(ad, ad, lambda x, y: x * y),
-        F.lit(0).cast(DEC),
-        lambda s, x: (s + x.cast(DEC)).cast(DEC),
-    )
+    dot = dec_norm_sq(F.transform("embedding", lambda x: x.cast("double")))
     return e.select(
         "vec_id",
         dot.cast("double").alias("norm_sq"),
