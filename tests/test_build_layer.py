@@ -44,15 +44,17 @@ from tpc_di_etl_using_pyspark_spark.plans.llm import _RP_BAND_KEYS
 from tpc_di_etl_using_pyspark_spark.plans.registry import all_queries
 from tpc_di_etl_using_pyspark_spark.schemas import FINWIRE_CMP_LAYOUT
 from tpc_di_etl_using_pyspark_spark.sources.fixedwidth import parse_fixed_width
+from tpc_di_etl_using_pyspark_spark.tpcdi.pipeline import report, sql_str
 
 # the F.* forms took 2,541 (signature + band keys) and 264 (CMP layout)
 MAX_MINHASH_ROUND_TRIPS = 200
 MAX_FIXED_WIDTH_ROUND_TRIPS = 40
 # 19 with a label-initialisation checkpoint and a count job per superstep
 MAX_CLUSTER_CC_JOBS = 14
-# a warm build of tpcdi_batch_e2e at sf0.01 takes 1,242; 3,198 with
-# PySpark's call-site capture on and a schema inference per read
-MAX_BATCH_E2E_ROUND_TRIPS = 1_800
+# a warm build of tpcdi_batch_e2e at sf0.01 takes 1,015; 1,242 with its
+# audit report rows built by F.* calls, 3,198 with PySpark's call-site
+# capture on and a schema inference per read
+MAX_BATCH_E2E_ROUND_TRIPS = 1_200
 
 
 @contextmanager
@@ -188,6 +190,26 @@ def _fixed_width_f(lines, layout, value_col="value"):
     )
 
 
+def _report_f(stats, rows):
+    return stats.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(2).alias("batch_id"),
+                        F.lit(src).alias("source"),
+                        F.col(n).cast("string").alias("text"),
+                        F.when(F.col(n) == F.col("_e"), "true")
+                        .otherwise("false")
+                        .alias("ok"),
+                    )
+                    for src, n in rows
+                ]
+            )
+        )
+    )
+
+
 def test_minhash_round_trip_budget(spark):
     sh = shingles(_docs(spark), "doc_id", "text", 3)
     with _round_trips(spark) as n:
@@ -233,6 +255,28 @@ def test_fixed_width_sql_text_plans_like_functions(spark):
     assert _plan(parse_fixed_width(lines, FINWIRE_CMP_LAYOUT)) == _plan(
         _fixed_width_f(lines, FINWIRE_CMP_LAYOUT)
     )
+
+
+def test_report_sql_text_plans_like_functions(spark):
+    stats = spark.range(6).agg(
+        F.count(F.lit(1)).alias("_n"), F.sum("id").alias("_s"), F.max("id").alias("_e")
+    )
+    got = report(
+        stats,
+        ["batch_id", "source", "text", "ok"],
+        [
+            ("2", f"'{src}'", f"CAST({n} AS STRING)", f"CASE WHEN {n} = _e THEN 'true' ELSE 'false' END")
+            for src, n in [("count", "_n"), ("sum", "_s")]
+        ],
+    )
+    assert _plan(got) == _plan(_report_f(stats, [("count", "_n"), ("sum", "_s")]))
+    assert got.collect() == [(2, "count", "6", "false"), (2, "sum", "15", "false")]
+
+
+def test_report_quotes_string_literals(spark):
+    name = "it's a \\ name"
+    got = report(spark.range(1), ["s"], [(sql_str(name),)])
+    assert got.collect()[0].s == name
 
 
 def test_fixed_width_quotes_parameter_identifiers(spark):

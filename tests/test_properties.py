@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from tpc_di_etl_using_pyspark_spark.llm.components import connected_components
 from tpc_di_etl_using_pyspark_spark.tpcdi.pipeline import (
     cdc_apply,
+    scd2_audit,
     scd2_build,
-    scd2_validate,
 )
 
 # default 12 keeps the suite fast; periodic mining runs raise it:
@@ -52,7 +52,7 @@ def test_scd2_intervals_always_valid(spark, rows):
         "k int, eff date, attr string, tb int",
     )
     dim = scd2_build(df, "k", "eff", ["attr"], "tb")
-    assert scd2_validate(dim, "k").count() == 0
+    assert scd2_audit(dim, "k").first()["n_violations"] == 0
     cur = dim.filter("is_current").groupBy("k").count()
     assert cur.filter("count != 1").count() == 0
     # version count per key == action count per key

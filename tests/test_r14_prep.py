@@ -16,9 +16,10 @@ Deferred items, each with an executable pin below:
    because no event landed within ~2 µs below a second boundary):
    dedup_latest_by_key, stream_session_window (via MIN(ts)),
    stream_watermark_late, stream_foreachbatch_upsert — plus
-   _util.sql_epoch_s itself and its two adopters (tpcdi_dim_trade,
-   events_funnel). The whole-second sites (l_shipdate / o_orderdate /
-   date_trunc inputs) are immune: EPOCH's double is exact on whole
+   the two oracles that went through a forwarding helper
+   (tpcdi_dim_trade, events_funnel; they now call sql_epoch_floor_s).
+   The whole-second sites (l_shipdate / o_orderdate / date_trunc
+   inputs) are immune: EPOCH's double is exact on whole
    seconds far below 2^53. test_floor_epoch_site_census pins the
    exact census so a new site cannot appear unnoticed.
    EMPIRICALLY CONFIRMED r13 (tools/probe_r13_epoch_edge.py fraction
@@ -54,11 +55,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tpc_di_etl_using_pyspark_spark.plans import registry
-from tpc_di_etl_using_pyspark_spark.plans._util import (
-    epoch_s,
-    sql_epoch_floor_s,
-    sql_epoch_s,
-)
+from tpc_di_etl_using_pyspark_spark.plans._util import epoch_s, sql_epoch_floor_s
 
 # The 11 oracles r13 migrated to the exact integer floor.
 MIGRATED_R13 = {
@@ -77,15 +74,14 @@ MIGRATED_R13 = {
 
 # Former old-form sites on the µs-fractional events.ts column —
 # MIGRATED in r14 (this round): the four literal sites carry the
-# sql_epoch_floor_s text, and _util.sql_epoch_s itself now emits the
-# exact integer floor-mod form (its adopters tpcdi_dim_trade /
-# events_funnel migrated with it).
+# sql_epoch_floor_s text, and tpcdi_dim_trade / events_funnel
+# interpolate sql_epoch_floor_s itself.
 R14_FRACTIONAL_SITES = {
     "dedup_latest_by_key",
     "stream_session_window",
     "stream_watermark_late",
     "stream_foreachbatch_upsert",
-    # sql_epoch_s adopters (the helper itself migrated with them)
+    # helper adopters
     "tpcdi_dim_trade",
     "events_funnel",
 }
@@ -145,42 +141,32 @@ def test_migrated_oracles_embed_the_helper_form():
     for op in sorted(MIGRATED_R13 | literal_r14):
         expr = aliased.get(op, "ts")
         assert sql_epoch_floor_s(expr) in oracles[op], op
-    # the helper adopters emit the same form through sql_epoch_s
-    from tpc_di_etl_using_pyspark_spark.plans._util import sql_epoch_s as ses
-
-    assert ses("ts") == sql_epoch_floor_s("ts")
+    # the helper adopters interpolate the same form
     for op in ("tpcdi_dim_trade", "events_funnel"):
+        assert sql_epoch_floor_s("ts") in oracles[op], op
         assert "FLOOR(EPOCH(" not in oracles[op], op
 
 
-def test_sql_epoch_s_adopters_are_exactly_the_pinned_pair():
-    """sql_epoch_s is interpolated only by tpcdi_dim_trade (2 sites)
-    and events_funnel (3 sites) — the r14 migration replaced the
-    helper body with sql_epoch_floor_s's form and elevates exactly
-    those two ops. (The emitted TEXT also appears verbatim in the
-    literal R14_FRACTIONAL_SITES oracles, so this pin is
-    source-level, not oracle-text-level.)"""
-    import inspect
-
-    from tpc_di_etl_using_pyspark_spark.plans import tpcdi_ops
-
-    import re
-
-    call = re.compile(r"(?<![a-z_])sql_epoch_s\(")  # not sql_epoch_floor_s(
-    src = inspect.getsource(tpcdi_ops)
-    assert len(call.findall(src)) == 5, call.findall(src)
-    # no other plans module interpolates it
+def test_epoch_floor_is_written_only_in_its_helper():
+    """The floor-mod text lives in _util.sql_epoch_floor_s alone: every
+    oracle interpolates the helper, so no copy can drift from it.
+    tpcdi_ops interpolates it at exactly 5 sites, tpcdi_dim_trade (2)
+    and events_funnel (3)."""
     import glob
+    import inspect
     import os
 
     import tpc_di_etl_using_pyspark_spark.plans as plans_pkg
+    from tpc_di_etl_using_pyspark_spark.plans import _util, tpcdi_ops
 
+    floor_mod = "% 1000000 + 1000000) % 1000000"
+    assert inspect.getsource(_util).count(floor_mod) == 1
+    assert not hasattr(_util, "sql_epoch_s")
     plans_dir = os.path.dirname(plans_pkg.__file__)
     for path in glob.glob(os.path.join(plans_dir, "*.py")):
-        base = os.path.basename(path)
-        if base in ("tpcdi_ops.py", "_util.py"):
-            continue
-        assert not call.search(open(path).read()), base
+        if os.path.basename(path) != "_util.py":
+            assert floor_mod not in open(path).read(), path
+    assert inspect.getsource(tpcdi_ops).count("sql_epoch_floor_s('ts')") == 5
 
 
 def test_pyds_cik_truncation_and_residue_recipe(spark, duck):

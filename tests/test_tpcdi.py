@@ -14,9 +14,9 @@ from tpc_di_etl_using_pyspark_spark.tpcdi.pipeline import (
     cdc_apply,
     fact_cash_balances,
     fact_market_history,
+    scd2_audit,
     scd2_build,
     scd2_change_filter,
-    scd2_validate,
     surrogate_lookup,
 )
 
@@ -35,11 +35,43 @@ def test_scd2_intervals_valid(spark, sf_dir):
     dim = scd2_build(
         _versions(spark, sf_dir), "o_custkey", "eff", ["o_orderstatus"], "o_orderkey"
     )
-    bad = scd2_validate(dim, "o_custkey")
-    assert bad.count() == 0
+    assert scd2_audit(dim, "o_custkey").first()["n_violations"] == 0
     # exactly one current row per key
     cur = dim.filter("is_current").groupBy("o_custkey").count()
     assert cur.filter("count != 1").count() == 0
+
+
+def test_scd2_audit_counts_each_violation(spark):
+    """A hand-broken dimension: a gap (key 1), a row never closed so
+    that two rows are current (key 2: a chain break plus a
+    multi-current key), a last version that is not current (key 3) and
+    an overlap (key 4) make 5 violations; key 5 is valid."""
+    import datetime
+
+    def day(s):
+        return datetime.date.fromisoformat(s)
+
+    rows = [
+        # key, version, effective_date, end_date, is_current
+        (1, 1, "2020-01-01", "2020-02-01", False),
+        (1, 2, "2020-03-01", "2020-04-01", False),
+        (1, 3, "2020-04-01", "9999-12-31", True),
+        (2, 1, "2020-01-01", "9999-12-31", True),
+        (2, 2, "2020-02-01", "9999-12-31", True),
+        (3, 1, "2020-01-01", "2020-05-01", False),
+        (4, 1, "2020-01-01", "2020-03-01", False),
+        (4, 2, "2020-02-01", "9999-12-31", True),
+        (5, 1, "2020-01-01", "2020-02-01", False),
+        (5, 2, "2020-02-01", "9999-12-31", True),
+    ]
+    dim = spark.createDataFrame(
+        [(k, v, day(e), day(x), c) for k, v, e, x, c in rows],
+        "k int, version int, effective_date date, end_date date, is_current boolean",
+    )
+    got = scd2_audit(dim, "k").first()
+    assert (got.n_rows, got.n_current, got.n_violations) == (10, 5, 5)
+    valid = scd2_audit(dim.filter("k = 5"), "k").first()
+    assert (valid.n_rows, valid.n_current, valid.n_violations) == (2, 1, 0)
 
 
 def test_scd2_change_filter_shrinks_and_preserves_first(spark, sf_dir):
@@ -246,7 +278,7 @@ def test_scd2_incremental_equals_rebuild(spark, sf_dir):
     a = sorted(tuple(r[c] for c in cols) for r in incr.collect())
     b = sorted(tuple(r[c] for c in cols) for r in rebuilt.collect())
     assert a == b
-    assert scd2_validate(incr, "o_custkey").count() == 0
+    assert scd2_audit(incr, "o_custkey").first()["n_violations"] == 0
 
 
 def test_scd2_incremental_rejects_late_batch(spark, sf_dir):
@@ -279,12 +311,12 @@ def test_finwire_warehouse_tables(spark, sf_dir):
     )
 
     comp = tpcdi_dim_company(spark, sf_dir)
-    assert scd2_validate(comp, "cik").count() == 0
+    assert scd2_audit(comp, "cik").first()["n_violations"] == 0
     n_supp = t(spark, sf_dir, "supplier").count()
     assert comp.filter("is_current").count() == n_supp
 
     sec = tpcdi_dim_security(spark, sf_dir)
-    assert scd2_validate(sec, "symbol").count() == 0
+    assert scd2_audit(sec, "symbol").first()["n_violations"] == 0
     # every action date falls inside its resolved company version
     bad = sec.filter(
         F.col("sk_company").isNotNull()
@@ -321,7 +353,7 @@ def test_fact_watches_and_dimaccount_semantics(spark, sf_dir):
     assert w.filter(F.col("is_active") != F.col("date_removed").isNull()).count() == 0
 
     acct = tpcdi_scd2_dimaccount(spark, sf_dir)
-    assert scd2_validate(acct, "account_id").count() == 0
+    assert scd2_audit(acct, "account_id").first()["n_violations"] == 0
     assert acct.filter(
         (F.col("version") == 1) & (F.col("action_type") != "ADDACCT")
     ).count() == 0

@@ -127,6 +127,7 @@ def bucket_stats(spark) -> dict[str, dict]:
         shingles,
     )
     from tpc_di_etl_using_pyspark_spark.llm.simhash import fingerprint_slices, simhash
+    from tpc_di_etl_using_pyspark_spark.plans.llm import _rp_band_sigs
 
     doc = t(spark, SCALED, "documents")
     emb = t(spark, SCALED, "embeddings")
@@ -141,45 +142,8 @@ def bucket_stats(spark) -> dict[str, dict]:
     ch = fingerprint_slices(simhash(doc, "doc_id", "text"), "doc_id", 15)
     out["simhash slices (15-bit)"] = _occupancy(ch, ["chunk_idx", "chunk"])
 
-    # rp-LSH band keys: the same key values as sim_rp_lsh_cosine's
-    # bands, built another way — a planes join and a sorted collect_list
-    # per band, where the op computes the plane weights inline and
-    # explodes both band keys with explode_bands
-    comps = emb.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long")
-            )
-        ),
-    ).select("vec_id", F.col("pos").alias("j"), F.col("col").alias("xi"))
-    lcg = F.lit(1103515245).cast("long") * F.col("id") + 12345
-    planes = spark.range(16 * 64).select(
-        (F.col("id") / 64).cast("long").alias("p"),
-        (F.col("id") % 64).alias("j"),
-        (((lcg - lcg % 65536) / 65536).cast("long") % 2048 - 1024).alias("w"),
-    )
-    dots = (
-        comps.join(F.broadcast(planes), "j")
-        .groupBy("vec_id", "p")
-        .agg(F.sum(F.col("xi") * F.col("w")).alias("dp"))
-    )
-    bit = F.when(F.col("dp") >= 0, F.lit("1")).otherwise(F.lit("0"))
-    sigs = (
-        dots.select(
-            "vec_id",
-            F.floor(F.col("p") / 8).cast("int").alias("band_idx"),
-            F.struct(F.col("p"), bit.alias("b")).alias("pb"),
-        )
-        .groupBy("vec_id", "band_idx")
-        .agg(
-            F.concat_ws(
-                "", F.transform(F.array_sort(F.collect_list("pb")), lambda s: s["b"])
-            ).alias("band_key")
-        )
-    )
     out["rp-LSH bands (16 planes, 2 bands)"] = _occupancy(
-        sigs, ["band_idx", "band_key"]
+        _rp_band_sigs(emb), ["band_idx", "band_key"]
     )
     return out
 

@@ -215,8 +215,8 @@ def dsum(col, alias: str) -> Column:
     is only bit-identical while |sum| < 2^53 micro-units (~9.0e9) —
     beyond that the decimal no longer fits a double exactly and the
     engines' conversion rounding can differ by 1 ulp (observed at
-    |values| ~1e15 in the round-4 adversarial probe; the driver
-    fixture and any realistic money domain sit far inside the bound).
+    |values| ~1e15 on a hostile fixture; the shipped fixtures
+    and any realistic money domain sit far inside the bound).
     """
     c = col if isinstance(col, Column) else F.col(col)
     return F.sum(c.cast(DEC)).cast("double").alias(alias)
@@ -259,8 +259,8 @@ def pz(col) -> Column:
     Engine-INTERNAL percentile interpolation is the one place the
     repo's identical-expression-tree discipline can't reach: Spark's
     `percentile` emits −0.0 where DuckDB's `quantile_cont` emits +0.0
-    when the interpolation lands between a ±pair (measured, r11
-    adversarial probe: p50 of (−0.01, −0.0, 0.0, 0.01), grouped AND
+    when the interpolation lands between a ±pair (measured on a
+    hostile fixture: p50 of (−0.01, −0.0, 0.0, 0.01), grouped AND
     rolling-window forms). The two values are equal everywhere except
     the driver's float.hex() canonicalizer, which is exactly where
     certification happens. Apply to every percentile-derived OUTPUT
@@ -276,8 +276,8 @@ def epoch_s(col) -> Column:
     NOT ``F.unix_timestamp``: that truncates toward zero, so a
     pre-epoch sub-second instant (1969-12-31 23:59:59.999999) maps to
     0 while every oracle's ``FLOOR(EPOCH(ts))`` — and Spark's own
-    ``F.window`` alignment — map it to second −1 (measured, r9
-    boundary probe; pinned in tests/test_r4_window_edges.py).
+    ``F.window`` alignment — map it to second −1 (measured;
+    pinned in tests/test_r4_window_edges.py).
 
     Built from CALENDAR FIELDS (datediff days + hour/minute/second),
     never an LTZ hop: a ``timestampdiff``/``cast("timestamp")`` form
@@ -285,7 +285,7 @@ def epoch_s(col) -> Column:
     value inside a DST spring-forward GAP (2024-03-10 02:30 under
     America/New_York) shifts by the gap width — measured +3600 s vs
     the UTC session, where DuckDB's ``EPOCH`` on NTZ is pure calendar
-    (r9 probe; canary-pinned in tests/test_r4_window_edges.py). Field
+    (canary-pinned in tests/test_r4_window_edges.py). Field
     extraction on TIMESTAMP_NTZ reads the stored wall clock directly,
     so the result is zone-free by construction, and the day/field
     split floors exactly for any sign: −1 µs → day −1 + 86 399 s
@@ -301,25 +301,14 @@ def epoch_s(col) -> Column:
     )
 
 
-# DuckDB: epoch() on a timestamp returns seconds; floor+cast makes the
-# ns-precision fixture match Spark's µs-truncated unix_timestamp.
-def sql_epoch_s(expr: str) -> str:
-    # r14 migration (pinned in tests/test_r14_prep.py): same exact
-    # integer floor as sql_epoch_floor_s — the former
-    # CAST(FLOOR(EPOCH(..)) AS BIGINT) went through DOUBLE seconds,
-    # whose ulp at 10-digit epochs is ~2 µs, shifting a .999999
-    # fraction +1 s. Adopters: tpcdi_dim_trade, events_funnel.
-    return sql_epoch_floor_s(expr)
-
-
-# Exact integer epoch-second floor for the DuckDB oracles (r13, SURVEY
-# §7.4o / tests/test_r13_prep.py): EPOCH() returns seconds as DOUBLE,
-# whose ulp at 10-digit epochs is ~2 µs, so a .999999 fraction rounds
-# UP and CAST(FLOOR(EPOCH(ts)) AS BIGINT) lands +1 s (canonical
-# divergent instant: TIMESTAMP '2287-01-05 12:00:00.999999'). The
-# floor-mod form below is the exact integer floor over epoch_us —
-# plain `// 1000000` would truncate toward zero and break pre-epoch
-# instants. Spark's integer calendar-field path was always correct;
+# Exact integer epoch-second floor for the DuckDB oracles: EPOCH()
+# returns seconds as DOUBLE, whose ulp at 10-digit epochs is ~2 µs, so
+# a .999999 fraction rounds UP and CAST(FLOOR(EPOCH(ts)) AS BIGINT)
+# lands +1 s (canonical divergent instant: TIMESTAMP '2287-01-05
+# 12:00:00.999999', pinned in tests/test_r13_prep.py). The floor-mod
+# form below is the exact integer floor over epoch_us — plain
+# `// 1000000` would truncate toward zero and break pre-epoch instants.
+# Spark's integer calendar-field path (epoch_s) was always correct;
 # only oracles use this.
 def sql_epoch_floor_s(expr: str) -> str:
     e = f"epoch_us({expr})"

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import epoch_s, spread_scan, t
+from ._util import epoch_s, spread_scan, sql_epoch_floor_s, t
 from .registry import op
 
 
@@ -225,7 +225,7 @@ def join_broadcast(spark: SparkSession, d: str) -> DataFrame:
     tests/test_plans.py), but at 100 TB they are fact-sized and must
     be free to shuffle; a hard hint would OOM the driver.
 
-    spread_scan (r13, guide §2.5): the whole broadcast-join chain +
+    spread_scan: the whole broadcast-join chain +
     partial aggregate is map-side work over a one-task fixture scan;
     re-spreading on the join key halved the op at sf0.1 (1.21 →
     0.66 s) and is a no-op on any well-split input."""
@@ -302,7 +302,7 @@ def join_range_between(spark: SparkSession, d: str) -> DataFrame:
     sort-merge/broadcast join with the range as a residual filter —
     never a nested-loop over the fact table.
 
-    spread_scan (r13, guide §2.5): the fact side's broadcast-join +
+    spread_scan: the fact side's broadcast-join +
     projection chain is map-side work over a one-task fixture scan;
     re-spreading on the order key measured 1.50 → 0.86 s at sf0.1,
     no-op on any well-split input.
@@ -327,18 +327,18 @@ def join_range_between(spark: SparkSession, d: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber", "o_custkey", "ver")
 
 
-_ASOF_SQL = """
+_ASOF_SQL = f"""
 WITH p AS (
-  SELECT event_id, user_id, (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS sec
+  SELECT event_id, user_id, {sql_epoch_floor_s('ts')} AS sec
   FROM events WHERE event_type = 'purchase')
 SELECT p.event_id, p.user_id, v.view_id AS asof_view_id
 FROM p LEFT JOIN LATERAL (
   SELECT e.event_id AS view_id
   FROM events e
   WHERE e.event_type = 'view' AND e.user_id = p.user_id
-    AND ((epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 < p.sec
-         OR ((epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 = p.sec AND e.event_id <= p.event_id))
-  ORDER BY (epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 DESC, e.event_id DESC
+    AND ({sql_epoch_floor_s('e.ts')} < p.sec
+         OR ({sql_epoch_floor_s('e.ts')} = p.sec AND e.event_id <= p.event_id))
+  ORDER BY {sql_epoch_floor_s('e.ts')} DESC, e.event_id DESC
   LIMIT 1) v ON TRUE
 """
 
@@ -568,11 +568,11 @@ def dedup_exact(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "dedup_latest_by_key",
-    """SELECT user_id, event_type, event_id, value FROM (
+    f"""SELECT user_id, event_type, event_id, value FROM (
          SELECT user_id, event_type, event_id, value,
                 ROW_NUMBER() OVER (
                   PARTITION BY user_id, event_type
-                  ORDER BY (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 DESC, event_id DESC) AS rn
+                  ORDER BY {sql_epoch_floor_s('ts')} DESC, event_id DESC) AS rn
          FROM events) WHERE rn = 1""",
 )
 def dedup_latest_by_key(spark: SparkSession, d: str) -> DataFrame:
@@ -741,19 +741,19 @@ def sql_lateral_topk(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "join_asof_tolerance",
-    """WITH p AS (
-         SELECT event_id, user_id, (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS sec
+    f"""WITH p AS (
+         SELECT event_id, user_id, {sql_epoch_floor_s('ts')} AS sec
          FROM events WHERE event_type = 'purchase')
        SELECT p.event_id, p.user_id, v.view_id AS asof_view_id_1h
        FROM p LEFT JOIN LATERAL (
          SELECT e.event_id AS view_id
          FROM events e
          WHERE e.event_type = 'view' AND e.user_id = p.user_id
-           AND ((epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 < p.sec
-                OR ((epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 = p.sec
+           AND ({sql_epoch_floor_s('e.ts')} < p.sec
+                OR ({sql_epoch_floor_s('e.ts')} = p.sec
                     AND e.event_id <= p.event_id))
-           AND p.sec - (epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 <= 3600
-         ORDER BY (epoch_us(e.ts) - ((epoch_us(e.ts) % 1000000 + 1000000) % 1000000)) // 1000000 DESC, e.event_id DESC
+           AND p.sec - {sql_epoch_floor_s('e.ts')} <= 3600
+         ORDER BY {sql_epoch_floor_s('e.ts')} DESC, e.event_id DESC
          LIMIT 1) v ON TRUE""",
 )
 def join_asof_tolerance(spark: SparkSession, d: str) -> DataFrame:

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ._util import DEC, SQL_DEC, dround, epoch_s, pz, t
+from ._util import DEC, SQL_DEC, dround, epoch_s, pz, sql_epoch_floor_s, t
 from .registry import op
 
 
@@ -79,10 +79,10 @@ def win_lead_scd2(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "win_lag_change",
-    """SELECT user_id, event_id, value,
+    f"""SELECT user_id, event_id, value,
               value - LAG(value) OVER (
                 PARTITION BY user_id
-                ORDER BY (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000, event_id) AS delta
+                ORDER BY {sql_epoch_floor_s('ts')}, event_id) AS delta
        FROM events""",
 )
 def win_lag_change(spark: SparkSession, d: str) -> DataFrame:
@@ -300,7 +300,6 @@ def win_ratio_total(spark: SparkSession, d: str) -> DataFrame:
     w = Window.partitionBy("o_custkey")
     # NULLIF: a partition whose signed amounts cancel to zero has no
     # defined share — NULL in both engines, not a DIVIDE_BY_ZERO
-    # (round-4 adversarial probe)
     total = F.nullif(
         F.sum(F.col("o_totalprice").cast("decimal(25,6)")).over(w).cast("double"),
         F.lit(0.0),
@@ -335,8 +334,8 @@ def win_nth_value(spark: SparkSession, d: str) -> DataFrame:
     )
     # +0.0 canonicalizes the IEEE zero sign: Spark normalizes -0.0 to
     # +0.0 inside window sort buffers while DuckDB returns the stored
-    # -0.0 — same number, different bits, a value-hash mismatch
-    # (round-4 adversarial probe); x + 0.0 maps -0.0 → +0.0 in BOTH
+    # -0.0 — same number, different bits, a value-hash mismatch;
+    # x + 0.0 maps -0.0 → +0.0 in BOTH
     # engines and is the identity elsewhere (NULL stays NULL).
     return o.select(
         "o_custkey",
@@ -387,12 +386,12 @@ def win_streaks(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "win_running_distinct",
-    """WITH f AS (
+    f"""WITH f AS (
          SELECT event_type, ts, event_id, user_id,
                 ROW_NUMBER() OVER (PARTITION BY event_type, user_id
                                    ORDER BY ts, event_id) AS occ
          FROM events)
-       SELECT event_type, (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS ts_sec, event_id,
+       SELECT event_type, {sql_epoch_floor_s('ts')} AS ts_sec, event_id,
               CAST(SUM(CASE WHEN occ = 1 THEN 1 ELSE 0 END) OVER (
                      PARTITION BY event_type ORDER BY ts, event_id
                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS distinct_users_so_far
@@ -425,14 +424,14 @@ def win_running_distinct(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "win_pattern_vshape",
-    """WITH s AS (
+    f"""WITH s AS (
          SELECT user_id, event_id, ts, value,
                 LAG(value) OVER w AS prev_v,
                 LEAD(value) OVER w AS next_v
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
        v AS (SELECT user_id, event_id,
-                    (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS ts_sec,
+                    {sql_epoch_floor_s('ts')} AS ts_sec,
                     prev_v, value, next_v
              FROM s
              WHERE prev_v IS NOT NULL AND next_v IS NOT NULL
@@ -475,11 +474,11 @@ def win_pattern_vshape(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "win_sessionize_gap",
-    """WITH marked AS (
+    f"""WITH marked AS (
          SELECT user_id, event_id,
-                (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS ts_s,
-                CASE WHEN (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000
-                          - LAG((epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000) OVER
+                {sql_epoch_floor_s('ts')} AS ts_s,
+                CASE WHEN {sql_epoch_floor_s('ts')}
+                          - LAG({sql_epoch_floor_s('ts')}) OVER
                             (PARTITION BY user_id ORDER BY ts, event_id)
                           > 1800
                           OR LAG(ts) OVER (PARTITION BY user_id
@@ -537,9 +536,9 @@ def win_sessionize_gap(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "win_range_time_interval",
-    """WITH e AS (
+    f"""WITH e AS (
          SELECT event_id, user_id,
-                (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS ts_s, value
+                {sql_epoch_floor_s('ts')} AS ts_s, value
          FROM events)
        SELECT event_id, user_id, ts_s,
               CAST(COUNT(*) OVER w AS BIGINT) AS n_1h,
@@ -580,12 +579,12 @@ def win_range_time_interval(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "win_interpolate_linear",
-    """WITH e AS (
+    f"""WITH e AS (
          SELECT event_id, user_id,
-                (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS ts_s, event_type,
+                {sql_epoch_floor_s('ts')} AS ts_s, event_type,
                 CASE WHEN event_type = 'purchase' THEN value END AS av,
                 CASE WHEN event_type = 'purchase'
-                     THEN (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 END AS at
+                     THEN {sql_epoch_floor_s('ts')} END AS at
          FROM events),
        f AS (
          SELECT event_id, user_id, ts_s, event_type,
@@ -730,7 +729,7 @@ def win_slope_rolling(spark: SparkSession, d: str) -> DataFrame:
     )
     n, sx, sy, sxy, sxx = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx"))
     # dround(6) mask: above the dsum conversion bound the engines can
-    # differ by 1 ulp in the moment doubles (round-4)
+    # differ by 1 ulp in the moment doubles
     slope = F.when(
         (n >= 3) & (n * sxx - sx * sx != 0),
         dround((n * sxy - sx * sy) / (n * sxx - sx * sx), 6),
@@ -754,7 +753,7 @@ def win_median_rolling(spark: SparkSession, d: str) -> DataFrame:
     bit-identical to DuckDB's quantile_cont (both linear-interpolate
     between the two middle order statistics), so no rounding mask is
     needed — EXCEPT the sign of zero when a frame's middle pair is
-    ±x (Spark −0.0, DuckDB +0.0; r11 rolling-window probe), hence
+    ±x (Spark −0.0, DuckDB +0.0), hence
     pz/+0.0 on the output. One shuffle+sort; the frame sort is reused
     from the window ordering."""
     li = t(spark, d, "lineitem")
@@ -806,7 +805,7 @@ def win_percent_of_parent(spark: SparkSession, d: str) -> DataFrame:
         "o_orderstatus",
         "rev",
         # NULLIF: a year whose signed revenues cancel to zero has no
-        # defined shares (round-4 adversarial probe)
+        # defined shares
         dround(
             F.col("rev") / F.nullif(F.sum("rev").over(wy), F.lit(0.0)), 6
         ).alias("pct_of_year"),
@@ -864,7 +863,7 @@ def win_time_weighted_avg(spark: SparkSession, d: str) -> DataFrame:
         o.groupBy("user_id")
         .agg(
             # DECIMAL(38,6): value x micro-second delta terms overflow
-            # 25 digits on wide time gaps (round-4 adversarial probe)
+            # 25 digits on wide time gaps
             F.sum((F.col("value") * dt).cast("decimal(38,6)"))
             .cast("double")
             .alias("_wsum"),
@@ -876,7 +875,7 @@ def win_time_weighted_avg(spark: SparkSession, d: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Truncated exponential moving average (round-3 continuation)
+# Truncated exponential moving average
 # --------------------------------------------------------------------------
 
 # alpha = 0.3, 10-term truncation. The weights 0.3*0.7^k are EXACT
@@ -885,10 +884,9 @@ def win_time_weighted_avg(spark: SparkSession, d: str) -> DataFrame:
 # (ROUND(value*100) — exact for the 2-dp money contract; >2-dp inputs
 # quantize identically in both engines at ingest). Each term
 # W10_k * centi is an exact BIGINT and the sum stays < 2^63 for
-# |value| up to ~9.9e6 (Σw ≈ 9.28e9 × centi) — the round-4
-# adversarial probe showed the earlier MICRO-unit fold overflowed
-# ANSI BIGINT at |value| ≳ 990, an absurdly low ceiling for a money
-# column; centi-units buy 10^4 more headroom while producing
+# |value| up to ~9.9e6 (Σw ≈ 9.28e9 × centi) — a MICRO-unit fold
+# overflows ANSI BIGINT at |value| ≳ 990, an absurdly low ceiling for
+# a money column; centi-units buy 10^4 more headroom while producing
 # BIT-IDENTICAL results on 2-dp inputs (old: HALF_UP(acc·1e4/1e10) ==
 # new: HALF_UP(acc/1e6), same integer for micro = centi·1e4). The
 # single 6-dp HALF_UP stays integer (±5e5 // 1e6). A
@@ -906,7 +904,7 @@ _EMA_TERMS_SQL = " + ".join(
 # Sign-aware HALF_UP (half away from zero): both Spark `div` and
 # DuckDB `//` truncate toward zero, so `+half` alone would round
 # negative sums half-toward-zero — the half must carry the sum's sign
-# (ADVICE r3; the fixture is non-negative but the contract is not).
+# (the fixture is non-negative but the contract is not).
 _EMA_SQL = f"""
 WITH m AS (SELECT event_id, user_id, ts,
                   CAST(round(value * 100) AS BIGINT) AS centi
@@ -963,7 +961,7 @@ def win_ema_smooth(spark: SparkSession, d: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Exact rolling correlation (round-3 continuation)
+# Exact rolling correlation
 # --------------------------------------------------------------------------
 
 # Recenter epoch seconds to the PER-USER minimum (shift-invariant for
@@ -977,7 +975,7 @@ def win_ema_smooth(spark: SparkSession, d: str) -> DataFrame:
 # epoch-boundary data overflowed the BIGINT products.
 _CORR_SQL = f"""
 WITH m0 AS (SELECT event_id, user_id, ts,
-                   (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS s,
+                   {sql_epoch_floor_s('ts')} AS s,
                    CAST(round(value * 100) AS BIGINT) AS y
             FROM events),
 m AS (SELECT event_id, user_id, ts,
@@ -1020,10 +1018,9 @@ def win_rolling_corr(spark: SparkSession, d: str) -> DataFrame:
     the same user_id shuffle any rolling metric needs; nothing global,
     no driver state."""
     e = t(spark, d, "events")
-    # recenter x to the PER-USER minimum epoch (round-4): the former
-    # fixed 2024 epoch anchor silently assumed data near 2024 — data
-    # at the epoch boundary overflowed the exact-BIGINT moment
-    # products. Pearson correlation is shift-invariant, so per-user
+    # recenter x to the PER-USER minimum epoch: a fixed 2024 epoch
+    # anchor silently assumes data near 2024 — data at the epoch
+    # boundary overflows the exact-BIGINT moment products. Pearson correlation is shift-invariant, so per-user
     # recentering changes nothing semantically while bounding x by
     # the per-user time span (exactness holds to ~±17-year spans).
     wu = Window.partitionBy("user_id")

@@ -2147,6 +2147,43 @@ _RP_BAND_KEYS = [
 ]
 
 
+def _rp_band_sigs(e: DataFrame) -> DataFrame:
+    """sim_rp_lsh_cosine's band keys: (vec_id, band_idx, band_key) per
+    embedding, the sign bits of its integer micro-unit dot products
+    with the 16 LCG planes, 8 bits per band."""
+    from ..llm.minhash import explode_bands
+
+    comps = e.select(
+        "vec_id",
+        F.posexplode(
+            F.transform(
+                "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long")
+            )
+        ),
+    ).select("vec_id", F.col("pos").alias("j"), F.col("col").alias("xi"))
+
+    # the 16 plane weights are INLINE integer expressions of the
+    # component index j (k = p*64 + j keeps the LCG stream identical
+    # to the oracle) — a 64-row broadcast-relation join carries the
+    # same values but pays a broadcast exchange + hash probe per
+    # component row; computing them in-expression keeps the signature
+    # pass one vec_id-keyed shuffle of 16 map-side-combined integer
+    # partial sums with zero joins (A/B 2.51 → 2.15 s with the op's
+    # occupancy pre-filter; outputs hash-identical).
+    def _w(p: int):
+        k = F.col("j").cast("long") + F.lit(64 * p)
+        lcg = F.lit(1103515245).cast("long") * k + 12345
+        return ((lcg - lcg % 65536) / 65536).cast("long") % 2048 - 1024
+
+    dots = comps.groupBy("vec_id").agg(
+        *[
+            F.sum(F.col("xi") * _w(p)).alias(f"dp{p}")
+            for p in range(16)
+        ]
+    )
+    return explode_bands(dots, ["vec_id"], "band_idx", "band_key", _RP_BAND_KEYS)
+
+
 @op(
     "sim_rp_lsh_cosine",
     f"""WITH planes AS (
@@ -2197,39 +2234,10 @@ def sim_rp_lsh_cosine(spark: SparkSession, d: str) -> DataFrame:
     contract as dedup_minhash_lsh but for the embedding column.
     The oracle mirrors the banding exactly (deterministic planes), so
     approximate recall is certified, not hidden."""
-    from ..llm.minhash import candidate_pairs, explode_bands
+    from ..llm.minhash import candidate_pairs
 
     e = t(spark, d, "embeddings")
-    comps = e.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                "embedding", lambda x: F.floor(x.cast("double") * 1000000).cast("long")
-            )
-        ),
-    ).select("vec_id", F.col("pos").alias("j"), F.col("col").alias("xi"))
-
-    # the 16 plane weights are INLINE integer expressions of the
-    # component index j (k = p*64 + j keeps the LCG stream identical
-    # to the oracle) — a 64-row broadcast-relation join carries the
-    # same values but pays a broadcast exchange + hash probe per
-    # component row; computing them in-expression keeps the signature
-    # pass one vec_id-keyed shuffle of 16 map-side-combined integer
-    # partial sums with zero joins (A/B 2.51 → 2.15 s with the
-    # occupancy pre-filter below; outputs hash-identical).
-    def _w(p: int):
-        k = F.col("j").cast("long") + F.lit(64 * p)
-        lcg = F.lit(1103515245).cast("long") * k + 12345
-        return ((lcg - lcg % 65536) / 65536).cast("long") % 2048 - 1024
-
-    dots = comps.groupBy("vec_id").agg(
-        *[
-            F.sum(F.col("xi") * _w(p)).alias(f"dp{p}")
-            for p in range(16)
-        ]
-    )
-
-    sigs = explode_bands(dots, ["vec_id"], "band_idx", "band_key", _RP_BAND_KEYS)
+    sigs = _rp_band_sigs(e)
 
     # bucket-occupancy cap (llm/minhash.py cap_buckets):
     # a degenerate corpus — heavy exact duplicates, all-zero vectors —

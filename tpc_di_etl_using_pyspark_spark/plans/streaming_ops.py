@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..streaming.ops import sessionize, sliding_sums, tumbling_counts
-from ._util import epoch_s, t
+from ._util import epoch_s, sql_epoch_floor_s, t
 from .registry import op
 
 
@@ -33,12 +33,12 @@ def stream_tumbling_count(spark: SparkSession, d: str) -> DataFrame:
     # floor15 must FLOOR-divide: Spark's window() aligns pre-epoch
     # (negative-second) timestamps to the window start BELOW them,
     # while DuckDB `//` truncates toward zero — a 1969 event landed in
-    # different windows per engine (round-4 adversarial probe). The
+    # different windows per engine. The
     # mod-subtraction form is exact BIGINT floor alignment for any
     # sign.
-    """WITH base AS (
+    f"""WITH base AS (
          SELECT s - ((s % 900 + 900) % 900) AS floor15, value
-         FROM (SELECT (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS s, value
+         FROM (SELECT {sql_epoch_floor_s('ts')} AS s, value
                FROM events)),
        expanded AS (
          SELECT floor15 - k * 900 AS ws_sec, value
@@ -56,7 +56,7 @@ def stream_sliding_sum(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "stream_session_window",
-    """WITH o AS (
+    f"""WITH o AS (
          SELECT user_id, ts, value,
                 epoch_us(ts) - LAG(epoch_us(ts)) OVER w AS gap_us
          FROM events
@@ -72,7 +72,7 @@ def stream_sliding_sum(spark: SparkSession, d: str) -> DataFrame:
                                     ROWS UNBOUNDED PRECEDING) AS sess_id
          FROM marked)
        SELECT user_id,
-              (epoch_us(MIN(ts)) - ((epoch_us(MIN(ts)) % 1000000 + 1000000) % 1000000)) // 1000000 AS sess_start_sec,
+              {sql_epoch_floor_s('MIN(ts)')} AS sess_start_sec,
               COUNT(*) AS n_events,
               CAST(SUM(CAST(value AS DECIMAL(25,6))) AS DOUBLE) AS sess_value
        FROM ids GROUP BY user_id, sess_id""",
@@ -85,18 +85,18 @@ def stream_session_window(spark: SparkSession, d: str) -> DataFrame:
     + 1 µs forms two). The oracle is the classic gap-and-island
     rewrite with the matching strict `>`; the original `>=` diverged
     at the exact boundary, which no driver fixture ever produced
-    (r9 exact-boundary probe, pinned in tests/test_r4_window_edges.py)."""
+    (pinned in tests/test_r4_window_edges.py)."""
     return sessionize(t(spark, d, "events"), "30 minutes")
 
 
 @op(
     "stream_watermark_late",
-    """WITH m AS (
+    f"""WITH m AS (
          SELECT event_id, user_id, ts, value,
                 MAX(epoch_us(ts)) OVER (ORDER BY event_id
                                         ROWS UNBOUNDED PRECEDING) AS max_us
          FROM events)
-       SELECT event_id, user_id, (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 AS ts_sec, value
+       SELECT event_id, user_id, {sql_epoch_floor_s('ts')} AS ts_sec, value
        FROM m WHERE epoch_us(ts) >= max_us - 600 * 1000000""",
 )
 def stream_watermark_late(spark: SparkSession, d: str) -> DataFrame:
@@ -117,7 +117,7 @@ def stream_watermark_late(spark: SparkSession, d: str) -> DataFrame:
     # into the expression: its offset only cancelled in the
     # max_us − us comparison while both instants shared the SAME
     # offset, and a wall-clock value inside a DST gap shifted by the
-    # gap width (r9 probe — see epoch_s docstring).
+    # gap width (see epoch_s docstring).
     ts = F.col("ts")
     days = F.datediff(ts.cast("date"), F.lit("1970-01-01").cast("date"))
     us = (
@@ -161,12 +161,12 @@ def stream_dedup_state(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "stream_foreachbatch_upsert",
-    """SELECT user_id, event_type, event_id, value FROM (
+    f"""SELECT user_id, event_type, event_id, value FROM (
          SELECT user_id, event_type, event_id, value,
                 ROW_NUMBER() OVER (
                   PARTITION BY user_id, event_type
                   ORDER BY event_id % 2 DESC,
-                           (epoch_us(ts) - ((epoch_us(ts) % 1000000 + 1000000) % 1000000)) // 1000000 DESC, event_id DESC) AS rn
+                           {sql_epoch_floor_s('ts')} DESC, event_id DESC) AS rn
          FROM events) WHERE rn = 1""",
 )
 def stream_foreachbatch_upsert(spark: SparkSession, d: str) -> DataFrame:
@@ -209,13 +209,13 @@ def stream_stateful_totals(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "stream_stream_join",
-    """WITH v AS (SELECT event_id AS view_id, user_id, ts AS vts
+    f"""WITH v AS (SELECT event_id AS view_id, user_id, ts AS vts
                   FROM events WHERE event_type = 'view'),
        p AS (SELECT event_id AS purchase_id, user_id AS p_user, ts AS pts
              FROM events WHERE event_type = 'purchase')
        SELECT v.view_id, p.purchase_id, v.user_id,
-              (epoch_us(p.pts) - ((epoch_us(p.pts) % 1000000 + 1000000) % 1000000)) // 1000000
-                - (epoch_us(v.vts) - ((epoch_us(v.vts) % 1000000 + 1000000) % 1000000)) // 1000000 AS gap_sec
+              {sql_epoch_floor_s('p.pts')}
+                - {sql_epoch_floor_s('v.vts')} AS gap_sec
        FROM v JOIN p ON v.user_id = p.p_user
         AND p.pts >= v.vts AND p.pts <= v.vts + INTERVAL 1 HOUR""",
 )

@@ -16,13 +16,15 @@ from ..tpcdi.pipeline import (
     cdc_apply,
     fact_cash_balances,
     fact_market_history,
+    report,
     scd2_apply_incremental,
+    scd2_audit,
     scd2_build,
     scd2_change_filter,
     surrogate_lookup,
 )
 from .core_scans import _scratch
-from ._util import DEC, dround, epoch_s, sql_epoch_s, t
+from ._util import DEC, dround, epoch_s, sql_epoch_floor_s, t
 from .registry import op
 
 
@@ -40,11 +42,11 @@ def _batch_date_shift(v: DataFrame) -> int:
     - On an EMPTY orders table the span aggregate is NULL; fall back
       to a 1-day shift instead of raising TypeError — both SCD2
       inputs are empty then, so the result is empty either way.
-    - LOUD date-headroom contract (r12 extremes probe): the shifted
-      batch needs max(eff) + span + 1 days of room below the DATE
-      type's 9999-12-31 ceiling. A date domain ending in ~year 9999
-      has none — the synthetic batch construction is then impossible
-      in EITHER engine (the DATE type simply cannot represent the
+    - LOUD date-headroom contract: the shifted batch needs max(eff) +
+      span + 1 days of room below the DATE type's 9999-12-31 ceiling.
+      A date domain ending in ~year 9999 (sentinel or hash-derived
+      dates) has none — the synthetic batch construction is then
+      impossible in EITHER engine (the DATE type simply cannot represent the
       shifted dates), so raise a ValueError naming the contract
       instead of letting Spark stage-kill with a bare out-of-range.
     """
@@ -66,6 +68,37 @@ def _batch_date_shift(v: DataFrame) -> int:
                 "the type maximum cannot host the shifted incremental batch"
             )
     return shift
+
+
+def _scd2_batches(spark: SparkSession, d: str, *attrs: str) -> tuple[DataFrame, DataFrame]:
+    """The SCD2 batch ops' customer action stream, split into the
+    historical load ('F' orders) and a later incremental batch ('O'
+    orders) whose dates are shifted past ALL history: the shift is the
+    data's own date span + 1 day, so the batch never trips
+    scd2_apply_incremental's late-arrival guard, on any date domain (a
+    fixed shift assumes a narrow span). ``attrs`` are the orders
+    columns carried besides the key, tiebreak, status and ``eff``."""
+    v = t(spark, d, "orders").select(
+        "o_custkey",
+        "o_orderkey",
+        "o_orderstatus",
+        *attrs,
+        F.col("o_orderdate").cast("date").alias("eff"),
+    )
+    hist = v.filter(F.col("o_orderstatus") == "F")
+    shift = _batch_date_shift(v)
+    batch = v.filter(F.col("o_orderstatus") == "O").withColumn(
+        "eff", F.date_add("eff", F.lit(shift))
+    )
+    return hist, batch
+
+
+# the oracles' batch shift: the orders date span + 1 day, the scalar
+# _batch_date_shift derives
+_SHIFT_SQL = (
+    "CAST((SELECT datediff('day', MIN(CAST(o_orderdate AS DATE)), "
+    "MAX(CAST(o_orderdate AS DATE))) + 1 FROM orders) AS INTEGER)"
+)
 
 
 @op(
@@ -102,13 +135,13 @@ def tpcdi_scd2_dimcustomer(spark: SparkSession, d: str) -> DataFrame:
 
 @op(
     "tpcdi_scd2_incremental",
-    """WITH actions AS (
+    f"""WITH actions AS (
          SELECT o_custkey, o_orderkey, o_orderstatus,
                 CAST(o_orderdate AS DATE) AS eff
          FROM orders WHERE o_orderstatus = 'F'
          UNION ALL
          SELECT o_custkey, o_orderkey, o_orderstatus,
-                CAST(o_orderdate AS DATE) + CAST((SELECT datediff('day', MIN(CAST(o_orderdate AS DATE)), MAX(CAST(o_orderdate AS DATE))) + 1 FROM orders) AS INTEGER) AS eff
+                CAST(o_orderdate AS DATE) + {_SHIFT_SQL} AS eff
          FROM orders WHERE o_orderstatus = 'O')
        SELECT CAST(o_custkey AS VARCHAR) || '-' ||
                 CAST(ROW_NUMBER() OVER w AS VARCHAR) AS sk,
@@ -126,24 +159,7 @@ def tpcdi_scd2_incremental(spark: SparkSession, d: str) -> DataFrame:
     — close touched current rows, append continuing versions. The
     oracle states the equivalence invariant: the incrementally
     maintained dimension equals a full rebuild over all actions."""
-    v = t(spark, d, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderstatus",
-        F.col("o_orderdate").cast("date").alias("eff"),
-    )
-    hist = v.filter(F.col("o_orderstatus") == "F")
-    # the batch's dates shift past ALL history by construction: the
-    # shift is the data's own date span + 1 day (a fixed 4000-day
-    # shift silently assumed a narrow span and tripped the
-    # late-arrival guard on wide date domains — round-4 adversarial
-    # probe). See _batch_date_shift for the driver-scalar rationale,
-    # the tolerated construction-time 1-row job, and the empty-input
-    # guard; the oracle derives the same scalar via subquery.
-    shift = _batch_date_shift(v)
-    batch = v.filter(F.col("o_orderstatus") == "O").withColumn(
-        "eff", F.date_add("eff", F.lit(shift))
-    )
+    hist, batch = _scd2_batches(spark, d)
     dim = scd2_build(hist, "o_custkey", "eff", ["o_orderstatus"], "o_orderkey")
     return scd2_apply_incremental(
         dim, batch, "o_custkey", "eff", ["o_orderstatus"], "o_orderkey"
@@ -300,19 +316,17 @@ def tpcdi_prospect_match(spark: SparkSession, d: str) -> DataFrame:
     fixture (2/3 of customers, re-keyed); match is a left join on the
     case-normalized key — broadcast-able at dimension scale."""
     c = t(spark, d, "customer")
-    # OVERFLOW-FREE re-key (r12 extremes probe, tools/probe_r12_extremes.py):
-    # the naive c_custkey + 5000000 ANSI-overflows within 5e6 of the
-    # int64 maximum — reachable when upstream ids are hash-derived
-    # (xxhash64-style). Keys in that top band wrap into [0, 5e6), a
-    # range the +5e6 branch can never produce for nonnegative keys, so
-    # the mapping stays injective; bit-identical to the naive form for
-    # every c_custkey <= 2^63-1-5e6 (all driver fixtures). Oracle
-    # mirrors the identical CASE.
-    # CONTRACT (r14, ADVICE r12 low, counterexample pinned in
-    # tests/test_r14_prep.py): injectivity assumes NONNEGATIVE keys —
-    # a negative key maps via the +5e6 branch into [0, 5e6) and can
-    # collide with a wrapped top-band key (e.g. -4999999 and
-    # 2^63-5000000+1 both map to 1). Parity is unaffected (the oracle
+    # OVERFLOW-FREE re-key: the naive c_custkey + 5000000 ANSI-overflows
+    # within 5e6 of the int64 maximum — reachable when upstream ids are
+    # hash-derived (xxhash64-style). Keys in that top band wrap into
+    # [0, 5e6), a range the +5e6 branch can never produce for
+    # nonnegative keys, so the mapping stays injective; bit-identical to
+    # the naive form for every c_custkey <= 2^63-1-5e6 (all shipped
+    # fixtures). Oracle mirrors the identical CASE.
+    # CONTRACT (counterexample pinned in tests/test_r14_prep.py):
+    # injectivity assumes NONNEGATIVE keys — a negative key maps via the
+    # +5e6 branch into [0, 5e6) and can collide with a wrapped top-band
+    # key (e.g. -4999999 and 2^63-5000000+1 both map to 1). Parity is unaffected (the oracle
     # mirrors the CASE byte-for-byte), but callers feeding signed
     # synthetic keys should normalize them first (abs/pmod, the
     # _split_bucket convention).
@@ -466,9 +480,9 @@ def tpcdi_dim_time(spark: SparkSession, d: str) -> DataFrame:
 @op(
     "tpcdi_dim_trade",
     f"""SELECT user_id,
-               MIN(CASE WHEN event_type = 'signup' THEN {sql_epoch_s('ts')} END)
+               MIN(CASE WHEN event_type = 'signup' THEN {sql_epoch_floor_s('ts')} END)
                  AS create_ts_s,
-               MAX(CASE WHEN event_type = 'purchase' THEN {sql_epoch_s('ts')} END)
+               MAX(CASE WHEN event_type = 'purchase' THEN {sql_epoch_floor_s('ts')} END)
                  AS close_ts_s,
                CASE WHEN COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) > 0
                     THEN 'CMPT'
@@ -520,11 +534,11 @@ def tpcdi_dimessages(spark: SparkSession, d: str) -> DataFrame:
     "events_funnel",
     f"""WITH stages AS (
          SELECT user_id,
-                MIN(CASE WHEN event_type = 'signup' THEN {sql_epoch_s('ts')} END)
+                MIN(CASE WHEN event_type = 'signup' THEN {sql_epoch_floor_s('ts')} END)
                   AS t_signup,
-                MIN(CASE WHEN event_type = 'view' THEN {sql_epoch_s('ts')} END)
+                MIN(CASE WHEN event_type = 'view' THEN {sql_epoch_floor_s('ts')} END)
                   AS t_view,
-                MIN(CASE WHEN event_type = 'purchase' THEN {sql_epoch_s('ts')} END)
+                MIN(CASE WHEN event_type = 'purchase' THEN {sql_epoch_floor_s('ts')} END)
                   AS t_purchase
          FROM events GROUP BY user_id)
        SELECT COUNT(*) AS n_users,
@@ -661,7 +675,6 @@ def _finwire_fixture(spark: SparkSession, d: str) -> str:
     # pre-reduced (k mod 1e11)·100+7 <= 13 digits: lpad(13) stays a pure
     # pad (never a truncation) and the product cannot ANSI-overflow at
     # hash-scale ids; identical to the naive form for p_partkey < 1e11
-    # (r12 extremes probe)
     sh13 = F.lpad(
         ((F.col("p_partkey") % 100000000000) * 100 + 7).cast("string"), 13, "0"
     )
@@ -693,7 +706,7 @@ def _finwire_fixture(spark: SparkSession, d: str) -> str:
             # CIK fields carry): the 17-char measure fields stay pure
             # pads, the products cannot ANSI-overflow at hash-scale
             # ids, and measure/cik stay mutually consistent; identical
-            # to the naive forms for s_suppkey < 1e10 (r12 probe)
+            # to the naive forms for s_suppkey < 1e10
             F.lpad(
                 ((F.col("s_suppkey") % 10000000000) * 1000 + F.col("i"))
                 .cast("string"), 17, "0",
@@ -932,7 +945,7 @@ def tpcdi_dim_broker(spark: SparkSession, d: str) -> DataFrame:
             F.lit("+1-"),
             # (k·7919) mod 1e7 with the key pre-reduced: identical by
             # modular arithmetic, but the product can no longer ANSI-
-            # overflow at hash-scale ids (r12 extremes probe)
+            # overflow at hash-scale ids
             F.lpad(
                 ((F.col("c_custkey") % 10000000) * 7919 % 10000000).cast("string"),
                 7, "0",
@@ -1027,9 +1040,16 @@ def tpcdi_fact_watches(spark: SparkSession, d: str) -> DataFrame:
     )
 
 
-@op(
-    "tpcdi_scd2_dimaccount",
-    """WITH a AS (
+# DimAccount's account id: the customer key and the order key's low
+# two bits. The customer key is pre-reduced mod 2^61 so that the
+# product cannot ANSI-overflow at hash-scale ids; identical to the
+# naive form for every key below 2^61.
+_ACCOUNT_ID = "(o_custkey % 2305843009213693952) * 4 + o_orderkey % 4"
+
+# the oracles' DimAccount action stream (acct_actions) and its
+# changed-versions filter (acct_f), as tpcdi_scd2_dimaccount builds them
+_ACCOUNT_CTES = """
+acct_actions AS (
   SELECT o_custkey % 2305843009213693952 * 4 + o_orderkey % 4 AS account_id,
          o_custkey AS customer_id,
          CASE o_orderstatus WHEN 'O' THEN 'ACTV' WHEN 'P' THEN 'SUSP'
@@ -1037,10 +1057,16 @@ def tpcdi_fact_watches(spark: SparkSession, d: str) -> DataFrame:
          CAST(o_orderkey % 3 AS INTEGER) AS tax_status,
          CAST(o_orderdate AS DATE) AS eff, o_orderkey
   FROM orders),
-ch AS (SELECT *, LAG(status) OVER w AS _ps, LAG(tax_status) OVER w AS _pt
-       FROM a WINDOW w AS (PARTITION BY account_id ORDER BY eff, o_orderkey)),
-f AS (SELECT account_id, customer_id, status, tax_status, eff, o_orderkey
-      FROM ch WHERE _ps IS NULL OR status != _ps OR tax_status != _pt)
+acct_ch AS (SELECT *, LAG(status) OVER w AS _ps, LAG(tax_status) OVER w AS _pt
+            FROM acct_actions
+            WINDOW w AS (PARTITION BY account_id ORDER BY eff, o_orderkey)),
+acct_f AS (SELECT account_id, customer_id, status, tax_status, eff, o_orderkey
+           FROM acct_ch WHERE _ps IS NULL OR status != _ps OR tax_status != _pt)"""
+
+
+@op(
+    "tpcdi_scd2_dimaccount",
+    f"""WITH {_ACCOUNT_CTES}
 SELECT CAST(account_id AS VARCHAR) || '-' || CAST(ROW_NUMBER() OVER w2 AS VARCHAR) AS sk,
        CAST(ROW_NUMBER() OVER w2 AS INTEGER) AS version,
        account_id, customer_id, status, tax_status,
@@ -1050,7 +1076,7 @@ SELECT CAST(account_id AS VARCHAR) || '-' || CAST(ROW_NUMBER() OVER w2 AS VARCHA
        CASE WHEN ROW_NUMBER() OVER w2 = 1 THEN 'ADDACCT'
             WHEN status = 'CLSD' THEN 'CLOSEACCT'
             ELSE 'UPDACCT' END AS action_type
-FROM f WINDOW w2 AS (PARTITION BY account_id ORDER BY eff, o_orderkey)""",
+FROM acct_f WINDOW w2 AS (PARTITION BY account_id ORDER BY eff, o_orderkey)""",
 )
 def tpcdi_scd2_dimaccount(spark: SparkSession, d: str) -> DataFrame:
     """DimAccount [SPEC: CustomerMgmt ADDACCT/UPDACCT/CLOSEACCT → SCD2
@@ -1065,7 +1091,7 @@ def tpcdi_scd2_dimaccount(spark: SparkSession, d: str) -> DataFrame:
         .otherwise("CLSD")
     )
     actions = o.select(
-        ((F.col("o_custkey") % 2305843009213693952) * 4 + F.col("o_orderkey") % 4).alias("account_id"),
+        F.expr(_ACCOUNT_ID).alias("account_id"),
         F.col("o_custkey").alias("customer_id"),
         status.alias("status"),
         (F.col("o_orderkey") % 3).cast("int").alias("tax_status"),
@@ -1090,19 +1116,7 @@ def tpcdi_scd2_dimaccount(spark: SparkSession, d: str) -> DataFrame:
 @op(
     "tpcdi_audit_reconciliation",
     f"""WITH {_COMPANY_CTES},
-n AS (SELECT COUNT(*) AS n_supp FROM supplier),
-acct_actions AS (
-  SELECT o_custkey % 2305843009213693952 * 4 + o_orderkey % 4 AS account_id,
-         CASE o_orderstatus WHEN 'O' THEN 'ACTV' WHEN 'P' THEN 'SUSP'
-              ELSE 'CLSD' END AS status,
-         CAST(o_orderkey % 3 AS INTEGER) AS tax_status,
-         CAST(o_orderdate AS DATE) AS eff, o_orderkey
-  FROM orders),
-acct_ch AS (SELECT *, LAG(status) OVER w AS _ps, LAG(tax_status) OVER w AS _pt
-            FROM acct_actions
-            WINDOW w AS (PARTITION BY account_id ORDER BY eff, o_orderkey)),
-acct_f AS (SELECT account_id, eff, o_orderkey FROM acct_ch
-           WHERE _ps IS NULL OR status != _ps OR tax_status != _pt),
+n AS (SELECT COUNT(*) AS n_supp FROM supplier),{_ACCOUNT_CTES},
 acct_cur AS (
   SELECT account_id,
          COUNT(*) FILTER (WHERE nxt IS NULL) AS n_current
@@ -1153,60 +1167,47 @@ def tpcdi_audit_reconciliation(spark: SparkSession, d: str) -> DataFrame:
     acct = tpcdi_scd2_dimaccount(spark, d)
     watches = tpcdi_fact_watches(spark, d)
 
-    def check(name: str, expected: DataFrame, actual: DataFrame) -> DataFrame:
-        e = expected.select(F.col(expected.columns[0]).cast("bigint").alias("expected"))
-        a = actual.select(F.col(actual.columns[0]).cast("bigint").alias("actual"))
-        return (
-            e.crossJoin(a)
-            .select(
-                F.lit(name).alias("check_name"),
-                "expected",
-                "actual",
-                (F.col("expected") == F.col("actual")).alias("ok"),
+    # one global aggregate per relation, crossJoined into one stats row
+    stats = (
+        sup.agg(
+            F.count(F.lit(1)).alias("_ns"),
+            F.count(F.when(F.col("s_suppkey") % 3 == 0, F.lit(1))).alias("_ns3"),
+        )
+        .crossJoin(
+            comp.agg(
+                F.count(F.when(F.col("is_current"), F.lit(1))).alias("_nc_cur"),
+                F.count(F.lit(1)).alias("_nc"),
+                F.countDistinct("cik").alias("_ncik"),
             )
         )
-
-    rows = [
-        check(
-            "dim_company_current_rows",
-            sup.agg(F.count(F.lit(1))),
-            comp.filter("is_current").agg(F.count(F.lit(1))),
-        ),
-        check(
-            "dim_company_version_rows",
-            sup.agg(
-                F.count(F.lit(1))
-                + F.count(F.when(F.col("s_suppkey") % 3 == 0, F.lit(1)))
-            ),
-            comp.agg(F.count(F.lit(1))),
-        ),
-        check(
-            "financial_rows",
-            sup.agg(8 * F.count(F.lit(1))),
-            comp.agg(8 * F.countDistinct("cik")),
-        ),
-        check(
-            "fact_watches_grain",
-            o.select("o_custkey", (F.col("o_orderkey") % 500)).distinct().agg(
-                F.count(F.lit(1))
-            ),
-            watches.agg(F.count(F.lit(1))),
-        ),
-        check(
-            "dim_account_single_current",
-            o.select(
-                ((F.col("o_custkey") % 2305843009213693952) * 4 + F.col("o_orderkey") % 4)
-            ).distinct().agg(F.count(F.lit(1))),
+        .crossJoin(
+            o.select("o_custkey", F.col("o_orderkey") % 500)
+            .distinct()
+            .agg(F.count(F.lit(1)).alias("_nwatch_src"))
+        )
+        .crossJoin(watches.agg(F.count(F.lit(1)).alias("_nwatch")))
+        .crossJoin(
+            o.select(F.expr(_ACCOUNT_ID)).distinct().agg(F.count(F.lit(1)).alias("_nacct"))
+        )
+        .crossJoin(
             acct.groupBy("account_id")
             .agg(F.count(F.when(F.col("is_current"), F.lit(1))).alias("n_cur"))
             .filter(F.col("n_cur") == 1)
-            .agg(F.count(F.lit(1))),
-        ),
+            .agg(F.count(F.lit(1)).alias("_nacct_cur"))
+        )
+    )
+    checks = [
+        ("dim_company_current_rows", "_ns", "_nc_cur"),
+        ("dim_company_version_rows", "_ns + _ns3", "_nc"),
+        ("financial_rows", "8 * _ns", "8 * _ncik"),
+        ("fact_watches_grain", "_nwatch_src", "_nwatch"),
+        ("dim_account_single_current", "_nacct", "_nacct_cur"),
     ]
-    out = rows[0]
-    for r in rows[1:]:
-        out = out.unionByName(r)
-    return out
+    return report(
+        stats,
+        ["check_name", "expected", "actual", "ok"],
+        [(f"'{name}'", e, a, f"{e} = {a}") for name, e, a in checks],
+    )
 
 
 @op(
@@ -1332,13 +1333,13 @@ def tpcdi_holdings_pnl(spark: SparkSession, d: str) -> DataFrame:
     price relation is securities-sized — broadcastable at any fact
     volume.
 
-    Boundary (r10 pool wave): the latest-trade price divides by
+    Boundary (a zero-quantity trade): the latest-trade price divides by
     l_quantity, and a ZERO-quantity row landing in the latest
     position killed the stage under ANSI (DIVIDE_BY_ZERO — found the
     moment QTY=25.0 entered the adversarial pool and re-aligned which
     row each partkey's window picks). A zero-quantity trade has no
     derivable price, so the divisor is NULLIF-guarded in BOTH engines
-    (the r4 wave-3 total-function convention): last_price_micro,
+    (every division by a data column is total): last_price_micro,
     mkt_value, unreal_pnl surface NULL for that security instead of
     an exception — at 100 TB one bad row must never kill the job."""
     li = t(spark, d, "lineitem")
@@ -1369,7 +1370,7 @@ def tpcdi_holdings_pnl(spark: SparkSession, d: str) -> DataFrame:
             # .xxxxxx5 midpoint (power-of-two qty), where the engines'
             # double->decimal casts round apart; floor is exact. The
             # divisor is NULLIF-guarded: a zero-qty latest trade has
-            # no price (see docstring — r10 pool find).
+            # no price (see docstring).
             F.floor(
                 F.col("l_extendedprice") * 1000000
                 / F.nullif(F.col("l_quantity"), F.lit(0.0))
@@ -1398,7 +1399,7 @@ def tpcdi_holdings_pnl(spark: SparkSession, d: str) -> DataFrame:
     f"""WITH {_COMPANY_CTES},
 cust_actions AS (
   SELECT o_custkey, o_orderkey, o_orderstatus, o_orderpriority, o_totalprice,
-         CASE WHEN o_orderstatus = 'O' THEN CAST(o_orderdate AS DATE) + CAST((SELECT datediff('day', MIN(CAST(o_orderdate AS DATE)), MAX(CAST(o_orderdate AS DATE))) + 1 FROM orders) AS INTEGER)
+         CASE WHEN o_orderstatus = 'O' THEN CAST(o_orderdate AS DATE) + {_SHIFT_SQL}
               ELSE CAST(o_orderdate AS DATE) END AS eff
   FROM orders WHERE o_orderstatus IN ('F', 'O')),
 dim_customer AS (
@@ -1475,7 +1476,7 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
        surrogate_lookup (equi join + date-range residual).
     4. Audit: DImessages row counts for the three warehouse tables plus
        reconciliation rows — current-row counts vs source, SCD2
-       chain/multi-current violations (scd2_validate), unresolved SKs.
+       chain/multi-current violations (scd2_audit), unresolved SKs.
 
     Scale shape: each phase keeps its own stage shape (one keyed window
     shuffle per dimension, one grouped shuffle + one window for the
@@ -1490,34 +1491,16 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
     # warehouse tables to parquet and the next phase re-scans them;
     # cache is the local stand-in for that boundary — without it the
     # audit re-runs the whole SCD2 build per reference. dim_company
-    # and fact_sk each have exactly ONE consumer since the audit became
-    # one fused stats pass, so caching them would only materialize
-    # rows nobody reads twice; their former cache()s are dropped (A/B
-    # in OPTIMIZATION_r14.md).
+    # and fact_sk each have exactly ONE consumer (the stats pass), so
+    # caching them would only materialize rows nobody reads twice.
     frames = _finwire_frames(spark, d)
     dim_company = _company_dim_from(frames["CMP"])
-    v = t(spark, d, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderstatus",
-        "o_orderpriority",
-        "o_totalprice",
-        F.col("o_orderdate").cast("date").alias("eff"),
-    )
-    hist = v.filter(F.col("o_orderstatus") == "F")
+    hist, batch2 = _scd2_batches(spark, d, "o_orderpriority", "o_totalprice")
     dim_customer = scd2_build(
         hist, "o_custkey", "eff", ["o_orderstatus", "o_orderpriority"], "o_orderkey"
     )
 
     # --- Batch2: incremental apply ---------------------------------
-    # data-derived batch shift as ONE driver-side scalar (see
-    # _batch_date_shift — the watermark-derivation pattern; an
-    # in-plan span relation re-printed its aggregation lineage into
-    # every phase branch and tripped the exchange-count assertion)
-    shift = _batch_date_shift(v)
-    batch2 = v.filter(F.col("o_orderstatus") == "O").withColumn(
-        "eff", F.date_add("eff", F.lit(shift))
-    )
     # check_order=False: the ordering precondition holds BY
     # CONSTRUCTION here — every batch2 eff is span+1 days past max(hist
     # eff) via _batch_date_shift — and the eager probe cost a full extra
@@ -1538,81 +1521,16 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
     )
 
     # --- Audit: DImessages + reconciliation ------------------------
-    # Fully fused, as in audit_data_quality: ONE stats pass per
-    # warehouse table, every 1-row aggregate crossJoined into a single
-    # 1-row relation, and all seven report rows inline()d from it
-    # map-side, so each table is read once — one aggregation pipeline
-    # replaces the former four union branches (A/B 2.26 → 1.80 s
-    # bench-protocol / 4.21 → 2.69 s cold at sf0.1, rows
-    # byte-identical; 8↔32-core ratio back above 1).
-    #
-    # The dim_customer pass folds scd2_validate's two evaluations into
-    # the same pipeline: the version-chain check and the per-key
-    # current-row count are BOTH windows partitioned by the natural
-    # key, so they share one exchange (Spark plans a second window
-    # over the same partitioning without another shuffle), and the
-    # global 1-row aggregate computes row count, current-row
-    # count AND the violation total on top:
-    #   violations ≡ COUNT(bad-chain rows) + COUNT(DISTINCT keys with
-    #   >1 current row) — exactly scd2_validate's bad_chain ∪
-    #   multi_current row count (bad_chain emits one row per chain
-    #   break, multi_current one row per offending key).
-
-    def rows2(agg_df, rows):
-        return agg_df.select(
-            F.inline(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(2).alias("batch_id"),
-                            F.lit(src).alias("message_source"),
-                            F.lit(mtype).alias("message_type"),
-                            text.alias("message_text"),
-                        )
-                        for src, mtype, text in rows
-                    ]
-                )
-            )
-        )
-
-    ok = lambda a, e: F.when(F.col(a) == F.col(e), "true").otherwise("false")  # noqa: E731
-    wver = Window.partitionBy("o_custkey").orderBy("version")
-    wkey = Window.partitionBy("o_custkey")
-    cust_stats = (
-        dim_customer.withColumn("_nxt", F.lead("effective_date").over(wver))
-        .withColumn(
-            "_ncur", F.count(F.when(F.col("is_current"), 1)).over(wkey)
-        )
-        .agg(
-            F.count(F.lit(1)).alias("_cn"),
-            F.count(F.when(F.col("is_current"), 1)).alias("_ca"),
-            (
-                F.count(
-                    F.when(
-                        (
-                            F.col("_nxt").isNotNull()
-                            & (F.col("end_date") != F.col("_nxt"))
-                        )
-                        | (F.col("_nxt").isNull() & ~F.col("is_current")),
-                        1,
-                    )
-                )
-                + F.count_distinct(
-                    F.when(
-                        F.col("is_current") & (F.col("_ncur") > 1),
-                        F.col("o_custkey"),
-                    )
-                )
-            ).alias("_v"),
-        )
-    )
+    # ONE stats pass per warehouse table, every 1-row aggregate
+    # crossJoined into a single 1-row relation, and all seven report
+    # rows inline()d from it map-side, so each table is read once.
     stats = (
         dim_company.agg(
             F.count(F.lit(1)).alias("_n"),
             F.count(F.when(F.col("is_current"), 1)).alias("_a"),
         )
         .crossJoin(t(spark, d, "supplier").agg(F.count(F.lit(1)).alias("_e")))
-        .crossJoin(cust_stats)
+        .crossJoin(scd2_audit(dim_customer, "o_custkey"))
         .crossJoin(stream.agg(F.countDistinct("o_custkey").alias("_ce")))
         .crossJoin(
             fact_sk.agg(
@@ -1621,24 +1539,21 @@ def tpcdi_batch_e2e(spark: SparkSession, d: str) -> DataFrame:
             )
         )
     )
-    return rows2(
+
+    def ok(a: str, e: str) -> str:
+        return f"CASE WHEN {a} = {e} THEN 'true' ELSE 'false' END"
+
+    return report(
         stats,
+        ["batch_id", "message_source", "message_type", "message_text"],
         [
-            ("dim_company", "Row count", F.col("_n").cast("string")),
-            ("dim_company", "Audit current rows", ok("_a", "_e")),
-            ("dim_customer", "Row count", F.col("_cn").cast("string")),
-            ("dim_customer", "Audit current rows", ok("_ca", "_ce")),
-            ("fact_cash_balances", "Row count", F.col("_fn").cast("string")),
-            (
-                "fact_cash_balances",
-                "Audit unresolved SK",
-                F.col("_fu").cast("string"),
-            ),
-            (
-                "dim_customer",
-                "Audit SCD2 violations",
-                F.col("_v").cast("string"),
-            ),
+            ("2", "'dim_company'", "'Row count'", "CAST(_n AS STRING)"),
+            ("2", "'dim_company'", "'Audit current rows'", ok("_a", "_e")),
+            ("2", "'dim_customer'", "'Row count'", "CAST(n_rows AS STRING)"),
+            ("2", "'dim_customer'", "'Audit current rows'", ok("n_current", "_ce")),
+            ("2", "'fact_cash_balances'", "'Row count'", "CAST(_fn AS STRING)"),
+            ("2", "'fact_cash_balances'", "'Audit unresolved SK'", "CAST(_fu AS STRING)"),
+            ("2", "'dim_customer'", "'Audit SCD2 violations'", "CAST(n_violations AS STRING)"),
         ],
     )
 
@@ -1748,9 +1663,9 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
     demonstration that the detectors detect, certified against the
     oracle either way.
 
-    Shape (optimization r13, guide §2.3/§2.4 — measured 1.83 → 1.30 s
-    at sf0.1, outputs identical): four aggregation pipelines instead
-    of seven.
+    Shape (measured 1.83 → 1.30 s at sf0.1 against one pipeline per
+    check, outputs identical): four aggregation pipelines instead of
+    seven.
     * ONE lineitem⋈orders LEFT join serves BOTH fk_lineitem_orders
       (unmatched rows) and ship_after_order (date comparison on the
       matched rows; n_checked = matched count ≡ the former INNER join
@@ -1761,35 +1676,18 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
       exactly count(*) − countDistinct(pk) (a NULL key part makes the
       group incomplete, so its rows count as dups — the same NULL
       semantics the former concat-string key had, without
-      materializing a string per row; the r12 injectivity fix is
-      preserved because grouping on the raw columns needs no
-      injective encoding at all). count(when) mirrors the oracle's
-      COUNT(*) FILTER: 0 over an empty relation (r11 empty-slice
-      sweep).
+      materializing a string per row, and with no injective string
+      encoding to get wrong). count(when) mirrors the oracle's
+      COUNT(*) FILTER: 0 over an empty relation (pinned in
+      tests/test_empty_slice.py).
     Each single-row aggregate splits into its two report rows via
-    inline() — no extra pass. lineitem is scanned twice (was 4×),
-    orders three times (was 5×)."""
+    report()'s inline() — no extra pass. lineitem is scanned twice
+    (was 4×), orders three times (was 5×)."""
     li = t(spark, d, "lineitem")
     o = t(spark, d, "orders")
     c = t(spark, d, "customer")
 
-    def split_rows(agg_df, rows):
-        # one 1-row aggregate → two report rows, map-side
-        return agg_df.select(
-            F.inline(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(n).alias("check_name"),
-                            v.cast("bigint").alias("n_violations"),
-                            k.alias("n_checked"),
-                        )
-                        for n, v, k in rows
-                    ]
-                )
-            )
-        )
-
+    fields = ["check_name", "n_violations", "n_checked"]
     j = li.select("l_orderkey", "l_shipdate").join(
         o.select(F.col("o_orderkey").alias("ok"), "o_orderdate"),
         F.col("l_orderkey") == F.col("ok"),
@@ -1803,12 +1701,10 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
         ),
         F.count(F.when(F.col("ok").isNotNull(), 1)).alias("nmatch"),
     )
-    p_join = split_rows(
+    p_join = report(
         ja,
-        [
-            ("fk_lineitem_orders", F.col("fkv"), F.col("nall")),
-            ("ship_after_order", F.col("shipv"), F.col("nmatch")),
-        ],
+        fields,
+        [("'fk_lineitem_orders'", "fkv", "nall"), ("'ship_after_order'", "shipv", "nmatch")],
     )
 
     og = o.groupBy("o_orderkey").agg(
@@ -1817,9 +1713,9 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
     )
     # COALESCE(...,0): over an EMPTY slice the rollup's sums are NULL
     # (zero groups) while the oracle's COUNT forms are 0 — the audit
-    # must report zero, not NULL (r11 empty-slice contract)
-    # count(when(isNotNull)) — NOT count(*) — over the groups (ADVICE
-    # r13 medium): COUNT(DISTINCT o_orderkey) excludes NULL, so the
+    # must report zero, not NULL.
+    # count(when(isNotNull)) — NOT count(*) — over the groups:
+    # COUNT(DISTINCT o_orderkey) excludes NULL, so the
     # NULL-key group must not count as a distinct key; with n NULL-key
     # rows the former count(*) form reported n-1 violations vs the
     # oracle's n (the lineitem twin below already had the gate)
@@ -1831,12 +1727,10 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
         F.coalesce(F.sum("pv"), F.lit(0)).alias("pricev"),
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
     )
-    p_orders = split_rows(
+    p_orders = report(
         oa,
-        [
-            ("pk_orders_unique", F.col("pkv"), F.col("n")),
-            ("orders_price_positive", F.col("pricev"), F.col("n")),
-        ],
+        fields,
+        [("'pk_orders_unique'", "pkv", "n"), ("'orders_price_positive'", "pricev", "n")],
     )
 
     lg = li.groupBy("l_orderkey", "l_linenumber").agg(
@@ -1853,12 +1747,10 @@ def audit_data_quality(spark: SparkSession, d: str) -> DataFrame:
         F.coalesce(F.sum("dv"), F.lit(0)).alias("discv"),
         F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
     )
-    p_lineitem = split_rows(
+    p_lineitem = report(
         la,
-        [
-            ("pk_lineitem_unique", F.col("pkv"), F.col("n")),
-            ("lineitem_discount_range", F.col("discv"), F.col("n")),
-        ],
+        fields,
+        [("'pk_lineitem_unique'", "pkv", "n"), ("'lineitem_discount_range'", "discv", "n")],
     )
 
     fk_o = o.join(

@@ -78,7 +78,7 @@ class FinwireCmpReader(DataSourceReader):
                     # rstrip() also eats a data-final U+0085/U+000B/…
                     # (Python str whitespace ⊃ space), diverging from
                     # F.rtrim / DuckDB rtrim which strip spaces only
-                    # (r9 adversarial pool, 'ends nel'+NEL names)
+                    # (a company name ending in NEL, for example)
                     line[18:78].rstrip(" "),
                     line[78:88],
                 )

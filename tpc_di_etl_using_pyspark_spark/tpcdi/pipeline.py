@@ -9,6 +9,8 @@ the ones that must survive 100 TB fact tables.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -292,39 +294,85 @@ def cdc_apply(current: DataFrame, cdc: DataFrame, key_cols: list[str]) -> DataFr
 
 
 # --------------------------------------------------------------------------
-# DImessages audit [SPEC: batch validation queries]
+# Audit phase [SPEC: batch validation queries, SCD2 non-overlap validation]
 # --------------------------------------------------------------------------
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: a name passed in by a
+    caller reaches SQL text only quoted, whatever quotes or
+    backslashes it holds."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def report(stats: DataFrame, fields: list[str], rows: list[tuple[str, ...]]) -> DataFrame:
+    """Audit report rows from a 1-row ``stats`` relation.
+
+    Each entry of ``rows`` is one report row: a SQL expression over the
+    stats columns per name in ``fields``. All rows are inline()d from
+    one struct array in one projection, so the report adds no pass over
+    the data — only the aggregates under ``stats`` read it. SQL text
+    rather than ``F.*`` calls: a few py4j round trips for the whole
+    report instead of about a dozen per row, with the same plan
+    (tests/test_build_layer.py)."""
+    structs = ", ".join(
+        "struct(" + ", ".join(f"{e} AS `{f}`" for f, e in zip(fields, row)) + ")"
+        for row in rows
+    )
+    return stats.selectExpr(f"inline(array({structs}))")
+
+
 def batch_validation(tables: dict[str, DataFrame], batch_id: int) -> DataFrame:
-    """Row-count + checksum message rows per warehouse table."""
-    msgs = None
-    for name, df in tables.items():
-        m = df.agg(
-            F.lit(batch_id).alias("batch_id"),
-            F.lit(name).alias("message_source"),
-            F.lit("Row count").alias("message_type"),
-            F.count(F.lit(1)).cast("string").alias("message_text"),
+    """Row-count message rows, one per warehouse table: each table's
+    count is reported from its own 1-row aggregate and the rows are
+    unioned. Not crossJoined into one stats row: the cross joins of
+    1-row relations plan as broadcast stages that run after the counts,
+    which measured 0.12 → 0.15 s (warm, sf0.1) on three tables."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            report(
+                df.agg(F.count(F.lit(1)).alias("_n")),
+                ["batch_id", "message_source", "message_type", "message_text"],
+                [(str(int(batch_id)), sql_str(name), "'Row count'", "CAST(_n AS STRING)")],
+            )
+            for name, df in tables.items()
+        ],
+    )
+
+
+def scd2_audit(dim: DataFrame, natural_key: str) -> DataFrame:
+    """SCD2 audit [SPEC: SCD2 non-overlap validation]: one row with the
+    dimension's ``n_rows``, ``n_current`` and ``n_violations``; a valid
+    dimension has ``n_violations == 0``.
+
+    A violation is a chain break — a version whose end_date is not its
+    successor's effective_date, or a last version that is not current —
+    or a key with more than one current row: n_violations = COUNT(break
+    rows) + COUNT(DISTINCT keys with >1 current row). Both checks are
+    windows partitioned by the natural key, so they share one exchange
+    (Spark plans the second window over the same partitioning without
+    another shuffle), and one global aggregate counts rows, current
+    rows and violations on top of them."""
+    wver = Window.partitionBy(natural_key).orderBy("version")
+    wkey = Window.partitionBy(natural_key)
+    return (
+        dim.withColumn("_nxt", F.lead("effective_date").over(wver))
+        .withColumn("_ncur", F.count(F.when(F.col("is_current"), 1)).over(wkey))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(F.when(F.col("is_current"), 1)).alias("n_current"),
+            (
+                F.count(
+                    F.when(
+                        (F.col("_nxt").isNotNull() & (F.col("end_date") != F.col("_nxt")))
+                        | (F.col("_nxt").isNull() & ~F.col("is_current")),
+                        1,
+                    )
+                )
+                + F.count_distinct(
+                    F.when(F.col("is_current") & (F.col("_ncur") > 1), F.col(natural_key))
+                )
+            ).alias("n_violations"),
         )
-        msgs = m if msgs is None else msgs.unionByName(m)
-    return msgs
-
-
-def scd2_validate(dim: DataFrame, natural_key: str) -> DataFrame:
-    """Audit check: SCD2 intervals per key must be non-overlapping and
-    gap-free, with exactly one current row [SPEC: SCD2 non-overlap
-    validation]. Returns offending rows (empty = valid)."""
-    w = Window.partitionBy(natural_key).orderBy("version")
-    nxt_eff = F.lead("effective_date").over(w)
-    bad_chain = dim.withColumn("_nxt", nxt_eff).filter(
-        (F.col("_nxt").isNotNull() & (F.col("end_date") != F.col("_nxt")))
-        | (F.col("_nxt").isNull() & ~F.col("is_current"))
     )
-    multi_current = (
-        dim.filter("is_current")
-        .groupBy(natural_key)
-        .agg(F.count(F.lit(1)).alias("n_cur"))
-        .filter(F.col("n_cur") > 1)
-        .select(F.col(natural_key), F.lit(None).cast("string").alias("sk"))
-    )
-    return bad_chain.select(natural_key, "sk").unionByName(multi_current)
